@@ -435,10 +435,15 @@ def line_assign_features_arrays(
     n, m = len(a_desc), len(b_desc)
     if n <= 8 and m <= 8 and n and m:
         # the overwhelmingly common shape; ~15 small-array numpy calls per
-        # pair cost more than the math itself — plain Python floats win
-        # (includes the amount coercion/sums: for ≤8 elements numpy's
-        # add.reduce is the same sequential left-to-right order as
-        # Python's sum, so the scalar path is bit-identical)
+        # pair cost more than the math itself — plain Python floats win.
+        # The amount sums are Python's left-to-right sum. numpy's
+        # add.reduce matches that order only below 8 elements: from 8 on
+        # it adds in 8 interleaved partial sums, so at n=8 the two totals
+        # can differ ([1e16, 1, -1e16, 1, 1, 1, 1, 1]: numpy 4.0, sum
+        # 5.0). The features still agree whenever every a-line is matched
+        # (n ≤ m): both paths then subtract the same sum from itself, so
+        # the unmatched amount is exactly 0. Only at n=8 > m can
+        # unmatched_amount_frac differ from a numpy-summed total.
         return _line_assign_small(a_desc, a_qty, a_up, a_amt, b_desc, b_qty, b_up,
                                   alpha, beta, gamma)
     a_amt0 = _nan_to_zero(a_amt, n)

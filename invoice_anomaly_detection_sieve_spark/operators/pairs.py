@@ -165,23 +165,14 @@ def _blob_of(descs) -> str:
     return " ".join((d if d is not None else "") for d in descs)
 
 
-# pandas_udf parses its DDL return type against the active session, so the
-# udf object is created lazily on first use — and keyed by the live
-# SparkContext: a cached udf binds to the context active at creation, so a
-# stop()/rebuild in the same process would otherwise reuse a udf whose
-# JVM references are dead.
-_UDF_CACHE: dict[tuple, object] = {}
-
-
 def pair_kernel(*cols):
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    key = ("pk", id(sess.sparkContext) if sess is not None else None)
-    if key not in _UDF_CACHE:
-        _UDF_CACHE.clear()  # drop udfs bound to stopped contexts
-        _UDF_CACHE[key] = pandas_udf(_pair_kernel_fn, PAIR_KERNEL_TYPE)
-    return _UDF_CACHE[key](*cols)
+    # pandas_udf parses its DDL return type against the active session, so
+    # the udf is created lazily on first use and cached per live context:
+    # a udf binds to the context active at creation
+    kernel = cached_exprs(
+        ("pairs.kernel_udf",), lambda: pandas_udf(_pair_kernel_fn, PAIR_KERNEL_TYPE)
+    )
+    return kernel(*cols)
 
 
 def _kernel_stream_fn(iterator):

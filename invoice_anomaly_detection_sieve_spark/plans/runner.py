@@ -9,9 +9,12 @@ wall time) and **resume skips partitions already completed for the
 run_id**.
 
 Delivery semantics — stated precisely: sink appends are **at-least-once**.
-The ledger append commits LAST, so a crash between a sink append and the
-ledger append leaves those partitions unledgered; the resume re-validates
-and re-appends them. Re-runs after a fully committed run are exact no-ops
+The sinks (verdicts, violations, partition verdicts, the profile merge and
+case routing) commit at the same time, on one thread each, once the
+verdicts are materialized; the ledger append still commits LAST, after
+every sink has committed. A crash or a failed sink before the ledger
+append leaves those partitions unledgered; the resume re-validates and
+re-appends them. Re-runs after a fully committed run are exact no-ops
 (every partition ledgered ⇒ nothing pending). Readers that need
 exactly-once rows use ``read_run_verdicts`` / ``read_run_violations``,
 which collapse retry duplicates on their natural keys — the same
@@ -26,9 +29,11 @@ from __future__ import annotations
 import argparse
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..documents import part_of
 from ..sources.catalog import ParquetCatalog
@@ -145,6 +150,44 @@ def run_incremental(
     return metrics
 
 
+def _commit_sinks(
+    catalog: ParquetCatalog,
+    run_id: str,
+    verdicts: DataFrame,
+    violations: DataFrame,
+    part_verdicts: DataFrame,
+    profiles: DataFrame,
+    cases_ts: str | None,
+) -> None:
+    """Write every per-run sink except the ledger, all at the same time:
+    they read the materialized verdicts and write separate tables, so the
+    stage costs about as much as its slowest sink. Returns once every sink
+    has finished, then raises the first failure, so the caller appends
+    the ledger only after all of them committed. ``cases_ts`` is the case
+    timestamp; None routes no cases."""
+    from . import cases as C
+
+    tag = F.lit(run_id)
+    sinks = []
+    if cases_ts is not None:  # the longest sink goes first
+        sinks.append(lambda: C.route_cases(catalog, verdicts, cases_ts))
+    sinks += [
+        lambda: catalog.append("doc_verdicts", verdicts.withColumn("run_id", tag)),
+        lambda: catalog.append("violations", violations.withColumn("run_id", tag)),
+        lambda: catalog.append("part_verdicts", part_verdicts.withColumn("run_id", tag)),
+        lambda: catalog.merge_upsert(
+            "profiles", profiles.withColumn("run_id", tag), ["part", "field"]
+        ),
+    ]
+    # copies this thread's job group, other local properties and session
+    # tags to the thread that runs the sink
+    inherit = inheritable_thread_target(catalog.spark)
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(inherit(s)) for s in sinks]
+    for f in futures:  # the with-block waited for all of them
+        f.result()
+
+
 def run(
     spark: SparkSession,
     documents: DataFrame,
@@ -182,58 +225,58 @@ def run(
 
     t0 = time.time()
     out = V.run_validation(pending, media_registry, baseline_profiles, cfg)
+    # cached before the verdicts so their plan reads it: the Benford stats
+    # of part_verdicts and the profiles merge then reuse the aggregation
+    # the verdict count already ran
+    profiles = out["profiles"].cache()
     verdicts = out["doc_verdicts"].cache()
-    n_docs = verdicts.count()  # materialize once; everything below reuses it
-    if n_docs:
-        catalog.append("doc_verdicts", verdicts.withColumn("run_id", F.lit(run_id)))
-        catalog.append("violations", out["violations"].withColumn("run_id", F.lit(run_id)))
-        part_v = out["part_verdicts"].cache()
-        catalog.append("part_verdicts", part_v.withColumn("run_id", F.lit(run_id)))
-        catalog.merge_upsert(
-            "profiles", out["profiles"].withColumn("run_id", F.lit(run_id)), ["part", "field"]
-        )
-        if enable_cases:
-            from . import cases as C
-
-            C.route_cases(catalog, verdicts, run_ts)
+    part_v = out["part_verdicts"].cache()
+    try:
+        n_docs = verdicts.count()  # materialize once; everything below reuses it
+        if n_docs:
+            _commit_sinks(
+                catalog, run_id, verdicts, out["violations"], part_v, profiles,
+                run_ts if enable_cases else None,
+            )
+            elapsed = time.time() - t0
+            ledger = part_v.select(
+                F.lit(run_id).alias("run_id"),
+                "part",
+                F.col("n_docs").cast("long").alias("rows_scanned"),
+                F.array([F.lit(c) for c in cfg.constraints]).alias("constraints_evaluated"),
+                F.col("n_violations").cast("long").alias("violations"),
+                # the RUN's elapsed wall time stamped on every partition row
+                # (not a per-partition figure — Spark doesn't expose per-task
+                # wall time to the plan; the column name says what it is)
+                F.lit(float(elapsed)).alias("run_wall_time_sec"),
+                F.lit(COMPLETE).alias("status"),
+                # documents-table snapshot this run consumed (incremental
+                # mode); NULL for plain DataFrame runs
+                F.lit(consumed_snapshot_id).cast("long").alias("consumed_snapshot_id"),
+            )
+            catalog.append(LEDGER_TABLE, ledger)
+        elif consumed_snapshot_id is not None:
+            # an increment can be empty (snapshot advanced, zero rows — e.g.
+            # an empty append): still ledger the consumed snapshot id, or
+            # every later incremental run re-reads the same empty increment
+            # forever because the bookmark never advances
+            ledger = spark.createDataFrame(
+                [(run_id, None, 0, list(cfg.constraints), 0,
+                  float(time.time() - t0), COMPLETE, consumed_snapshot_id)],
+                "run_id string, part string, rows_scanned long, "
+                "constraints_evaluated array<string>, violations long, "
+                "run_wall_time_sec double, status string, "
+                "consumed_snapshot_id long",
+            )
+            catalog.append(LEDGER_TABLE, ledger)
         elapsed = time.time() - t0
-        ledger = part_v.select(
-            F.lit(run_id).alias("run_id"),
-            "part",
-            F.col("n_docs").cast("long").alias("rows_scanned"),
-            F.array([F.lit(c) for c in cfg.constraints]).alias("constraints_evaluated"),
-            F.col("n_violations").cast("long").alias("violations"),
-            # the RUN's elapsed wall time stamped on every partition row
-            # (not a per-partition figure — Spark doesn't expose per-task
-            # wall time to the plan; the column name says what it is)
-            F.lit(float(elapsed)).alias("run_wall_time_sec"),
-            F.lit(COMPLETE).alias("status"),
-            # documents-table snapshot this run consumed (incremental
-            # mode); NULL for plain DataFrame runs
-            F.lit(consumed_snapshot_id).cast("long").alias("consumed_snapshot_id"),
-        )
-        catalog.append(LEDGER_TABLE, ledger)
-        part_v.unpersist()
-    elif consumed_snapshot_id is not None:
-        # an increment can be empty (snapshot advanced, zero rows — e.g.
-        # an empty append): still ledger the consumed snapshot id, or
-        # every later incremental run re-reads the same empty increment
-        # forever because the bookmark never advances
-        ledger = spark.createDataFrame(
-            [(run_id, None, 0, list(cfg.constraints), 0,
-              float(time.time() - t0), COMPLETE, consumed_snapshot_id)],
-            "run_id string, part string, rows_scanned long, "
-            "constraints_evaluated array<string>, violations long, "
-            "run_wall_time_sec double, status string, "
-            "consumed_snapshot_id long",
-        )
-        catalog.append(LEDGER_TABLE, ledger)
-    elapsed = time.time() - t0
-    verdicts.unpersist()
-    # Drop the run's cached extraction: a later resume run over the same
-    # table paths would otherwise plan-match this cache entry and silently
-    # reuse the PREVIOUS run's pending-partition subset.
-    out["extracted_docs"].unpersist()
+    finally:
+        # Drop the run's caches, the extraction included, on failure too: a
+        # later resume run over the same table paths would otherwise
+        # plan-match these entries and silently reuse the PREVIOUS run's
+        # pending-partition subset.
+        for df in (part_v, verdicts, profiles, out["extracted_docs"]):
+            df.unpersist()
     return {
         "run_id": run_id,
         "docs_validated": n_docs,

@@ -215,17 +215,18 @@ class ParquetCatalog:
         buckets: int,
         migrate: bool = False,
     ) -> int:
-        import shutil
-
-        from pyspark.sql import functions as F
-
+        """Bucketed MERGE (see ``merge_upsert``). Each touched bucket is
+        written as one file (``_write_buckets``)."""
         src = source.withColumn("_bucket", self._bucket_col(keys, buckets))
-        touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
         data = self._data_dir(name)
         if not self.exists(name):
+            # a merge of an empty source leaves data/ holding no parquet
+            # file (only _SUCCESS), which exists() reports as absent; clear
+            # it so the rename below does not hit a non-empty directory
+            shutil.rmtree(data, ignore_errors=True)
             gen = uuid.uuid4().hex[:12]
             staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-            src.write.partitionBy("_bucket").mode("overwrite").parquet(staged)
+            self._write_buckets(src, staged)
             os.rename(staged, data)
             files = self._bucket_files(data)
             return self._record_snapshot(name, files, "merge-bucketed")
@@ -242,7 +243,7 @@ class ParquetCatalog:
             merged = kept.unionByName(src, allowMissingColumns=True)
             gen = uuid.uuid4().hex[:12]
             staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-            merged.write.partitionBy("_bucket").mode("overwrite").parquet(staged)
+            self._write_buckets(merged, staged)
             backup = os.path.join(self._table_dir(name), f"old-{gen}")
             os.rename(data, backup)
             os.rename(staged, data)
@@ -251,6 +252,7 @@ class ParquetCatalog:
                 name, self._bucket_files(data), "merge-bucketed-migrate"
             )
         # rewrite ONLY the touched buckets: anti-join within the bucket subset
+        touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
         old_paths = [
             os.path.join(data, f"_bucket={b}")
             for b in touched
@@ -266,7 +268,7 @@ class ParquetCatalog:
             merged = src
         gen = uuid.uuid4().hex[:12]
         staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-        merged.write.partitionBy("_bucket").mode("overwrite").parquet(staged)
+        self._write_buckets(merged, staged)
         for b in touched:
             new_b = os.path.join(staged, f"_bucket={b}")
             old_b = os.path.join(data, f"_bucket={b}")
@@ -276,6 +278,16 @@ class ParquetCatalog:
                 os.rename(new_b, old_b)
         shutil.rmtree(staged, ignore_errors=True)
         return self._record_snapshot(name, self._bucket_files(data), "merge-bucketed")
+
+    def _write_buckets(self, df: DataFrame, path: str) -> None:
+        """Write ``df`` partitioned by ``_bucket``, one file per bucket.
+        Hash-repartitioning on the bucket puts each bucket in one task, and
+        every core writes; the explicit partition count matters, because
+        AQE coalesces a repartition without one into a single task."""
+        n = self.spark.sparkContext.defaultParallelism
+        df.repartition(n, "_bucket").write.partitionBy("_bucket").mode(
+            "overwrite"
+        ).parquet(path)
 
     def _bucket_files(self, data: str) -> list[str]:
         out = []

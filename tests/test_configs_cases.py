@@ -81,6 +81,19 @@ def test_route_cases_idempotent_and_preserves_created_at(spark, tmp_path):
     assert catalog.read(C.CASES_TABLE).count() == 3
 
 
+def test_route_cases_after_a_run_that_routed_none(spark, tmp_path):
+    """A run that opens no case leaves cases/data/ with only _SUCCESS;
+    the next run's bucketed create must replace it, not fail on renaming
+    onto a non-empty directory."""
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    assert C.route_cases(catalog, _verdicts(spark, [("P1", "d1", "PASS", 1.0)]),
+                         "2025-01-01 00:00:00") == 0
+    assert not catalog.exists(C.CASES_TABLE)
+    assert C.route_cases(catalog, _verdicts(spark, [("P1", "d2", "HOLD", 90.0)]),
+                         "2025-01-02 00:00:00") == 1
+    assert [r["doc_id"] for r in catalog.read_bucketed(C.CASES_TABLE).collect()] == ["d2"]
+
+
 def test_review_queue_order(spark):
     v = _verdicts(spark, [
         ("P1", "a", "REVIEW", 55.0),
@@ -275,6 +288,8 @@ def test_route_cases_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
     assert untouched, "test corpus must leave some buckets untouched"
     for b in untouched:
         assert before[b] == after[b], f"untouched bucket {b} was rewritten"
+    # each bucket is written as one file, by the create and by the rewrite
+    assert all(len(files) == 1 for files in after.values())
 
     rows = {r["doc_id"]: r.asDict()
             for r in catalog.read_bucketed(C.CASES_TABLE).collect()}

@@ -191,13 +191,16 @@ def test_line_assign_tie_equivalence_small_vs_numpy():
 
 
 def test_small_path_amount_sums_bit_exact():
-    """The ≤8×8 path now coerces/sums amounts as plain floats instead of
-    numpy arrays; that is only legal because Python's left-to-right sum
-    matches numpy add.reduce's sequential order below the pairwise-
-    summation threshold. Pin it with an order-sensitive amount vector
-    (1e16 + 1.0 rounds away before -1e16 cancels) and NaN/None amounts,
-    comparing the small path against the numpy path on the same rows
-    (padded with strictly-worse columns to force the numpy branch)."""
+    """The ≤8×8 path coerces/sums amounts as plain floats instead of
+    numpy arrays. Python's left-to-right sum matches numpy add.reduce
+    only below 8 elements (from 8 on numpy keeps 8 interleaved partial
+    sums), so the totals themselves can differ at n=8; the features
+    still agree whenever every a-line is matched (n ≤ m), because the
+    unmatched amount is then a sum minus itself. Pin both with
+    order-sensitive amount vectors (1e16 + 1.0 rounds away before -1e16
+    cancels) at n=3 and n=8 and NaN/None amounts, comparing the small
+    path against the numpy path on the same rows (padded with
+    strictly-worse columns to force the numpy branch)."""
     a_desc = ["widget", "gear", "bolt"]
     a_qty = [1.0, 2.0, 3.0]
     a_up = [10.0, 20.0, 30.0]
@@ -221,6 +224,19 @@ def test_small_path_amount_sums_bit_exact():
         b_desc + ["zzz"] * pad, b_qty + [50.0] * pad, b_up + [999.0] * pad,
     )
     assert small_nan == big_nan
+
+    # n=8: the totals differ (numpy 4.0, Python 5.0), the features do not
+    amts8 = [1e16, 1.0, -1e16, 1.0, 1.0, 1.0, 1.0, 1.0]
+    assert float(np.add.reduce(np.array(amts8))) != sum(amts8)
+    desc8 = [f"item{i}" for i in range(8)]
+    qty8 = [float(i + 1) for i in range(8)]
+    up8 = [10.0 * (i + 1) for i in range(8)]
+    small8 = K.line_assign_features_arrays(desc8, qty8, up8, amts8, desc8, qty8, up8)
+    big8 = K.line_assign_features_arrays(
+        desc8, qty8, up8, amts8,
+        desc8 + ["zzz"] * pad, qty8 + [50.0] * pad, up8 + [999.0] * pad,
+    )
+    assert small8 == big8
 
 
 def test_bench_kernel_probe_worker_smoke():

@@ -1,4 +1,5 @@
-"""F5 payload hash, F6 text_blob, and physical-plan quality checks."""
+"""F5 payload hash, F6 text_blob, the expression cache, and physical-plan
+quality checks."""
 
 from __future__ import annotations
 
@@ -31,6 +32,53 @@ def test_text_blob(spark):
     )
     out = df.select(N.text_blob(F.col("parts")).alias("b")).first()["b"]
     assert out == "acme corp net30 sku-1 blue widget"
+
+
+def test_exprcache_shared_across_threads(spark):
+    """The runner's sinks build expressions on worker threads, where the
+    per-thread active session is None: they must get the entry the main
+    thread built, and a key requested by many threads at once is built
+    once."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from invoice_anomaly_detection_sieve_spark.functions.exprcache import cached_exprs
+
+    main = cached_exprs(("test.threads",), lambda: F.col("x") + 1)
+    with ThreadPoolExecutor(1) as pool:
+        other = pool.submit(cached_exprs, ("test.threads",), lambda: F.col("x") + 1)
+        assert other.result(timeout=60) is main
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.001)
+        return object()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futures = [pool.submit(cached_exprs, ("test.race",), build) for _ in range(64)]
+            got = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)
+
+
+def test_exprcache_rebuilds_for_another_context(spark, monkeypatch):
+    """An entry built on one SparkContext is never served on another."""
+    from pyspark import SparkContext
+
+    from invoice_anomaly_detection_sieve_spark.functions.exprcache import cached_exprs
+
+    first = cached_exprs(("test.ctx",), object)
+    assert cached_exprs(("test.ctx",), object) is first
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert cached_exprs(("test.ctx",), object) is not first
 
 
 @pytest.fixture(scope="module")

@@ -118,6 +118,20 @@ def test_every_violation_doc_has_nonpass_or_reason(corpus):
         assert set(codes) == set(corpus["verdicts"][doc]["reason_codes"])
 
 
+def test_counted_verdicts_plan_keeps_pair_kernel(spark):
+    """count()-shaped timings must still run the pair kernel: Catalyst
+    prunes what a count does not read, so a change to the rollup key could
+    drop the kernel from the counted plan without any test failing. The
+    plan is only explained, not run."""
+    documents, media_registry, _ = synthesize_documents(spark, seed=42)
+    out = V.run_validation(documents, media_registry, persist_extraction=False)
+    counted = out["doc_verdicts"].groupBy().count()
+    plan = counted._sc._jvm.PythonSQLUtils.explainString(
+        counted._jdf.queryExecution(), "formatted"
+    )
+    assert "ArrowEvalPython" in plan
+
+
 def test_payload_modes_are_bit_identical(spark, corpus):
     """score_pairs "dict" mode (once-per-doc payload dictionary through the
     Arrow crossing) must produce BYTE-identical scored pairs to the default
