@@ -88,12 +88,10 @@ def components():
 def queries():
     """Per-query noop timings, best-of-2: bench.py's list + the LLM heavies
     VERDICT asked to track (sim_ivf_topk, dedup_clusters, dedup_simhash,
-    mm_image_decode_verified) + validate_full in dict payload mode."""
+    mm_image_decode_verified)."""
     from invoice_anomaly_detection_sieve_spark.plans.queries import QUERIES
-    from invoice_anomaly_detection_sieve_spark.plans import validate as V
 
     spark = bench.fresh_session(CPUS)
-    docs_path, reg_path, _ = bench.materialize_inputs(spark, SF_DIR)
     out: dict = {}
     names = [
         "j1_blocking_pairs", "a1_profile_baselines", "w1_topk_per_group",
@@ -107,23 +105,6 @@ def queries():
         spark.sparkContext.setJobDescription(None)
         print(f"[queries] {name}: {out[name]}s", file=sys.stderr, flush=True)
 
-    # validate_full in dict payload mode (tracked number for the
-    # network-shuffle-regime strategy)
-    documents = spark.read.parquet(docs_path)
-    registry = spark.read.parquet(reg_path)
-
-    def dict_mode():
-        o = V.run_validation(
-            documents, registry,
-            config=V.ValidationConfig(
-                dq_as_of="2025-01-01", enable_dq=False, pair_payload_mode="dict"
-            ),
-        )
-        o["doc_verdicts"].count()
-        o["extracted_docs"].unpersist()
-    out["validate_full_dict"] = timed(dict_mode)
-    print(f"[queries] validate_full_dict: {out['validate_full_dict']}s",
-          file=sys.stderr, flush=True)
     print(json.dumps(out))
     spark.stop()
 

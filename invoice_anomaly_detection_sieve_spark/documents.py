@@ -23,6 +23,17 @@ from .functions.exprcache import cached_exprs
 
 LINE_JSON_SCHEMA = "desc string, qty double, unit_price double, amount double, sku string"
 
+# per-line columns emitted as FLAT parallel arrays (column -> ``lines``
+# field), the docs shape the pair kernel reads: an array<struct> cell
+# crosses Arrow as a Python dict per line (measured ~2.4 ms/pair of pure
+# conversion at sf0.1); flat double arrays arrive as numpy views.
+LINE_ARRAYS = {
+    "line_descs": "desc_norm",
+    "line_qtys": "qty",
+    "line_ups": "unit_price",
+    "line_amts": "amount",
+}
+
 
 def part_of(doc_id: Column) -> Column:
     """Derived partition key: doc_id prefix before the first '-'."""
@@ -45,15 +56,6 @@ def sorted_spans(spans: Column) -> Column:
     return F.transform(F.sort_array(keyed), lambda x: x["s"])
 
 
-def spans_of_kind(spans: Column, kind: str) -> Column:
-    """Offset-ordered spans of one kind — the SAME total order as
-    ``sorted_spans`` (offset, then remaining struct fields on ties), so
-    every extraction path agrees on tie-offset documents. The previous
-    comparator sort kept input order on ties, which could disagree with
-    ``extract_docs`` about which span is 'first'."""
-    return _kind_of_sorted(sorted_spans(spans), kind)
-
-
 def _kind_of_sorted(ordered: Column, kind: str) -> Column:
     """Spans of one kind from an already offset-sorted array (filter
     preserves order — no re-sort)."""
@@ -61,6 +63,7 @@ def _kind_of_sorted(ordered: Column, kind: str) -> Column:
 
 
 def _first_text_sorted(ordered: Column, kind: str) -> Column:
+    # F.get is null-safe on empty arrays even under ANSI mode
     return F.get(_kind_of_sorted(ordered, kind), 0)["text"]
 
 
@@ -68,44 +71,14 @@ def _first_media_sorted(ordered: Column, kind: str) -> Column:
     return F.get(_kind_of_sorted(ordered, kind), 0)["media_ref"]
 
 
-def first_span_text(spans: Column, kind: str) -> Column:
-    """text of the first span of a kind (F.get is null-safe on empty
-    arrays even under ANSI mode)."""
-    return F.get(spans_of_kind(spans, kind), 0)["text"]
-
-
-def first_span_media(spans: Column, kind: str) -> Column:
-    return F.get(spans_of_kind(spans, kind), 0)["media_ref"]
-
-
-def numeric_span_text(spans: Column, kind: str) -> Column:
-    """First span text of a kind coerced to double (try_cast: junk ⇒ null,
-    never an ANSI error — the analog of the reference's tolerant
-    ``_to_float``, app/features.py:11-17)."""
-    return first_span_text(spans, kind).try_cast("double")
-
-
-def all_media_refs(spans: Column) -> Column:
-    """Every non-null media_ref in span order (for the referential check),
-    using the same total order as ``sorted_spans``."""
-    return F.filter(
-        F.transform(sorted_spans(spans), lambda s: s["media_ref"]),
-        lambda r: r.isNotNull(),
-    )
-
-
-def lines_col(spans: Column) -> Column:
-    """Ordered array of parsed line payloads + desc_norm.
+def _lines_from_sorted(ordered: Column) -> Column:
+    """Ordered array of parsed line payloads + desc_norm from the
+    offset-sorted line spans.
 
     Line spans carry JSON ``{"desc","qty","unit_price","amount","sku"}`` in
     ``text``; order is the offset order (≈ ORDER BY line_no,
     app/main.py:59). ``from_json`` is lenient: junk ⇒ null fields.
     """
-    ordered = spans_of_kind(spans, "line")
-    return _lines_from_sorted(ordered)
-
-
-def _lines_from_sorted(ordered: Column) -> Column:
     parsed = F.transform(ordered, lambda s: F.from_json(s["text"], LINE_JSON_SCHEMA))
     return F.transform(
         parsed,
@@ -122,14 +95,15 @@ def _lines_from_sorted(ordered: Column) -> Column:
 def extract_docs(documents: DataFrame) -> DataFrame:
     """Staged projections: documents → typed per-doc columns.
 
-    Output: part, doc_id, invnum_raw, invnum_norm, po, total, tax_total,
-    currency, date, payee, media_key, pdf_hash, media_refs, lines, n_lines,
-    line_amount_sum, desc_blob, spans, span_canon.
+    Output: part, doc_id, invnum_raw, po, total, tax_total, currency,
+    date, payee, media_key, pdf_hash, media_refs, lines, spans, span_canon,
+    invnum_norm, n_lines, line_amount_sum, line_descs, line_qtys,
+    line_ups, line_amts.
 
     Staging matters twice over:
     - stage0 sorts the span array ONCE (``sorted_spans``) and every derived
       column filters the ordered attribute — order-preserving, no re-sort;
-    - ``lines`` (the JSON parse) is consumed by four downstream
+    - ``lines`` (the JSON parse) is consumed by six downstream
       expressions; emitting it in one projection and referencing the
       *attribute* in the next keeps the parse single-run (CollapseProject
       refuses to duplicate a non-cheap expression referenced more than
@@ -178,9 +152,10 @@ def extract_docs(documents: DataFrame) -> DataFrame:
             F.aggregate(
                 lines, F.lit(0.0), lambda acc, l: acc + F.coalesce(l["amount"], F.lit(0.0))
             ).alias("line_amount_sum"),
-            F.array_join(
-                F.transform(lines, lambda l: F.coalesce(l["desc_norm"], F.lit(""))), " "
-            ).alias("desc_blob"),
+            *[
+                F.transform(lines, lambda l: l[field]).alias(name)
+                for name, field in LINE_ARRAYS.items()
+            ],
         ]
 
     stage0 = documents.select(*cached_exprs(("extract.stage0",), _stage0_cols))

@@ -93,21 +93,6 @@ def word_shingles(col: Column, k: int = DEFAULT_SHINGLE) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = DEFAULT_MINHASHES) -> Column:
-    """K minhash values as an expression (small inputs / tests).
-
-    At scale prefer ``minhash_signatures`` below: interpreted higher-order
-    functions cost ~µs per element, so K passes over the shingle array per
-    row lose badly to the explode + codegen'd-aggregate formulation.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",

@@ -39,21 +39,17 @@ BENFORD_CHI2_ALERT = 26.12  # χ² critical value, df=8, α=0.001 (the flag)
 def with_anomaly_scores(
     docs: DataFrame,
     profiles: DataFrame,
-    history_counts: DataFrame | None = None,
     history_includes_self: bool = True,
 ) -> DataFrame:
     """Attach amount_z, outlier flag, anom_prob per doc.
 
     ``docs`` must already carry ``bank_change`` (registry.bank_change_flags).
-    Profiles/history are one-row-per-partition ⇒ broadcast joins (J5).
+    Profiles are one row per partition ⇒ a broadcast join (J5).
 
-    ``history_counts=None`` reads the history size off the profile row's
-    ``cnt`` column instead — ONE broadcast join and one profile
-    computation total, where a separate history frame derived from the
-    same profiles (the common case — plans/validate.py always derived it
-    that way) re-ran the whole profile aggregation for a second broadcast.
-    Pass an explicit frame only when the history count genuinely comes
-    from somewhere else.
+    The history size is the profile row's ``cnt`` column — ONE broadcast
+    join and one profile computation total (a separate history frame
+    derived from the same profiles re-ran the whole profile aggregation
+    for a second broadcast).
 
     ``history_includes_self``: True when the history count was profiled
     from the corpus being validated (each doc is in its own history, so
@@ -64,25 +60,14 @@ def with_anomaly_scores(
     """
     from ..functions.exprcache import cached_exprs
 
-    def _prof_cols():
-        cols = [
-            F.col("part"),
-            F.col("mean").alias("_bl_mean"),
-            F.col("std").alias("_bl_std"),
-            F.col("sample_count").alias("_bl_n"),
-        ]
-        if history_counts is None:
-            cols.append(F.col("cnt").alias("part_doc_count"))
-        return cols
-
-    prof = profiles.select(*cached_exprs(("anom.prof", history_counts is None), _prof_cols))
-    if history_counts is None:
-        out = docs.join(broadcast(prof), "part", "left")
-    else:
-        hist = history_counts.select("part", "part_doc_count")
-        out = docs.join(broadcast(prof), "part", "left").join(
-            broadcast(hist), "part", "left"
-        )
+    prof = profiles.select(*cached_exprs(("anom.prof",), lambda: [
+        F.col("part"),
+        F.col("mean").alias("_bl_mean"),
+        F.col("std").alias("_bl_std"),
+        F.col("sample_count").alias("_bl_n"),
+        F.col("cnt").alias("part_doc_count"),
+    ]))
+    out = docs.join(broadcast(prof), "part", "left")
 
     def _score_cols():
         if history_includes_self:

@@ -15,20 +15,11 @@ Candidate pairs from the blocking join are scored with:
 - duplicate probability — broadcast logistic weights as a column sigmoid
   (app/duplicate_model.py:51-80).
 
-The kernel crossing has TWO physical strategies (``payload_mode``), both
-bit-identical in output (pinned by tests + the driver oracle):
-
-- ``per_pair`` (default): each pair row carries both docs' payloads through
-  the join and the Arrow crossing. One exchange fewer; on a single shared
-  socket (local[N]) its best-case latency wins — measured clean best at
-  sf0.1 / 32 cores: 9.7 s vs 15.7 s for dict mode (BENCH/BASELINE.md).
-- ``dict``: doc payloads cross Arrow once per (partition, doc) as
-  dictionary rows, pair rows cross as bare ids, and the scalar header
-  joins run JVM-side below the kernel. ~cap(=200)× less payload traffic
-  through the exchange and the Arrow boundary — the mode for the
-  network-shuffle regime (multi-node, 100 TB), and measurably more robust
-  under bandwidth contention (same A/B, contended windows: 62/28 s vs
-  83/39 s per-pair).
+Docs arrive in ``extract_docs``'s shape, whose per-line flat arrays are the
+kernel's input; each pair row carries both docs' payloads through the join
+into ONE Arrow crossing. (A once-per-doc payload dictionary crossing was
+measured slower on the only hardware this repo measures — 15.7 s vs 9.7 s
+clean best at sf0.1 / 32 cores, BENCH/BASELINE.md round 5 — and deleted.)
 
 Then the reference's top-k (app/main.py:305-307) and deterministic rules on
 the top-1 candidate only (app/main.py:314-321) as window + column exprs.
@@ -42,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..documents import LINE_ARRAYS
 from ..functions import kernels as K
 from ..functions import scoring as S
 from ..functions.exprcache import cached_exprs
@@ -58,24 +50,12 @@ PAIR_PAYLOAD_COLS = [
     "media_key",
     "pdf_hash",
 ]
-# desc_blob is NOT shipped: it is bit-reconstructable from line_descs
-# (documents.py builds it as array_join of ''-coalesced desc_norm), and the
-# pair join fans every doc payload out ~200x — shipping the same characters
-# twice (blob + per-line array) doubled the Arrow string traffic.
-
-# per-line columns shipped as FLAT parallel arrays, not array<struct>: a
-# struct cell crosses Arrow as a Python dict per line (measured ~2.4 ms/pair
-# of pure conversion at sf0.1); flat double arrays arrive as numpy views.
-PAIR_LINE_ARRAYS = {
-    "line_descs": lambda l: l["desc_norm"],
-    "line_qtys": lambda l: l["qty"],
-    "line_ups": lambda l: l["unit_price"],
-    "line_amts": lambda l: l["amount"],
-}
-
-# b-side per-line arrays actually consumed by the kernel (no amounts: the
-# unmatched fraction is over the A side's amounts, app/features.py:54-65)
-_B_LINE_ARRAYS = {k: v for k, v in PAIR_LINE_ARRAYS.items() if k != "line_amts"}
+# The desc blob is no docs column: the kernel rebuilds it from line_descs,
+# so the pair join (which fans every doc payload out ~200x) carries each
+# description once. The b side skips line_amts: the unmatched fraction is
+# over the A side's amounts (app/features.py:54-65), so column pruning
+# drops b_line_amts below the pair join's exchange.
+_B_LINE_ARRAYS = tuple(name for name in LINE_ARRAYS if name != "line_amts")
 
 PAIR_KERNEL_FEATURES = (
     "invnum_edit", "text_cosine", "line_coverage_pct",
@@ -94,10 +74,9 @@ def _pair_kernel_fn(
     - invnum_edit = 1 − JaroWinkler (app/features.py:39), memoized per
       worker (every doc recurs across its ≤200 candidates),
     - text_cosine = Dice over distinct char-3-grams of the ' '-joined
-      desc_norm blobs (app/main.py:290-296) — the blob is reconstructed
-      here from line_descs (bit-identical to documents.py's array_join of
-      ''-coalesced desc_norm) so the same characters don't cross Arrow
-      twice; gram sets memoized per text,
+      desc_norm blobs (app/main.py:290-296) — the blob is rebuilt here
+      from line_descs (' '-joined, nulls as '') so the same characters
+      don't cross Arrow twice; gram sets memoized per text,
     - Hungarian line-assignment features (app/features.py:47-101) over the
       flat per-line arrays.
 
@@ -136,7 +115,7 @@ def _pair_kernel_fn(
                     keys.add(kk)
     if keys:
         K.jw_warm_cache(keys)
-    blob = _blob_of  # documents.py desc_blob reconstruction
+    blob = _blob_of
     it = zip(
         a_inv.tolist(), b_inv.tolist(),
         a_descs, a_qtys, a_ups, a_amts, b_descs, b_qtys, b_ups,
@@ -157,9 +136,9 @@ def _pair_kernel_fn(
 
 
 def _blob_of(descs) -> str:
-    """Reconstruct documents.py's desc_blob from the line_descs array:
-    array_join of ''-coalesced desc_norm with ' ' (bit-identical, so the
-    blob never ships across Arrow)."""
+    """The ' '-joined desc blob of a line_descs array (null descs as '',
+    app/main.py:290-296), rebuilt worker-side so it never ships across
+    Arrow."""
     if descs is None or len(descs) == 0:
         return ""
     return " ".join((d if d is not None else "") for d in descs)
@@ -175,79 +154,17 @@ def pair_kernel(*cols):
     return kernel(*cols)
 
 
-def _kernel_stream_fn(iterator):
-    """mapInPandas body of the dict-mode pair kernel: a per-partition
-    PAYLOAD DICTIONARY followed by bare pair ids.
-
-    The partition's rows arrive dictionary-first (sortWithinPartitions on
-    _is_dict): dictionary rows carry each referenced doc's invnum + line
-    arrays exactly ONCE per (partition, doc); pair rows carry only ids.
-    State is a plain dict that lives for the partition; batches stream
-    through bounded by maxRecordsPerBatch. Dict memory is O(distinct docs
-    referenced by the partition) — scale partitions (defaultParallelism)
-    with the corpus, as any shuffle-sized deployment already does.
-    """
-    payloads: dict = {}
-    for pdf in iterator:
-        mask = pdf["_is_dict"].to_numpy()
-        if mask.any():
-            d = pdf.loc[mask]
-            for did, inv, de, q, u, am in zip(
-                d["_dict_id"].tolist(), d["_invnum"].tolist(),
-                d["_line_descs"].tolist(), d["_line_qtys"].tolist(),
-                d["_line_ups"].tolist(), d["_line_amts"].tolist(),
-            ):
-                payloads[did] = (inv, de, q, u, am)
-        p = pdf.loc[~mask]
-        if not len(p):
-            continue
-        a_pl = [payloads[i] for i in p["a_doc_id"].tolist()]
-        b_pl = [payloads[i] for i in p["b_doc_id"].tolist()]
-        feats = _pair_kernel_fn(
-            pd.Series([x[0] for x in a_pl]), pd.Series([x[0] for x in b_pl]),
-            pd.Series([x[1] for x in a_pl]), pd.Series([x[2] for x in a_pl]),
-            pd.Series([x[3] for x in a_pl]), pd.Series([x[4] for x in a_pl]),
-            pd.Series([x[1] for x in b_pl]), pd.Series([x[2] for x in b_pl]),
-            pd.Series([x[3] for x in b_pl]),
-        )
-        out = p[["part", "a_doc_id", "b_doc_id", "block_priority"]].reset_index(drop=True)
-        # the union with (all-null) dictionary rows can surface this int
-        # column as float64 in batches that carried nulls — pin the dtype
-        out["block_priority"] = out["block_priority"].astype("int32")
-        yield pd.concat([out, feats], axis=1)
-
-
-def _prefixed(docs: DataFrame, prefix: str, line_arrays=None) -> DataFrame:
+def _prefixed(docs: DataFrame, prefix: str) -> DataFrame:
     """Pair payload projection: scalar header columns plus the per-line
-    flat arrays (pass ``line_arrays={}`` for headers only). The transforms
-    run once per DOC row (the projection sits below the pair join's
-    exchange), not once per pair. A docs frame that already carries the
-    flat arrays (run_validation's slim persisted extraction) is consumed
-    as-is — re-deriving them from ``lines`` would re-run the array
-    transforms per branch and force the cache to hold the fat
-    array<struct> column."""
-    if line_arrays is None:
-        line_arrays = PAIR_LINE_ARRAYS
-    flat = bool(line_arrays) and all(name in docs.columns for name in line_arrays)
-
-    def _build():
-        sel = [F.col(c).alias(prefix + c) for c in PAIR_PAYLOAD_COLS]
-        if flat:
-            sel += [F.col(name).alias(prefix + name) for name in line_arrays]
-        else:
-            lines = F.col("lines")
-            sel += [
-                F.transform(lines, fn).alias(prefix + name)
-                for name, fn in line_arrays.items()
-            ]
-        return sel
-
-    key = ("pairs.prefixed", prefix, tuple(line_arrays), flat)
-    return docs.select(*cached_exprs(key, _build))
+    flat arrays, renamed with the side's prefix. A plain column selection:
+    the arrays were built once per doc by extract_docs."""
+    return docs.select(*cached_exprs(("pairs.prefixed", prefix), lambda: [
+        F.col(c).alias(prefix + c) for c in (*PAIR_PAYLOAD_COLS, *LINE_ARRAYS)
+    ]))
 
 
 def _features_per_pair(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """per_pair mode: payloads ride the pair join; ONE scalar-pandas-UDF
+    """Payloads ride the pair join; ONE scalar-pandas-UDF
     Arrow crossing evaluates the kernel over fully-materialized pair rows.
 
     Plan constraints (scale- and CPU-driven; BENCH/BASELINE.md):
@@ -276,7 +193,7 @@ def _features_per_pair(docs: DataFrame, pairs: DataFrame) -> DataFrame:
       pair-fanned payloads; now 1).
     """
     a = _prefixed(docs, "a_")
-    b = _prefixed(docs, "b_", _B_LINE_ARRAYS)
+    b = _prefixed(docs, "b_")
     n_part = pairs.sparkSession.sparkContext.defaultParallelism
     pairs = pairs.repartition(n_part, "b_doc_id")
     jb = pairs.join(
@@ -294,7 +211,7 @@ def _features_per_pair(docs: DataFrame, pairs: DataFrame) -> DataFrame:
             F.col("block_priority"),
             pair_kernel(
                 F.col("a_invnum_norm"), F.col("b_invnum_norm"),
-                *[F.col("a_" + name) for name in PAIR_LINE_ARRAYS],
+                *[F.col("a_" + name) for name in LINE_ARRAYS],
                 *[F.col("b_" + name) for name in _B_LINE_ARRAYS],
             ).alias("_pk"),
             *[F.col("a_" + c) for c in PAIR_PAYLOAD_COLS if c != "doc_id"],
@@ -304,67 +221,6 @@ def _features_per_pair(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     return j.select(
         *cached_exprs(("pairs.kernel_sel",), _kernel_cols)
     ).select("*", "_pk.*").drop("_pk")
-
-
-def _features_dict(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """dict mode: payloads cross Arrow once per (partition, doc) as
-    dictionary rows ahead of bare pair-id rows; scalar header joins run
-    JVM-side below the kernel. ~cap× less exchange + Arrow traffic — the
-    network-shuffle-regime strategy (see module docstring for the measured
-    local[32] tradeoff)."""
-    n_part = pairs.sparkSession.sparkContext.defaultParallelism
-    pid = F.pmod(F.xxhash64("a_doc_id"), F.lit(n_part)).cast("int")
-    pairs = pairs.withColumn("_pid", pid)
-    dict_ids = (
-        pairs.select("_pid", F.col("a_doc_id").alias("_dict_id"))
-        .unionAll(pairs.select("_pid", F.col("b_doc_id").alias("_dict_id")))
-        .distinct()
-    )
-    if all(name in docs.columns for name in PAIR_LINE_ARRAYS):
-        payload = docs.select(
-            F.col("doc_id").alias("_dict_id"),
-            F.col("invnum_norm").alias("_invnum"),
-            *[F.col(name).alias("_" + name) for name in PAIR_LINE_ARRAYS],
-        )
-    else:
-        payload = docs.select(
-            F.col("doc_id").alias("_dict_id"),
-            F.col("invnum_norm").alias("_invnum"),
-            *[
-                F.transform(F.col("lines"), fn).alias("_" + name)
-                for name, fn in PAIR_LINE_ARRAYS.items()
-            ],
-        )
-    # shuffle_hash: the dictionary is O(docs) per side — same
-    # no-O(N)-broadcast rule as every other doc-keyed join here
-    dict_rows = dict_ids.join(payload.hint("shuffle_hash"), "_dict_id").withColumn(
-        "_is_dict", F.lit(True)
-    )
-    pair_rows = pairs.select(
-        "_pid", "part", "a_doc_id", "b_doc_id", "block_priority"
-    ).withColumn("_is_dict", F.lit(False))
-    stream = (
-        dict_rows.unionByName(pair_rows, allowMissingColumns=True)
-        .repartition(n_part, "_pid")
-        .sortWithinPartitions(F.desc("_is_dict"))
-    )
-    kernel_out = stream.mapInPandas(
-        _kernel_stream_fn,
-        schema=(
-            "part string, a_doc_id string, b_doc_id string, "
-            "block_priority int, " + PAIR_KERNEL_TYPE
-        ),
-    )
-    # scalar header joins (JVM-side, below the kernel); shuffle_hash for
-    # the same O(N)-broadcast ban as above
-    a = _prefixed(docs, "a_", {})
-    b = _prefixed(docs, "b_", {})
-    return (
-        kernel_out.join(a.hint("shuffle_hash"), kernel_out["a_doc_id"] == a["a_doc_id"])
-        .drop(a["a_doc_id"])
-        .join(b.hint("shuffle_hash"), kernel_out["b_doc_id"] == b["b_doc_id"])
-        .drop(b["b_doc_id"])
-    )
 
 
 def score_pairs(
@@ -383,16 +239,13 @@ def score_pairs(
     None scores with the reference's fallback coefficients
     (app/duplicate_model.py:60-72 load-trained-else-fallback).
 
-    ``payload_mode`` picks the kernel-crossing strategy — "per_pair"
-    (default; fastest single-socket latency) or "dict" (once-per-doc
-    payload traffic for the network-shuffle regime). Identical output.
+    ``docs`` is ``extract_docs`` output (or a selection of it carrying
+    PAIR_PAYLOAD_COLS and the LINE_ARRAYS columns).
     """
-    if payload_mode == "per_pair":
-        j = _features_per_pair(docs, pairs)
-    elif payload_mode == "dict":
-        j = _features_dict(docs, pairs)
-    else:
+    # payload_mode is kept only because perfbench/layers.py still passes it
+    if payload_mode != "per_pair":
         raise ValueError(f"unknown payload_mode {payload_mode!r}")
+    j = _features_per_pair(docs, pairs)
 
     def _feat_cols():
         feats = S.header_features("a_", "b_")

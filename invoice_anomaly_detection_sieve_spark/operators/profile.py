@@ -155,8 +155,3 @@ def profile_moments_salted(
         "sample_count",
     )
 
-
-def group_history_counts(docs: DataFrame, group_col: str = "part") -> DataFrame:
-    """Per-partition document count (≈ vendor history size,
-    app/anomaly.py:32-41; the per-doc 'excluding self' count is cnt−1)."""
-    return docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("part_doc_count"))

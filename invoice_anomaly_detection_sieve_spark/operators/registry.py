@@ -26,7 +26,13 @@ def bank_change_flags(docs: DataFrame, media_registry: DataFrame) -> DataFrame:
     """Per-doc bank_change flag, exact reference semantics
     (app/anomaly.py:45-68): no media key ⇒ False; key missing from the
     registry ⇒ True; key present with first/last seen within a minute
-    ⇒ True (fresh key); else False."""
+    ⇒ True (fresh key); else False.
+
+    The fresh-key test is byte-faithful to app/anomaly.py:64,
+    ``(last_seen - first_seen) <= timedelta(minutes=1)``: a key observed
+    only once stays fresh until a later observation advances last_seen
+    (in the reference via its per-request upsert, here via
+    update_registry / the streaming sink). Intentional parity."""
     reg = media_registry.select(
         F.col("media_key").alias("_reg_key"), "first_seen", "last_seen"
     )
@@ -59,19 +65,6 @@ def dangling_refs(docs: DataFrame, media_registry: DataFrame) -> DataFrame:
     reg = media_registry.select(F.col("media_key"))
     return refs.join(
         broadcast(reg), refs["media_ref"] == reg["media_key"], "left_anti"
-    )
-
-
-def fresh_keys(media_registry: DataFrame) -> DataFrame:
-    """Registry keys first seen ≈ now they were last seen (≤1 min window) —
-    the 'brand-new account' heuristic, BYTE-FAITHFUL to the reference:
-    app/anomaly.py:64 computes exactly ``(last_seen - first_seen) <=
-    timedelta(minutes=1)``, so a key observed only once stays 'fresh'
-    until a later observation advances last_seen — in the reference via
-    its per-request upsert, here via update_registry / the streaming
-    sink. Intentional parity, not an oversight."""
-    return media_registry.where(
-        F.unix_timestamp("last_seen") - F.unix_timestamp("first_seen") <= FRESH_WINDOW_SEC
     )
 
 

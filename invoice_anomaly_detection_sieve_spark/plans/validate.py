@@ -15,13 +15,12 @@ and dedup per app/main.py:326-327).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..documents import extract_docs
+from ..documents import LINE_ARRAYS, extract_docs
 from ..functions import scoring as S
 from ..functions.exprcache import cached_exprs
 from ..operators import blocking, drift, pairs, profile, registry, rowchecks
@@ -42,11 +41,8 @@ class ValidationConfig:
     # artifact); None scores with the reference's fallback coefficients
     # (app/duplicate_model.py:60-72)
     dup_model: dict | None = None
-    # pair-kernel crossing strategy (operators/pairs.py score_pairs):
-    # "per_pair" = payloads ride the pair join (fastest single-socket
-    # latency); "dict" = once-per-(partition, doc) payload dictionary
-    # (~cap× less exchange/Arrow traffic — the network-shuffle regime).
-    # Bit-identical outputs, pinned by tests.
+    # kept only because perfbench/layers.py passes it to score_pairs, which
+    # accepts "per_pair" alone
     pair_payload_mode: str = "per_pair"
     # numeric fields to drift-check per partition. "total" is always
     # validated (it drives anom_prob / risk fusion, the reference's
@@ -56,12 +52,6 @@ class ValidationConfig:
     # the "drift" constraint. All extra fields pivot into ONE broadcast
     # row per partition — no per-field join fan-out.
     drift_fields: tuple[str, ...] = ("total",)
-    # staging dir for persist_extraction="staging". None = a fresh tempdir
-    # that the CALLER must clean up (run_validation cannot: the returned
-    # DataFrames lazily re-read it). Cluster callers should pass a
-    # per-run path under their own output root; the runner/CLI currently
-    # drives cache mode only.
-    staging_dir: str | None = None
     # derived in __post_init__: the audit ledger's constraints_evaluated
     # must list what actually RAN, not the full menu (a run with
     # enable_dq=False claiming row_dq misleads anyone auditing coverage)
@@ -75,21 +65,21 @@ class ValidationConfig:
         self.constraints = tuple(evaluated)
 
 
-def doc_verdicts(
-    documents: DataFrame,
-    media_registry: DataFrame,
-    baseline_profiles: DataFrame | None = None,
-    config: ValidationConfig | None = None,
-) -> DataFrame:
-    """Per-document verdict rows (schema ≈ DOC_VERDICTS + evidence cols).
-
-    ``baseline_profiles`` defaults to self-profiling the input (the
-    nightly-baseline analog, scripts/train_anomaly.py); pass a stored
-    profiles DataFrame to validate against history instead.
-    """
-    return doc_verdicts_from_docs(
-        extract_docs(documents), media_registry, baseline_profiles, config
+def _total_profile(docs: DataFrame, baseline_profiles: DataFrame | None) -> DataFrame:
+    """The per-partition 'total' profile the anomaly path and Benford read:
+    the stored baseline, or a self-profile of ``docs`` (the nightly-
+    baseline analog, scripts/train_anomaly.py). A stored baseline may
+    carry one row per (part, field) — e.g. from train_baselines(fields=
+    (...)) — so the 'total' rows are pinned, or the anomaly join and the
+    Benford stats fan out per extra field."""
+    profiles = (
+        baseline_profiles
+        if baseline_profiles is not None
+        else profile.profile(docs, "total")
     )
+    if "field" in profiles.columns:
+        profiles = profiles.where(F.col("field") == "total")
+    return profiles
 
 
 def _extra_field_baselines(
@@ -149,39 +139,30 @@ def doc_verdicts_from_docs(
     media_registry: DataFrame,
     baseline_profiles: DataFrame | None = None,
     config: ValidationConfig | None = None,
-    history_includes_self: bool | None = None,
+    profiles: DataFrame | None = None,
 ) -> DataFrame:
-    """Core verdict DAG over an already-extracted docs DataFrame.
+    """Core verdict DAG over an already-extracted docs DataFrame
+    (``extract_docs`` output, or run_validation's selection of it).
 
-    The extraction is consumed by five branches (profiles, history counts,
-    blocking keys, both sides of the pair-payload join, the anomaly path)
-    — callers validating a whole table should persist/materialize ``docs``
+    ``baseline_profiles`` defaults to self-profiling ``docs``; pass a
+    stored profiles DataFrame to validate against history instead.
+    ``profiles`` is the pinned 'total' profile when the caller already
+    built it (run_validation shares it with its outputs).
+
+    The extraction is consumed by several branches (profiles, blocking
+    keys, both sides of the pair-payload join, the anomaly path) —
+    callers validating a whole table should persist/materialize ``docs``
     first (run_validation does) so the span parse runs once, not per
     branch.
-
-    ``history_includes_self`` defaults to "self-profiling iff no stored
-    baseline was passed"; run_validation passes it explicitly because it
-    pre-computes the profiles and hands them in either way.
     """
     cfg = config or ValidationConfig()
-    if history_includes_self is None:
-        history_includes_self = baseline_profiles is None
-    profiles = (
-        baseline_profiles
-        if baseline_profiles is not None
-        else profile.profile(docs, "total")
-    )
-    # a stored baseline may carry one row per (part, field) — e.g. from
-    # train_baselines(fields=(...)); the anomaly path reads the 'total'
-    # profile, so pin it or the prof/hist joins fan out per extra field
-    if "field" in profiles.columns:
-        profiles = profiles.where(F.col("field") == "total")
+    history_includes_self = baseline_profiles is None
+    if profiles is None:
+        profiles = _total_profile(docs, baseline_profiles)
     # history size comes off the profile row (cnt) INSIDE the single
-    # anomaly broadcast join (with_anomaly_scores history_counts=None):
-    # same number under self-profiling, and under stored baselines it is
-    # the HISTORY's count — what the reference's vendor-history discount
-    # actually reads (app/anomaly.py:32-41). A separate hist frame here
-    # re-ran the whole profile aggregation for a second broadcast.
+    # anomaly broadcast join: same number under self-profiling, and under
+    # stored baselines it is the HISTORY's count — what the reference's
+    # vendor-history discount actually reads (app/anomaly.py:32-41).
 
     # duplicate sieve: blocking join -> pair features -> per-doc rollup
     pair_ids = blocking.candidate_pairs(docs, cap=cfg.candidate_cap, max_key_fanout=cfg.max_key_fanout)
@@ -207,16 +188,7 @@ def doc_verdicts_from_docs(
     # per-field z against the same amount_z semantics as 'total'
     extra_fields = tuple(f for f in cfg.drift_fields if f != "total")
     if extra_fields:
-        # a self-profiling run may still have been HANDED a precomputed
-        # total-only profile frame (run_validation does, to share the
-        # one-shot profile); history_includes_self distinguishes "stored
-        # baseline" (read extras from it, loudly) from "self-profile the
-        # extras here"
-        wide = _extra_field_baselines(
-            docs,
-            baseline_profiles if not history_includes_self else None,
-            extra_fields,
-        )
+        wide = _extra_field_baselines(docs, baseline_profiles, extra_fields)
         flagged = flagged.join(F.broadcast(wide), "part", "left")
         for f in extra_fields:
             zf = S.amount_z(
@@ -380,84 +352,44 @@ def partition_verdicts(
     return agg.withColumn("status", status)
 
 
+# the columns the verdict DAG consumes: run_validation materializes exactly
+# these (see there)
+_SLIM_COLS = (
+    "part", "doc_id", "invnum_norm", "po", "total", "tax_total", "currency",
+    "date", "payee", "media_key", "pdf_hash", "span_canon", "n_lines",
+    "line_amount_sum", *LINE_ARRAYS,
+)
+
+
 def run_validation(
     documents: DataFrame,
     media_registry: DataFrame,
     baseline_profiles: DataFrame | None = None,
     config: ValidationConfig | None = None,
-    persist_extraction: bool | str = True,
+    persist_extraction: bool = True,
 ) -> dict[str, DataFrame]:
     """Full validation run. Returns the output DataFrames (lazily built;
     the caller/runner triggers execution by writing or collecting):
-    ``doc_verdicts``, ``violations``, ``part_verdicts``, ``profiles``.
+    ``doc_verdicts``, ``violations``, ``part_verdicts``, ``profiles``,
+    ``extracted_docs``.
 
-    The extraction is consumed by five DAG branches, so it is materialized
-    once. ``persist_extraction`` picks the strategy:
-
-    - ``True`` / ``"cache"``: eager in-memory columnar cache. Lowest
-      latency when the extraction fits comfortably in executor memory AND
-      memory bandwidth is not the bottleneck.
-    - ``"staging"``: write the extraction to a snappy parquet staging dir
-      and re-read it per branch — the cluster-scale strategy (a staging
-      table). The columnar cache of this table is ~8x larger than its
-      parquet bytes (nested line arrays defeat the columnar codecs —
-      session.py), so on a bandwidth-saturated socket five cache reads
-      cost ~10 GB of DRAM traffic vs ~1 GB of page-cached parquet;
-      measured at the x8 scaling corpus this lifts 8->32-core scaling
-      (see BENCH/BASELINE.md round-5 notes).
-    - ``False``: no materialization (caller persists, or accepts
-      re-extraction per branch).
+    The extraction is consumed by several DAG branches, so by default
+    (``persist_extraction=True``) it is materialized once in the
+    in-memory columnar cache; ``False`` leaves it unmaterialized (the
+    caller persists, or accepts re-extraction per branch).
     """
     cfg = config or ValidationConfig()
     # SLIM MATERIALIZATION: persist exactly the columns the verdict DAG
-    # consumes, with the pair kernel's flat per-line arrays precomputed.
-    # Versus persisting the raw extraction this drops, per doc: the raw
-    # ``spans`` array (unused — span_canon carries the byte-exact
+    # consumes. Versus persisting the raw extraction this drops, per doc:
+    # the raw ``spans`` array (unused — span_canon carries the byte-exact
     # invariant), the ``lines`` array<struct> (its desc + desc_norm pair
-    # stored every description twice; the kernel needs only desc_norm +
-    # three double arrays), ``desc_blob`` (a third copy of every
-    # description — the kernel reconstructs it bit-identically from
-    # line_descs), ``media_refs`` and ``invnum_raw`` (not consumed by any
+    # stored every description twice; the kernel needs only the flat
+    # arrays), ``media_refs`` and ``invnum_raw`` (not consumed by any
     # verdict branch). The in-memory columnar cache shrinks ~2.4x
     # (1.6 GB -> 0.7 GB at the x8 scaling corpus), which is DRAM traffic
-    # saved on EVERY branch scan — the measured 8->32 bandwidth ceiling —
-    # and the per-branch F.transform of lines into flat arrays now runs
-    # once, at build time, instead of per payload projection.
-    extracted = extract_docs(documents)
-    from ..operators.pairs import PAIR_LINE_ARRAYS
-
-    def _slim_cols():
-        return [
-            *[
-                F.col(c)
-                for c in (
-                    "part", "doc_id", "invnum_norm", "po", "total", "tax_total",
-                    "currency", "date", "payee", "media_key", "pdf_hash",
-                    "span_canon", "n_lines", "line_amount_sum",
-                )
-            ],
-            *[
-                F.transform(F.col("lines"), fn).alias(name)
-                for name, fn in PAIR_LINE_ARRAYS.items()
-            ],
-        ]
-
-    docs = extracted.select(*cached_exprs(("validate.slim",), _slim_cols))
-    if isinstance(persist_extraction, str) and persist_extraction not in ("cache", "staging"):
-        # fail loudly on a typo ("stagging") instead of silently running
-        # cache mode with the wrong strategy on a misconfigured cluster
-        raise ValueError(
-            f"persist_extraction must be True/False/'cache'/'staging', "
-            f"got {persist_extraction!r}"
-        )
-    if persist_extraction == "staging":
-        import tempfile
-
-        staging = cfg.staging_dir or tempfile.mkdtemp(prefix="sieve_staging_")
-        path = os.path.join(staging, "extracted_docs.parquet")
-        docs.write.mode("overwrite").parquet(path)
-        docs = docs.sparkSession.read.parquet(path)
-    elif persist_extraction:
+    # saved on EVERY branch scan — the measured 8->32 bandwidth ceiling.
+    docs = extract_docs(documents).select(*_SLIM_COLS)
+    if persist_extraction:
         # EAGER materialization, not a lazy persist: the verdict DAG fans
         # out into several concurrent jobs (broadcast exchanges for
         # profiles/history/registry run on separate driver threads). With a
@@ -467,19 +399,9 @@ def run_validation(
         # parse; every branch then reads the cache.
         docs = docs.persist()
         docs.count()
-    profiles = (
-        baseline_profiles if baseline_profiles is not None else profile.profile(docs, "total")
-    )
-    # pin the validated field: multi-field stored baselines (one row per
-    # part × field) would fan out the profile joins and Benford stats.
-    # doc_verdicts_from_docs receives the UNPINNED frame (it re-pins for
-    # the total path itself) so drift_fields extras can read their rows.
-    unpinned = profiles
-    if "field" in profiles.columns:
-        profiles = profiles.where(F.col("field") == "total")
+    profiles = _total_profile(docs, baseline_profiles)
     verdicts = doc_verdicts_from_docs(
-        docs, media_registry, unpinned, cfg,
-        history_includes_self=(baseline_profiles is None),
+        docs, media_registry, baseline_profiles, cfg, profiles
     )
     if cfg.enable_benford:
         # Benford conformity is a test of the data being VALIDATED: under

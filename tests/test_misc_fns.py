@@ -81,6 +81,70 @@ def test_exprcache_rebuilds_for_another_context(spark, monkeypatch):
     assert cached_exprs(("test.ctx",), object) is not first
 
 
+def test_score_pairs_accepts_only_the_per_pair_crossing():
+    """The once-per-doc dictionary crossing is gone; asking for it fails
+    loudly instead of silently scoring another way."""
+    from invoice_anomaly_detection_sieve_spark.operators import pairs
+
+    with pytest.raises(ValueError, match="payload_mode"):
+        pairs.score_pairs(None, None, payload_mode="dict")
+
+
+_RESTART_SCRIPT = r"""
+from invoice_anomaly_detection_sieve_spark.datagen import synthesize_documents
+from invoice_anomaly_detection_sieve_spark.documents import extract_docs
+from invoice_anomaly_detection_sieve_spark.functions import exprcache
+from invoice_anomaly_detection_sieve_spark.operators import blocking, pairs
+from invoice_anomaly_detection_sieve_spark.session import get_spark
+
+
+def score(app):
+    spark = get_spark(app, cores=2, shuffle_partitions=2)
+    documents, _, _ = synthesize_documents(spark, n_parts=2, docs_per_part=20, seed=3)
+    docs = extract_docs(documents)
+    scored = pairs.score_pairs(docs, blocking.candidate_pairs(docs))
+    rows = sorted(tuple(r) for r in scored.collect())
+    return spark, rows, exprcache._CACHE[("pairs.kernel_udf",)]
+
+
+first, rows1, udf1 = score("restart-1")
+first.stop()
+second, rows2, udf2 = score("restart-2")
+assert second.sparkContext is not first.sparkContext
+assert exprcache._CTX is second.sparkContext
+assert udf2 is not udf1, "kernel UDF of the stopped context was served"
+assert rows1, "corpus must yield scored pairs"
+assert rows2 == rows1
+second.stop()
+print("RESTART_OK", len(rows1))
+"""
+
+
+def test_exprcache_survives_real_session_restart(tmp_path):
+    """A real ``spark.stop()`` and a new session in one process: the cached
+    kernel UDF and expressions are rebuilt for the new context and score
+    the same rows. Runs in a subprocess so the shared session is
+    untouched."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = str(pathlib.Path(__file__).resolve().parent.parent)
+    env = dict(os.environ, SIEVE_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    script = tmp_path / "restart.py"
+    script.write_text(_RESTART_SCRIPT)
+    done = subprocess.run(
+        [sys.executable, str(script)], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-4000:]
+    assert "RESTART_OK" in done.stdout
+
+
 @pytest.fixture(scope="module")
 def tpch_docs(spark):
     from invoice_anomaly_detection_sieve_spark.datagen import docs_from_tpch
@@ -115,9 +179,8 @@ def test_plan_profile_join_is_broadcast(spark, tpch_docs):
     from invoice_anomaly_detection_sieve_spark.operators import drift, profile
 
     prof = profile.profile(tpch_docs, "total")
-    hist = profile.group_history_counts(tpch_docs)
     docs = tpch_docs.withColumn("bank_change", F.lit(False))
-    out = drift.with_anomaly_scores(docs, prof, hist)
+    out = drift.with_anomaly_scores(docs, prof)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 

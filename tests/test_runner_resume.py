@@ -81,8 +81,12 @@ def test_failed_sink_leaves_run_unledgered(spark, tmp_path, corpus, monkeypatch)
     m = runner.run(spark, documents, registry, catalog, run_id="rf", config=cfg)
     n = documents.count()
     assert m["docs_validated"] == n and m["parts_skipped_resume"] == 0
-    ids = [r["doc_id"] for r in runner.read_run_verdicts(catalog, "rf").collect()]
+    verdicts = runner.read_run_verdicts(catalog, "rf").collect()
+    ids = [r["doc_id"] for r in verdicts]
     assert len(ids) == len(set(ids)) == n
+    # one violation row per (doc, reason code) of the exactly-once verdicts
+    n_reasons = sum(len(r["reason_codes"]) for r in verdicts)
+    assert runner.read_run_violations(catalog, "rf").count() == n_reasons > 0
     assert runner.completed_parts(catalog, "rf").count() > 0
 
 

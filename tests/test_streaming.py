@@ -220,3 +220,32 @@ def test_streaming_dedup_first_spans_arrow_chunks(spark, tmp_path):
     assert got["d2"] == ("dup", 3)
     assert got["d3"] == ("dup", 4)
     assert got["d1"] == ("dup", 5)
+
+
+def test_batch_registry_update_merges_seen_times(spark):
+    """update_registry, the batch form of the registry upsert: observed keys
+    widen [first_seen, last_seen] to cover their observation dates, new
+    keys enter with both set to their first and last observation, keys not
+    observed and null refs change nothing."""
+    from invoice_anomaly_detection_sieve_spark.operators.registry import update_registry
+
+    t0 = dt.datetime(2024, 1, 10)
+    reg = spark.createDataFrame(
+        [("K1", t0, t0), ("K3", t0, t0 + dt.timedelta(days=1))],
+        "media_key string, first_seen timestamp, last_seen timestamp",
+    )
+    docs = spark.createDataFrame(
+        [
+            (["K1", "K2", None], dt.date(2024, 1, 5)),
+            (["K1"], dt.date(2024, 1, 20)),
+            (["K2"], dt.date(2024, 1, 7)),
+        ],
+        "media_refs array<string>, date date",
+    )
+    got = {r["media_key"]: (r["first_seen"], r["last_seen"])
+           for r in update_registry(reg, docs).collect()}
+    assert got == {
+        "K1": (dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 20)),
+        "K2": (dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 7)),
+        "K3": (t0, t0 + dt.timedelta(days=1)),
+    }

@@ -234,14 +234,11 @@ def test_stored_baseline_history_count_not_decremented(spark, docs):
     a STORED baseline's count already excludes it — decrementing there
     shifted the <5 cold-history discount boundary by one."""
     prof = profile.profile(docs, "total")
-    hist = prof.select("part", F.col("cnt").alias("part_doc_count"))
     flagged = docs.withColumn("bank_change", F.lit(False))
     cnt = {r["part"]: r["cnt"] for r in prof.collect()}
 
-    self_prof = drift.with_anomaly_scores(flagged, prof, hist)  # default True
-    stored = drift.with_anomaly_scores(
-        flagged, prof, hist, history_includes_self=False
-    )
+    self_prof = drift.with_anomaly_scores(flagged, prof)  # default True
+    stored = drift.with_anomaly_scores(flagged, prof, history_includes_self=False)
     got_self = {r["part"]: r["hist_count"]
                 for r in self_prof.select("part", "hist_count").distinct().collect()}
     got_stored = {r["part"]: r["hist_count"]
