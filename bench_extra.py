@@ -41,7 +41,6 @@ def timed(fn, n=2):
 
 def components():
     """Time each stage of the flagship validation in isolation (noop sink)."""
-    from invoice_anomaly_detection_sieve_spark.plans import validate as V
     from invoice_anomaly_detection_sieve_spark.operators import (
         blocking, pairs, profile, registry,
     )

@@ -469,6 +469,13 @@ def simhash_near_duplicates(
 # duplicate clustering: pairs -> connected components -> canonical doc
 # ---------------------------------------------------------------------------
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint`` frame. The frame's
+    own ``unpersist`` only touches the cache manager, and the checkpoint
+    RDD is not in it."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "a_id",
@@ -512,6 +519,7 @@ def duplicate_clusters(
         )
         .localCheckpoint(eager=True)
     )
+    ckpt = labels
     changed = 0
     for _ in range(max_iter):
         # next label = min(own, min over neighbors' labels); count how
@@ -532,11 +540,17 @@ def duplicate_clusters(
                 .alias("_chg"),
             )
         ).localCheckpoint(eager=True)
+        # the eager checkpoint holds the new round, so the one it was
+        # computed from is released now instead of whenever a JVM GC lets
+        # the ContextCleaner drop it
+        _release_checkpoint(ckpt)
+        ckpt = nxt
         changed = nxt.agg(F.sum("_chg")).first()[0] or 0
         labels = nxt.drop("_chg")
         if changed == 0:
             break
     if changed:
+        _release_checkpoint(ckpt)
         # a component whose diameter exceeds max_iter would return labels
         # that are NOT the component minimum — keep_canonical would then
         # keep several "canonical" docs from one duplicate cluster.

@@ -31,11 +31,14 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from ..documents import part_of
+from ..schema import LEDGER
 from ..sources.catalog import ParquetCatalog
 from . import validate as V
 
@@ -233,42 +236,44 @@ def run(
     part_v = out["part_verdicts"].cache()
     try:
         n_docs = verdicts.count()  # materialize once; everything below reuses it
+        parts, schema = [], LEDGER
         if n_docs:
             _commit_sinks(
                 catalog, run_id, verdicts, out["violations"], part_v, profiles,
                 run_ts if enable_cases else None,
             )
             elapsed = time.time() - t0
-            ledger = part_v.select(
-                F.lit(run_id).alias("run_id"),
-                "part",
-                F.col("n_docs").cast("long").alias("rows_scanned"),
-                F.array([F.lit(c) for c in cfg.constraints]).alias("constraints_evaluated"),
-                F.col("n_violations").cast("long").alias("violations"),
-                # the RUN's elapsed wall time stamped on every partition row
-                # (not a per-partition figure — Spark doesn't expose per-task
-                # wall time to the plan; the column name says what it is)
-                F.lit(float(elapsed)).alias("run_wall_time_sec"),
-                F.lit(COMPLETE).alias("status"),
-                # documents-table snapshot this run consumed (incremental
-                # mode); NULL for plain DataFrame runs
-                F.lit(consumed_snapshot_id).cast("long").alias("consumed_snapshot_id"),
-            )
-            catalog.append(LEDGER_TABLE, ledger)
+            parts = part_v.select("part", "n_docs", "n_violations").collect()
         elif consumed_snapshot_id is not None:
             # an increment can be empty (snapshot advanced, zero rows — e.g.
             # an empty append): still ledger the consumed snapshot id, or
             # every later incremental run re-reads the same empty increment
             # forever because the bookmark never advances
-            ledger = spark.createDataFrame(
-                [(run_id, None, 0, list(cfg.constraints), 0,
-                  float(time.time() - t0), COMPLETE, consumed_snapshot_id)],
-                "run_id string, part string, rows_scanned long, "
-                "constraints_evaluated array<string>, violations long, "
-                "run_wall_time_sec double, status string, "
-                "consumed_snapshot_id long",
+            elapsed = time.time() - t0
+            parts = [(None, 0, 0)]
+            schema = T.StructType([T.StructField(f.name, f.dataType) for f in LEDGER])
+        # ledger rows are built on the driver and handed to Spark as data
+        # (through Arrow; a list of tuples would start a Python worker task):
+        # as a projection over part_v, F.lit(elapsed) (a double, and the
+        # snapshot id, a long) would be inlined into generated Java source,
+        # so every run would compile a new class. Constant folding defeats
+        # the F.lit(str(x)).cast("double") way round it.
+        if parts:
+            rows = pd.DataFrame(
+                [
+                    # the RUN's elapsed wall time stamped on every partition
+                    # row (not a per-partition figure — Spark doesn't expose
+                    # per-task wall time to the plan; the column name says
+                    # what it is). consumed_snapshot_id is the documents-
+                    # table snapshot an incremental run consumed, NULL for
+                    # plain DataFrame runs.
+                    (run_id, part, n, list(cfg.constraints), n_viol,
+                     float(elapsed), COMPLETE, consumed_snapshot_id)
+                    for part, n, n_viol in parts
+                ],
+                columns=schema.names,
             )
-            catalog.append(LEDGER_TABLE, ledger)
+            catalog.append(LEDGER_TABLE, spark.createDataFrame(rows, schema).coalesce(1))
         elapsed = time.time() - t0
     finally:
         # Drop the run's caches, the extraction included, on failure too: a

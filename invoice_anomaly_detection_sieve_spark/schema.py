@@ -115,14 +115,18 @@ VIOLATIONS = T.StructType(
 )
 
 # Per-partition lineage + metrics ledger (≈ audit_log, app/schema.sql:110-118).
+# ``consumed_snapshot_id`` is NULL for runs that are not incremental; the one
+# row of an empty increment (no partition) is written with every field
+# nullable.
 LEDGER = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
         T.StructField("part", T.StringType(), False),
         T.StructField("rows_scanned", T.LongType(), False),
-        T.StructField("constraints_evaluated", T.ArrayType(T.StringType()), False),
-        T.StructField("violations", T.LongType(), False),
-        T.StructField("run_wall_time_sec", T.DoubleType(), True),
+        T.StructField("constraints_evaluated", T.ArrayType(T.StringType(), False), False),
+        T.StructField("violations", T.LongType(), True),
+        T.StructField("run_wall_time_sec", T.DoubleType(), False),
         T.StructField("status", T.StringType(), False),
+        T.StructField("consumed_snapshot_id", T.LongType(), True),
     ]
 )

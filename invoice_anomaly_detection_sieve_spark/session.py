@@ -13,6 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -51,6 +52,13 @@ def get_spark(
         # build CPU (5.1 s vs 2.0 s wall on 32 cores) — the eager
         # extraction persist was 70% of the flagship's total CPU
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        # one runner.run generates ~147 distinct whole-stage classes; the
+        # default 100-entry code cache evicts them all in LRU order before
+        # the next run asks again, so every warm run recompiled ~143
+        # (CodegenMetrics). 1000 holds the whole plan set: a warm run
+        # compiles none. A static conf: Spark sizes the cache once per JVM,
+        # so it must be set before the first session starts.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SIEVE_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")

@@ -169,3 +169,22 @@ def test_replicated_registry_preserves_violation_rate(spark):
     base_rate = dangling_refs(eb, reg).count() / eb.count()
     new_rate = dangling_refs(e3, reg3).count() / e3.count()
     assert abs(new_rate - base_rate) < 1e-9
+
+
+def test_duplicate_clusters_releases_round_checkpoints(spark):
+    """Each round's localCheckpoint is unpersisted once the next round is
+    materialized: after one call the only RDD it leaves persisted is the
+    checkpoint behind the returned frame, with no JVM GC needed."""
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # a 6-node path: several label-propagation rounds, one checkpoint each
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], "a_id long, b_id long")
+    before = persisted()
+    clusters = dedup.duplicate_clusters(pairs)
+    plan = clusters._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() != "LogicalRDD":
+        plan = plan.child()
+    assert persisted() - before == {plan.rdd().id()}
+    assert sorted(tuple(r) for r in clusters.collect()) == [(i, 0) for i in range(6)]

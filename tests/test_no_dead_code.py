@@ -1,4 +1,6 @@
-"""Dead-code guard: every top-level function and class of the package must be
+"""Dead-code guards.
+
+Every top-level function and class of the package must be
 referenced by name somewhere in the repo's Python files, outside its own
 definition. A use from the tests is enough, so a reference implementation
 kept as a test oracle survives; a helper nothing calls does not.
@@ -6,7 +8,14 @@ kept as a test oracle survives; a helper nothing calls does not.
 A name counts as referenced when it appears as an identifier (``f(...)``),
 an attribute (``mod.f``) or an imported name (``from mod import f``) in any
 ``.py`` file of the repo; the ``def``/``class`` statement itself is not a
-reference. Pure AST scan: no Spark, no imports of the package."""
+reference.
+
+No import may bind a name its scope never uses: a module-level import must
+be used somewhere in its module, an import inside a function somewhere in
+that function. Checked in the package, ``tests/``, ``tools/`` and the
+top-level scripts.
+
+Pure AST scans: no Spark, no imports of the package."""
 
 from __future__ import annotations
 
@@ -16,6 +25,9 @@ import pathlib
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "invoice_anomaly_detection_sieve_spark"
+IMPORT_CHECKED = [PACKAGE, REPO / "tests", REPO / "tools"]
+IMPORT_CHECKED_SCRIPTS = ["bench.py", "bench_extra.py", "__spark_entry__.py"]
+_SCOPES = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 
 
 def _repo_py_files():
@@ -58,3 +70,31 @@ def test_every_package_function_and_class_is_referenced():
         "them from a test if they are a reference implementation):\n"
         + "\n".join(unreferenced)
     )
+
+
+def _unused_imports(path: pathlib.Path):
+    tree = ast.parse(path.read_text(), str(path))
+    parent = {
+        child: node for node in ast.walk(tree) for child in ast.iter_child_nodes(node)
+    }
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        scope = parent[node]
+        while not isinstance(scope, _SCOPES):
+            scope = parent[scope]
+        used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        for alias in node.names:
+            # ``import a.b`` binds ``a``
+            bound = alias.asname or alias.name.split(".", 1)[0]
+            if bound not in used:
+                yield f"{path.relative_to(REPO)}:{node.lineno}: {bound}"
+
+
+def test_no_unused_imports():
+    paths = [p for d in IMPORT_CHECKED for p in sorted(d.rglob("*.py"))]
+    paths += [REPO / name for name in IMPORT_CHECKED_SCRIPTS]
+    unused = [where for path in paths for where in _unused_imports(path)]
+    assert not unused, "imports nothing in their scope uses:\n" + "\n".join(unused)

@@ -278,3 +278,29 @@ def test_read_since_across_rewrite_falls_back_to_full_replay(spark, tmp_path):
     # remedy, never a PATH_NOT_FOUND mid-scan (and never silent [] rows)
     with _pytest.raises(ValueError, match="garbage-collected"):
         cat.read_since("t", s1, until=s2)
+
+
+def test_warm_run_compiles_no_codegen_class(spark, tmp_path, corpus):
+    """Spark's generated-code cache holds a run's whole plan set and no
+    per-run value is inlined into generated code, so a second run over
+    the same inputs in the same JVM compiles nothing. Fails with the
+    default 100-entry cache (a run generates more classes than that, so
+    LRU order evicts them all) and with the ledger's wall time as an
+    ``F.lit`` double in a projection (a new class every run)."""
+    from invoice_anomaly_detection_sieve_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    documents, registry = corpus
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    catalogs = [ParquetCatalog(spark, str(tmp_path / f"wh{i}")) for i in range(2)]
+    runner.run(spark, documents, registry, catalogs[0], run_id="cold")
+    before = compiles.getCount()
+    runner.run(spark, documents, registry, catalogs[1], run_id="warm")
+    warm_compiles = compiles.getCount() - before
+    assert warm_compiles == 0, f"the warm run compiled {warm_compiles} classes"
+    # the wall time still reaches the ledger, one value per run
+    walls = [
+        {r[0] for r in c.read("ledger").select("run_wall_time_sec").collect()}
+        for c in catalogs
+    ]
+    assert all(len(w) == 1 and next(iter(w)) > 0 for w in walls)

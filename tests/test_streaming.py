@@ -222,6 +222,63 @@ def test_streaming_dedup_first_spans_arrow_chunks(spark, tmp_path):
     assert got["d1"] == ("dup", 5)
 
 
+def test_streaming_dedup_matches_duckdb_first_arrival(spark, tmp_path):
+    """Oracle for streaming_exact_dedup: three availableNow runs over a
+    deterministic event table, one arrival batch each, tag every row as
+    DuckDB's first-arrival-per-content_hash query does (arrival = batch,
+    then ts). Later batches carry earlier timestamps for texts an earlier
+    batch already saw, so a ts-only order would disagree."""
+    import random
+
+    import duckdb
+
+    from invoice_anomaly_detection_sieve_spark.streaming import dedup_stream as D
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("events", "out", "ckpt"))
+    schema = "doc_id string, text string, ts timestamp"
+    rng = random.Random(11)
+    texts = [f"invoice {k} from vendor {k % 3}" for k in range(9)]
+    minutes = rng.sample(range(600), 48)  # unique: no ts tie within a hash
+    events = [
+        (f"d{i:02d}", rng.choice(texts), dt.datetime(2025, 3, 1) + dt.timedelta(minutes=m), i // 16)
+        for i, m in enumerate(minutes)
+    ]
+    for batch in range(3):
+        rows = [e[:3] for e in events if e[3] == batch]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        q = (
+            D.streaming_exact_dedup(spark.readStream.schema(schema).parquet(src), ttl_ms=None)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("content_hash", "doc_id", "ts", "is_first", "n_seen").collect()
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (doc_id VARCHAR, text VARCHAR, ts TIMESTAMP, batch INT)")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", events)
+    want = sorted(con.execute("""
+        SELECT content_hash, doc_id, ts,
+               CASE WHEN rn = 1 THEN 'first' ELSE 'dup' END AS is_first,
+               rn AS n_seen
+        FROM (SELECT sha256(text) AS content_hash, doc_id, ts,
+                     row_number() OVER (PARTITION BY sha256(text) ORDER BY batch, ts) AS rn
+              FROM events)
+    """).fetchall())
+    assert len(got) == len(events)
+    assert got == want
+    # the table does exercise late arrivals: some 'first' row is later
+    # than a 'dup' row of the same hash
+    first_ts = {h: t for h, _, t, tag, _ in want if tag == "first"}
+    assert any(t < first_ts[h] for h, _, t, tag, _ in want if tag == "dup")
+
+
 def test_batch_registry_update_merges_seen_times(spark):
     """update_registry, the batch form of the registry upsert: observed keys
     widen [first_seen, last_seen] to cover their observation dates, new

@@ -100,8 +100,6 @@ def test_hot_partition_counts(corpus):
 
 
 def test_violation_rows_carry_exact_span_sequence(spark, corpus):
-    from invoice_anomaly_detection_sieve_spark.functions.normalize import span_canonical
-
     docs = extract_docs(corpus["documents"])
     canon = {r["doc_id"]: r["c"] for r in docs.select("doc_id", F.col("span_canon").alias("c")).collect()}
     assert corpus["violations"], "planted corpus must yield violations"
@@ -136,7 +134,6 @@ def test_multi_field_drift_self_profiled(spark):
     """drift_fields extras (here tax_total) self-profile per part and flag
     FIELD_DRIFT_<FIELD> exactly where the independently recomputed z
     crosses the outlier threshold; codes map to the drift constraint."""
-    from invoice_anomaly_detection_sieve_spark.functions import scoring as S
     from invoice_anomaly_detection_sieve_spark.operators import drift, profile as P
 
     documents, media_registry, _ = synthesize_documents(spark, seed=42)

@@ -12,7 +12,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package from this checkout too
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -27,7 +30,7 @@ DEFAULT = [
 def main():
     tag = sys.argv[1]
     names = sys.argv[2:] or DEFAULT
-    outdir = "/root/repo/plans/r06"
+    outdir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(outdir, exist_ok=True)
 
     import bench
