@@ -9,6 +9,20 @@ textbook algorithms: Jaro-Winkler per Winkler (1990), and the
 Jonker-Volgenant shortest-augmenting-path solver for the rectangular linear
 sum assignment problem.
 
+Both run over a whole Arrow batch at once, not row by row:
+
+- ``line_assign_batch`` flattens each side's per-line arrays once, groups
+  the batch's pairs by line-count shape ``(n, m)`` and scores every group
+  as one ``(B, n, m)`` cost stack. ``_jv_lockstep`` runs the solver over
+  the stack in lockstep: each pair takes the same pivots, in the same
+  order, with the same first-minimum tie-break, as the solver run on its
+  own matrix, so the features are bit-identical row by row and do not
+  depend on which rows share a batch.
+- Jaro-Winkler values come from a worker-global cache keyed on the
+  (smaller, larger) string pair. A batch factorizes its strings once,
+  dedupes the pair keys with numpy and computes only the misses, in
+  ``jw_batch``'s vector passes (one pass per character position).
+
 Semantic parity targets:
 - ``line_assign_features`` matches reference ``app/features.py:47-101``
   (cost = 0.7*desc_JW + 0.2*unit_price term + 0.1*qty term, both ratio
@@ -27,10 +41,13 @@ from functools import lru_cache
 from typing import Any
 
 import numpy as np
+import pandas as pd
 
 __all__ = [
     "jaro_winkler_similarity",
+    "jw_pairs",
     "linear_sum_assignment",
+    "line_assign_batch",
     "line_assign_features",
     "char_ngrams",
     "dice_3gram",
@@ -97,46 +114,67 @@ _JW_CACHE_MAX = 1 << 21
 _JW_BATCH_MAXLEN = 48  # longer strings take the scalar path
 
 
-def jw_cached(s1: str, s2: str) -> float:
-    """Memoized symmetric Jaro-Winkler. Line descriptions repeat heavily
-    across candidate pairs, so the executor-local cache removes most of
-    the string-kernel cost of the Hungarian cost matrix. The pair kernel
-    pre-warms this cache per Arrow batch via ``jw_warm_cache`` (one
-    vectorized numpy evaluation of every distinct uncached pair)."""
-    if s1 > s2:
-        s1, s2 = s2, s1
-    v = _JW_CACHE.get((s1, s2))
-    if v is None:
-        v = jaro_winkler_similarity(s1, s2)
-        if len(_JW_CACHE) > _JW_CACHE_MAX:
-            _JW_CACHE.clear()
-        _JW_CACHE[(s1, s2)] = v
-    return v
+def _str_array(values) -> np.ndarray:
+    """Strings as an object array, NULL as '' (the reference's ``or ''``)."""
+    out = np.array(values, dtype=object)
+    out[pd.isna(out)] = ""
+    return out
 
 
-def jw_key(s1: str, s2: str) -> tuple[str, str]:
-    return (s2, s1) if s1 > s2 else (s1, s2)
+def _factorize(strs) -> tuple[np.ndarray, np.ndarray]:
+    """Codes and distinct strings; codes order as the strings do, so a
+    (min code, max code) pair is the cache's (min string, max string) key.
+    A dict, not ``pd.factorize``: pandas' string hash table stops at NUL,
+    so it merges '' with '\\x00' and 'ab' with 'ab\\x00'."""
+    distinct = sorted(dict.fromkeys(strs))
+    index = {x: i for i, x in enumerate(distinct)}
+    uniques = np.empty(len(distinct), dtype=object)
+    uniques[:] = distinct
+    return np.fromiter(map(index.__getitem__, strs), np.int64, count=len(strs)), uniques
 
 
-def jw_warm_cache(keys) -> None:
-    """Vectorized fill of the JW cache for every missing (s1, s2) key.
+def _jw_codes(uniques: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Jaro-Winkler of ``uniques[lo]`` and ``uniques[hi]`` (lo ≤ hi), any
+    shape. Each distinct pair is looked up once in the worker cache; the
+    misses are computed together (``_jw_indexed``, scalar above
+    ``_JW_BATCH_MAXLEN``) and cached."""
+    keys, inverse = np.unique(lo * len(uniques) + hi, return_inverse=True)
+    klo, khi = np.divmod(keys, len(uniques))
+    vals = np.ones(len(keys))  # equal strings score 1.0
+    todo = np.flatnonzero(klo != khi)
+    if todo.size:
+        cache = _JW_CACHE
+        pairs = list(zip(uniques[klo[todo]].tolist(), uniques[khi[todo]].tolist()))
+        got = np.array([cache.get(k, np.nan) for k in pairs])
+        miss = np.flatnonzero(np.isnan(got))
+        if miss.size:
+            mlo, mhi = klo[todo[miss]], khi[todo[miss]]
+            lens = np.fromiter(map(len, uniques), np.int64, count=len(uniques))
+            short = (lens[mlo] <= _JW_BATCH_MAXLEN) & (lens[mhi] <= _JW_BATCH_MAXLEN)
+            sims = np.empty(len(miss))
+            sims[short] = _jw_indexed(uniques, mlo[short], mhi[short])
+            sims[~short] = [
+                jaro_winkler_similarity(uniques[i], uniques[j])
+                for i, j in zip(mlo[~short].tolist(), mhi[~short].tolist())
+            ]
+            if len(cache) + len(miss) > _JW_CACHE_MAX:
+                cache.clear()
+            cache.update(zip([pairs[i] for i in miss.tolist()], sims.tolist()))
+            got[miss] = sims
+        vals[todo] = got
+    return vals[inverse.reshape(lo.shape)]
 
-    Splits the misses into a numpy-batch set (both strings ≤
-    ``_JW_BATCH_MAXLEN``) and a scalar remainder; ``jw_batch`` computes the
-    former in O(L²) masked vector passes over the whole miss set instead of
-    a Python char loop per pair (~10× on the profile's 23 µs/call)."""
-    missing = [k for k in keys if k not in _JW_CACHE]
-    if not missing:
-        return
-    if len(_JW_CACHE) + len(missing) > _JW_CACHE_MAX:
-        _JW_CACHE.clear()
-    batch = [k for k in missing if len(k[0]) <= _JW_BATCH_MAXLEN and len(k[1]) <= _JW_BATCH_MAXLEN]
-    if batch:
-        sims = jw_batch([k[0] for k in batch], [k[1] for k in batch])
-        _JW_CACHE.update(zip(batch, sims.tolist()))
-    for k in missing:
-        if k not in _JW_CACHE:
-            _JW_CACHE[k] = jaro_winkler_similarity(k[0], k[1])
+
+def jw_pairs(a_strs, b_strs) -> np.ndarray:
+    """Symmetric Jaro-Winkler of each (a, b) pair of two equal-length
+    string sequences, NULL as ''. Computes ``jaro_winkler_similarity`` on
+    the (smaller, larger) string of each pair, the worker cache's key."""
+    n = len(a_strs)
+    if n == 0:
+        return np.zeros(0)
+    codes, uniques = _factorize(np.concatenate([_str_array(a_strs), _str_array(b_strs)]))
+    a, b = codes[:n], codes[n:]
+    return _jw_codes(uniques, np.minimum(a, b), np.maximum(a, b))
 
 
 def _pad_codes(strs: list[str], length: int) -> np.ndarray:
@@ -158,14 +196,15 @@ def _pad_codes(strs: list[str], length: int) -> np.ndarray:
         return np.frombuffer(joined, dtype=np.uint32).reshape(len(strs), length)
 
 
-# Cache-blocking size for jw_batch: each masked pass streams ~8 arrays of
-# `block × length` bytes, so 2048 pairs × ≤48 chars ≈ 100 KiB per array —
-# L2-resident. The unblocked formulation streamed the FULL miss set
-# (measured 260k pairs ⇒ ~6 GB of DRAM traffic per warm call) through
-# every one of the ~L·(2w+1) masked steps, which is exactly the shared
-# memory-bandwidth wall the round-3 kernel ladder measured at 32 workers
-# (419 → 839 µs/pair). Blocking keeps the traffic cache-local without
-# changing a single float: each block runs the identical vector program.
+# Cache-blocking size for jw_batch: each position's window pass streams
+# ~6 arrays of ``block × (2·window+1)`` bytes (latin-1 codes, masks), so
+# 2048 pairs × ≤48 chars stay L2-resident. The unblocked formulation
+# streamed the FULL miss set (measured 260k pairs ⇒ ~6 GB of DRAM traffic
+# per warm call) through every masked step, the shared memory-bandwidth
+# wall the round-3 kernel ladder measured at 32 workers (419 → 839
+# µs/pair). Blocking keeps the traffic cache-local without changing a
+# single float: each block runs the identical vector program, about ten
+# numpy calls per character position of its longest string.
 _JW_BLOCK = 2048
 
 
@@ -174,61 +213,74 @@ def jw_batch(a_strs: list[str], b_strs: list[str], prefix_weight: float = 0.1) -
 
     Exact re-expression of ``jaro_winkler_similarity`` (same greedy window
     matching, same transposition walk, same float op order); parity pinned
-    by tests/test_kernels.py. Pairs are sorted by max length so each block
-    pads to ITS longest string (short blocks run fewer masked steps), then
-    results scatter back to input order.
+    by tests/test_kernels.py.
     """
     n_pairs = len(a_strs)
     if n_pairs == 0:
         return np.zeros(0)
-    if n_pairs > _JW_BLOCK:
-        order = sorted(
-            range(n_pairs), key=lambda i: max(len(a_strs[i]), len(b_strs[i]))
+    codes, strs = _factorize([*a_strs, *b_strs])
+    return _jw_indexed(strs, codes[:n_pairs], codes[n_pairs:], prefix_weight)
+
+
+def _jw_indexed(strs, ia: np.ndarray, ib: np.ndarray, prefix_weight: float = 0.1) -> np.ndarray:
+    """Jaro-Winkler of ``(strs[ia[k]], strs[ib[k]])`` for every k. Each
+    string is encoded once; pairs are sorted by max length so each block
+    pads to ITS longest string (short blocks run fewer position passes),
+    then results scatter back to input order."""
+    if len(ia) == 0:
+        return np.zeros(0)
+    used, inverse = np.unique(np.concatenate([ia, ib]), return_inverse=True)
+    used_strs = [strs[i] for i in used.tolist()]
+    lens = np.fromiter(map(len, used_strs), np.int64, count=len(used_strs))
+    ia, ib = inverse[: len(ia)], inverse[len(ia) :]
+    n1, n2 = lens[ia], lens[ib]
+    longest = np.maximum(n1, n2)
+    codes = _pad_codes(used_strs, max(int(longest.max()), 1))
+    order = np.argsort(longest, kind="stable")
+    out = np.empty(len(ia))
+    for lo in range(0, len(ia), _JW_BLOCK):
+        idx = order[lo : lo + _JW_BLOCK]
+        length = max(int(longest[idx[-1]]), 1)
+        out[idx] = _jw_batch_block(
+            codes[ia[idx], :length], codes[ib[idx], :length], n1[idx], n2[idx], prefix_weight
         )
-        out = np.empty(n_pairs)
-        for lo in range(0, n_pairs, _JW_BLOCK):
-            idx = order[lo : lo + _JW_BLOCK]
-            out[idx] = _jw_batch_block(
-                [a_strs[i] for i in idx], [b_strs[i] for i in idx], prefix_weight
-            )
-        return out
-    return _jw_batch_block(a_strs, b_strs, prefix_weight)
+    return out
 
 
-def _jw_batch_block(a_strs: list[str], b_strs: list[str], prefix_weight: float) -> np.ndarray:
-    n_pairs = len(a_strs)
-    n1 = np.array([len(s) for s in a_strs], dtype=np.int64)
-    n2 = np.array([len(s) for s in b_strs], dtype=np.int64)
-    length = int(max(int(n1.max(initial=0)), int(n2.max(initial=0)), 1))
-    a = _pad_codes(a_strs, length)
-    b = _pad_codes(b_strs, length)
+def _jw_batch_block(
+    a: np.ndarray, b: np.ndarray, n1: np.ndarray, n2: np.ndarray, prefix_weight: float
+) -> np.ndarray:
+    """One block of pairs as padded code rows ``a``/``b`` of lengths n1/n2."""
+    n_pairs, length = a.shape
 
     window = np.maximum(np.maximum(n1, n2) // 2 - 1, 0)
-    flagged1 = np.zeros((n_pairs, length), dtype=bool)
-    flagged2 = np.zeros((n_pairs, length), dtype=bool)
     wmax = int(window.max(initial=0))
-    for i in range(length):
-        active = n1 > i
-        if not active.any():
-            break
-        found = ~active
-        ai = a[:, i]
-        lo = np.maximum(0, i - window)
-        hi = np.minimum(n2, i + window + 1)
-        for j in range(max(0, i - wmax), min(length, i + wmax + 1)):
-            if found.all():
-                break
-            ok = (
-                ~found
-                & (j >= lo)
-                & (j < hi)
-                & (b[:, j] == ai)
-                & ~flagged2[:, j]
-            )
-            if ok.any():
-                flagged1[ok, i] = True
-                flagged2[ok, j] = True
-                found |= ok
+    # in_window[p, d + wmax]: offset d = j - i lies in pair p's match window
+    offsets = np.arange(-wmax, wmax + 1)
+    in_window = np.abs(offsets)[None, :] <= window[:, None]
+    # working codes one size wider, so two values no char code takes can
+    # mark s1's padding and s2's padding or already-matched chars: then an
+    # equality test alone finds the free chars of s2 equal to s1[i]
+    pos = np.arange(length)[None, :]
+    wide = np.uint16 if a.dtype == np.uint8 else np.uint32
+    taken = np.iinfo(wide).max
+    a_w = a.astype(wide)
+    a_w[pos >= n1[:, None]] = taken - 1
+    b_w = b.astype(wide)
+    b_w[pos >= n2[:, None]] = taken
+    flagged1 = np.zeros((n_pairs, length), dtype=bool)
+    rows = np.arange(n_pairs)
+    for i in range(int(n1.max(initial=0))):
+        j_lo, j_hi = max(0, i - wmax), min(length, i + wmax + 1)
+        # one pass per position: s1[i] against its whole window; the scalar
+        # loop takes the FIRST free equal char, i.e. the row's first True
+        cand = b_w[:, j_lo:j_hi] == a_w[:, i : i + 1]
+        cand &= in_window[:, j_lo - i + wmax : j_hi - i + wmax]
+        first = cand.argmax(axis=1)
+        hit = rows[cand[rows, first]]
+        flagged1[hit, i] = True
+        b_w[hit, j_lo + first[hit]] = taken
+    flagged2 = (b_w == taken) & (pos < n2[:, None])
 
     m = flagged1.sum(axis=1).astype(np.float64)
     rows1, cols1 = np.nonzero(flagged1)
@@ -258,136 +310,97 @@ def _jw_batch_block(a_strs: list[str], b_strs: list[str], prefix_weight: float) 
     return np.where(equal, 1.0, sim)
 
 
-def _lsa_small(cost: list[list[float]], n: int, m: int) -> list[int]:
-    """Jonker-Volgenant on plain Python lists (n ≤ m).
+def _jv_lockstep(cost: np.ndarray) -> np.ndarray:
+    """Jonker-Volgenant shortest augmenting paths over a ``(B, n, m)``
+    stack, n ≤ m, all B problems in lockstep.
 
-    For the tiny matrices the line matcher actually sees (≤ ~8×8 given
-    typical line counts), per-op numpy overhead dominates the vectorized
-    solver (~310 µs/call profiled); the same algorithm on lists runs in
-    tens of µs. Returns assigned[j] = row (1-based; 0 = unassigned),
-    identical optima to the numpy path."""
-    inf = math.inf
-    u = [0.0] * (n + 1)
-    v = [0.0] * (m + 1)
-    assigned = [0] * (m + 1)
-    predecessor = [0] * (m + 1)
+    Each problem takes the pivots the textbook loop takes on its own
+    matrix: per row, the reduced costs of the free columns against the
+    pivot row, the FIRST free column of minimum reduced cost, the same
+    potential updates, the same augmentation. Problems whose path is done
+    drop out of the vector ops. Returns ``assigned`` ``(B, m + 1)``:
+    assigned[b, j] is the 1-based row of column j (1-based), 0 if free."""
+    n_b, n, m = cost.shape
+    u = np.zeros((n_b, n + 1))
+    v = np.zeros((n_b, m + 1))
+    assigned = np.zeros((n_b, m + 1), dtype=np.int64)
+    pred = np.zeros((n_b, m + 1), dtype=np.int64)
+    every = np.arange(n_b)
+    end = np.empty(n_b, dtype=np.int64)
     for row in range(1, n + 1):
-        assigned[0] = row
-        j0 = 0
-        min_reduced = [inf] * (m + 1)
-        visited = [False] * (m + 1)
-        while True:
-            visited[j0] = True
-            i0 = assigned[j0]
-            delta = inf
-            j1 = 0
-            cost_row = cost[i0 - 1]
-            u0 = u[i0]
-            for j in range(1, m + 1):
-                if not visited[j]:
-                    reduced = cost_row[j - 1] - u0 - v[j]
-                    if reduced < min_reduced[j]:
-                        min_reduced[j] = reduced
-                        predecessor[j] = j0
-                    if min_reduced[j] < delta:
-                        delta = min_reduced[j]
-                        j1 = j
-            for j in range(m + 1):
-                if visited[j]:
-                    u[assigned[j]] += delta
-                    v[j] -= delta
-                else:
-                    min_reduced[j] -= delta
-            j0 = j1
-            if assigned[j0] == 0:
-                break
-        while j0 != 0:
-            j1 = predecessor[j0]
-            assigned[j0] = assigned[j1]
-            j0 = j1
+        assigned[:, 0] = row
+        min_red = np.full((n_b, m), np.inf)  # columns 1..m
+        visited = np.zeros((n_b, m + 1), dtype=bool)
+        act, j0 = every, np.zeros(n_b, dtype=np.int64)
+        while act.size:
+            k = np.arange(act.size)
+            visited[act, j0] = True
+            i0 = assigned[act, j0]
+            reduced = cost[act, i0 - 1] - u[act, i0][:, None] - v[act, 1:]
+            mr = min_red[act]
+            free = ~visited[act, 1:]
+            better = free & (reduced < mr)
+            mr = np.where(better, reduced, mr)
+            pred[act, 1:] = np.where(better, j0[:, None], pred[act, 1:])
+            key = np.where(free, mr, np.inf)
+            j1 = key.argmin(axis=1)
+            delta = key[k, j1]
+            stuck = ~(delta < np.inf)
+            if stuck.any():
+                # only non-finite costs get here; take the first free
+                # column so every path still ends
+                j1[stuck] = free[stuck].argmax(axis=1)
+            vis = visited[act]
+            rr, jj = np.nonzero(vis)
+            u[act[rr], assigned[act[rr], jj]] += delta[rr]
+            v[act] = np.where(vis, v[act] - delta[:, None], v[act])
+            min_red[act] = np.where(free, mr - delta[:, None], mr)
+            j1 += 1
+            done = assigned[act, j1] == 0
+            end[act[done]] = j1[done]
+            act, j0 = act[~done], j1[~done]
+        # augment each problem along its alternating path
+        act, j0 = every, end.copy()
+        while act.size:
+            j1 = pred[act, j0]
+            assigned[act, j0] = assigned[act, j1]
+            act, j0 = act[j1 != 0], j1[j1 != 0]
     return assigned
+
+
+def _assign_stack(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Minimum-cost assignment of every matrix of a ``(B, n, m)`` stack
+    (n, m ≥ 1). Returns (rows, cols), each ``(B, min(n, m))``: the
+    assigned pairs of each matrix, rows ascending."""
+    n_b, n, m = cost.shape
+    if n > m:
+        # columns choose rows; assigned[b, i + 1] is row i's column + 1
+        by_row = _jv_lockstep(np.ascontiguousarray(cost.transpose(0, 2, 1)))[:, 1:]
+        bb, rows = np.nonzero(by_row)
+        cols = by_row[bb, rows] - 1
+        return rows.reshape(n_b, m), cols.reshape(n_b, m)
+    by_col = _jv_lockstep(cost)[:, 1:]
+    bb, cols = np.nonzero(by_col)
+    col_of_row = np.empty((n_b, n), dtype=np.int64)
+    col_of_row[bb, by_col[bb, cols] - 1] = cols
+    return np.broadcast_to(np.arange(n), (n_b, n)), col_of_row
 
 
 def linear_sum_assignment(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Exact minimum-cost assignment for a rectangular cost matrix.
 
-    Jonker-Volgenant shortest augmenting path with potentials; inner loop
-    vectorized with numpy (small matrices dispatch to the list-based
-    ``_lsa_small`` — same algorithm, far lower constant). Returns
-    (row_ind, col_ind) sorted by row, the same contract as
+    Jonker-Volgenant shortest augmenting path with potentials (the B=1
+    case of ``_jv_lockstep``); on exact cost ties the first minimum wins.
+    Returns (row_ind, col_ind) sorted by row, the same contract as
     ``scipy.optimize.linear_sum_assignment``.
     """
     cost = np.asarray(cost, dtype=np.float64)
     if cost.ndim != 2:
         raise ValueError("cost must be 2-D")
-    transposed = cost.shape[0] > cost.shape[1]
-    if transposed:
-        cost = cost.T
-    n, m = cost.shape
-    if n == 0:
+    if cost.size == 0:
         return np.array([], dtype=int), np.array([], dtype=int)
-
-    if n * m <= 256:
-        assigned_small = _lsa_small(cost.tolist(), n, m)
-        rows = np.array(assigned_small[1:], dtype=np.int64) - 1
-        cols = np.arange(m)
-        keep = rows >= 0
-        rows, cols = rows[keep], cols[keep]
-        order = np.argsort(rows)
-        rows, cols = rows[order], cols[order]
-        if transposed:
-            rows, cols = cols, rows
-            order = np.argsort(rows)
-            rows, cols = rows[order], cols[order]
-        return rows, cols
-
-    u = np.zeros(n + 1)
-    v = np.zeros(m + 1)
-    # col j (1-based) -> assigned row (1-based); 0 = unassigned
-    assigned = np.zeros(m + 1, dtype=np.int64)
-    predecessor = np.zeros(m + 1, dtype=np.int64)
-
-    for row in range(1, n + 1):
-        assigned[0] = row
-        j0 = 0
-        min_reduced = np.full(m + 1, np.inf)
-        visited = np.zeros(m + 1, dtype=bool)
-        while True:
-            visited[j0] = True
-            i0 = assigned[j0]
-            reduced = cost[i0 - 1, :] - u[i0] - v[1:]
-            free = ~visited[1:]
-            better = free & (reduced < min_reduced[1:])
-            if better.any():
-                idx = np.flatnonzero(better) + 1
-                min_reduced[idx] = reduced[idx - 1]
-                predecessor[idx] = j0
-            free_idx = np.flatnonzero(free) + 1
-            j1 = free_idx[np.argmin(min_reduced[free_idx])]
-            delta = min_reduced[j1]
-            u[assigned[visited]] += delta
-            v[visited] -= delta
-            min_reduced[~visited] -= delta
-            j0 = j1
-            if assigned[j0] == 0:
-                break
-        # augment along the alternating path
-        while j0 != 0:
-            j1 = predecessor[j0]
-            assigned[j0] = assigned[j1]
-            j0 = j1
-
-    rows = assigned[1:] - 1
-    cols = np.arange(m)
-    keep = rows >= 0
-    rows, cols = rows[keep], cols[keep]
-    order = np.argsort(rows)
-    rows, cols = rows[order], cols[order]
-    if transposed:
-        rows, cols = cols, rows
-        order = np.argsort(rows)
-        rows, cols = rows[order], cols[order]
-    return rows, cols
+    rows, cols = _assign_stack(cost[None])
+    return np.array(rows[0]), cols[0]
 
 
 def _f(value: Any, default: float = 0.0) -> float:
@@ -401,17 +414,148 @@ def _f(value: Any, default: float = 0.0) -> float:
     return default if math.isnan(out) else out
 
 
-def _nan_to_zero(values, n: int) -> np.ndarray:
-    """array<double> cell → float array with NULL/NaN ⇒ 0.0 (the tolerant
-    ``_to_float`` semantics, app/features.py:11-17, applied JVM-side by the
-    extraction's try_cast and finished here)."""
-    if n == 0:
-        return np.zeros(0)
-    out = np.asarray(values, dtype=np.float64)
-    nan = np.isnan(out)
-    if nan.any():
-        out = np.where(nan, 0.0, out)
+def _flatten(desc_col, num_cols) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
+    """One side's per-line arrays for a batch of pairs, flattened: line
+    counts, offsets, descriptions (NULL as '') and numeric columns (NULL
+    or NaN as 0.0, the tolerant ``_to_float`` of app/features.py:11-17,
+    applied JVM-side by the extraction's try_cast and finished here). A
+    NULL array is a doc without lines."""
+    descs = list(desc_col)
+    lens = np.fromiter((0 if d is None else len(d) for d in descs), np.int64, count=len(descs))
+    offsets = np.zeros(len(descs) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    have = np.flatnonzero(lens).tolist()
+    if not have:
+        return lens, offsets, np.empty(0, dtype=object), [np.empty(0) for _ in num_cols]
+    flat_desc = _str_array(np.concatenate([descs[i] for i in have]))
+    nums = []
+    for col in num_cols:
+        vals = list(col)
+        flat = np.concatenate([vals[i] for i in have]).astype(np.float64)
+        if len(flat) != len(flat_desc):
+            raise ValueError("per-line arrays of one doc differ in length")
+        flat[np.isnan(flat)] = 0.0
+        nums.append(flat)
+    return lens, offsets, flat_desc, nums
+
+
+# Cost cells scored per JW dedupe pass: bounds a batch's per-pass
+# intermediates (a few float64/int64 arrays of this many cells, ~2 MB
+# each) when its docs carry many lines; a batch of typical docs is one pass.
+_CELL_BLOCK = 1 << 18
+
+
+def line_assign_batch(
+    a_desc, a_qty, a_up, a_amt,
+    b_desc, b_qty, b_up,
+    alpha: float = 0.7,
+    beta: float = 0.2,
+    gamma: float = 0.1,
+) -> np.ndarray:
+    """Line-matching features of a batch of document pairs, ``(P, 4)``:
+    line_coverage_pct, unmatched_amount_frac, count_new_items,
+    median_unit_price_diff per pair.
+
+    Each argument holds one per-line array per pair (the Arrow boundary's
+    ``array<string>``/``array<double>`` cells; NULL = no lines). The b-side
+    amounts never enter the math: the unmatched fraction is over the A
+    side's amounts (app/features.py:54-65).
+
+    Pairs are grouped by line-count shape ``(n, m)``; each group is one
+    ``(B, n, m)`` cost stack, solved by ``_jv_lockstep`` and reduced with
+    array ops. Amount sums keep each shape's established order: ≤8×8
+    matrices add left to right (Python ``sum``), larger ones use numpy's
+    ``add.reduce`` (pairwise, 8 interleaved partial sums from 8 elements
+    on), over the matched rows in ``set`` iteration order.
+    """
+    na, a_off, a_d, (a_q, a_u, a_a) = _flatten(a_desc, (a_qty, a_up, a_amt))
+    nb, b_off, b_d, (b_q, b_u) = _flatten(b_desc, (b_qty, b_up))
+    out = np.empty((len(na), 4))
+    if not len(na):
+        return out
+    codes, uniques = _factorize(np.concatenate([a_d, b_d]))
+    a_c, b_c = codes[: len(a_d)], codes[len(a_d) :]
+
+    order = np.argsort(na * (int(nb.max()) + 1) + nb, kind="stable")
+    na_o, nb_o = na[order], nb[order]
+    chunk = (np.cumsum(na_o * nb_o) - 1) // _CELL_BLOCK
+    cuts = np.flatnonzero((np.diff(na_o) != 0) | (np.diff(nb_o) != 0) | (np.diff(chunk) != 0)) + 1
+    bounds = [0, *cuts.tolist(), len(order)]
+    segments = []  # (rows, n, m, a line index, b line index) of one chunk
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        rows = order[s:e]
+        n, m = int(na_o[s]), int(nb_o[s])
+        ai = a_off[rows][:, None] + np.arange(n)
+        if n == 0 or m == 0:
+            # reference degenerate branch (app/features.py:54-65); its
+            # numpy total is also the reported median
+            total = np.add.reduce(a_a[ai], axis=1)
+            frac = np.where(total != 0, total / np.maximum(total, 1.0), 1.0)
+            out[rows] = np.stack([np.zeros(len(rows)), frac, np.full(len(rows), float(n)), total], 1)
+        else:
+            segments.append((rows, n, m, ai, b_off[rows][:, None] + np.arange(m)))
+        if e == len(order) or chunk[e] != chunk[s]:
+            _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u,
+                         alpha, beta, gamma, out)
+            segments = []
     return out
+
+
+def _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u,
+                 alpha, beta, gamma, out) -> None:
+    if not segments:
+        return
+    los, his = [], []
+    for _, _, _, ai, bi in segments:
+        ca, cb = a_c[ai][:, :, None], b_c[bi][:, None, :]
+        los.append(np.minimum(ca, cb).ravel())
+        his.append(np.maximum(ca, cb).ravel())
+    jw = _jw_codes(uniques, np.concatenate(los), np.concatenate(his))
+    del los, his
+    lo = 0
+    for rows, n, m, ai, bi in segments:
+        size = len(rows) * n * m
+        seg_jw = jw[lo : lo + size].reshape(len(rows), n, m)
+        lo += size
+        out[rows] = _score_stack(seg_jw, a_q[ai], a_u[ai], a_a[ai], b_q[bi], b_u[bi],
+                                 alpha, beta, gamma)
+
+
+def _score_stack(jw, a_q, a_u, a_a, b_q, b_u, alpha, beta, gamma) -> np.ndarray:
+    """Features of one ``(B, n, m)`` shape group, ``(B, 4)``."""
+    n_b, n, m = jw.shape
+    up_term = np.minimum(
+        np.abs(a_u[:, :, None] - b_u[:, None, :]) / np.maximum(np.abs(a_u), 1.0)[:, :, None], 5.0
+    )
+    qty_term = np.minimum(
+        np.abs(a_q[:, :, None] - b_q[:, None, :]) / np.maximum(np.abs(a_q), 1.0)[:, :, None], 5.0
+    )
+    cost = alpha * (1.0 - jw) + beta * up_term + gamma * qty_term
+    rows, cols = _assign_stack(cost)
+
+    if n <= 8 and m <= 8:
+        total = _sum_left_to_right(a_a)
+        matched = total if n <= m else _sum_left_to_right(np.take_along_axis(a_a, rows, 1))
+    else:
+        total = np.add.reduce(a_a, axis=1)
+        matched = total if n <= m else np.array([
+            np.add.reduce(amts[list(set(r))]) for amts, r in zip(a_a, rows.tolist())
+        ])
+    unmatched = np.maximum(total - matched, 0.0)
+    frac = np.where(total != 0, unmatched / np.maximum(total, 1.0), 1.0)
+
+    diffs = np.sort(np.abs(np.take_along_axis(a_u, rows, 1) - np.take_along_axis(b_u, cols, 1)), 1)
+    k, h = diffs.shape[1], diffs.shape[1] // 2
+    med = diffs[:, h] if k % 2 else (diffs[:, h - 1] + diffs[:, h]) / 2.0
+    return np.stack([1.0 - frac, frac, np.full(n_b, float(n - k)), med], 1)
+
+
+def _sum_left_to_right(x: np.ndarray) -> np.ndarray:
+    """Row sums of a ``(B, k)`` array in Python ``sum`` order: 0 + x0 + x1 …"""
+    acc = np.zeros(len(x))
+    for j in range(x.shape[1]):
+        acc = acc + x[:, j]
+    return acc
 
 
 def line_assign_features_arrays(
@@ -421,178 +565,14 @@ def line_assign_features_arrays(
     beta: float = 0.2,
     gamma: float = 0.1,
 ) -> tuple[float, float, float, float]:
-    """Array-native core of the line-matching features.
-
-    Takes the four per-line columns of each side as parallel arrays — the
-    shape the Arrow boundary hands over when the payload ships
-    ``array<string>``/``array<double>`` columns instead of
-    ``array<struct>`` (struct cells materialize a Python dict per line;
-    flat arrays arrive as numpy, ~an order of magnitude cheaper). Returns
+    """Line-matching features of ONE pair from its per-line arrays:
     (line_coverage_pct, unmatched_amount_frac, count_new_items,
-    median_unit_price_diff). Math is identical to the dict wrapper below,
-    which reference fixtures pin.
-    """
-    n, m = len(a_desc), len(b_desc)
-    if n <= 8 and m <= 8 and n and m:
-        # the overwhelmingly common shape; ~15 small-array numpy calls per
-        # pair cost more than the math itself — plain Python floats win.
-        # The amount sums are Python's left-to-right sum. numpy's
-        # add.reduce matches that order only below 8 elements: from 8 on
-        # it adds in 8 interleaved partial sums, so at n=8 the two totals
-        # can differ ([1e16, 1, -1e16, 1, 1, 1, 1, 1]: numpy 4.0, sum
-        # 5.0). The features still agree whenever every a-line is matched
-        # (n ≤ m): both paths then subtract the same sum from itself, so
-        # the unmatched amount is exactly 0. Only at n=8 > m can
-        # unmatched_amount_frac differ from a numpy-summed total.
-        return _line_assign_small(a_desc, a_qty, a_up, a_amt, b_desc, b_qty, b_up,
-                                  alpha, beta, gamma)
-    a_amt0 = _nan_to_zero(a_amt, n)
-    if n == 0 or m == 0:
-        total_amount = float(a_amt0.sum())
-        frac = float(total_amount / max(total_amount, 1.0)) if total_amount else 1.0
-        return 0.0, frac, float(n), total_amount
-
-    a_up0 = _nan_to_zero(a_up, n)
-    b_up0 = _nan_to_zero(b_up, m)
-    a_qty0 = _nan_to_zero(a_qty, n)
-    b_qty0 = _nan_to_zero(b_qty, m)
-
-    up_term = np.minimum(
-        np.abs(a_up0[:, None] - b_up0[None, :]) / np.maximum(np.abs(a_up0)[:, None], 1.0), 5.0
-    )
-    qty_term = np.minimum(
-        np.abs(a_qty0[:, None] - b_qty0[None, :]) / np.maximum(np.abs(a_qty0)[:, None], 1.0), 5.0
-    )
-    desc_cost = np.empty((n, m))
-    for i in range(n):
-        da = a_desc[i] or ""
-        row = desc_cost[i]
-        for j in range(m):
-            row[j] = 1.0 - jw_cached(da, b_desc[j] or "")
-
-    cost = alpha * desc_cost + beta * up_term + gamma * qty_term
-    # exact fast paths for degenerate shapes (very common: 1-line docs).
-    # Tie-break contract: FIRST index among equal-cost minima — np.argmin,
-    # the small-path ``min(range, key=...)`` and the JV solver's strict-<
-    # scan all pick the first minimum, so every path yields the same
-    # assignment on exact cost ties (pinned by
-    # tests/test_kernels.py::test_assignment_tie_break_first_min).
-    if n == 1:
-        row_ind = np.zeros(1, dtype=np.int64)
-        col_ind = np.array([int(np.argmin(cost[0]))], dtype=np.int64)
-    elif m == 1:
-        row_ind = np.array([int(np.argmin(cost[:, 0]))], dtype=np.int64)
-        col_ind = np.zeros(1, dtype=np.int64)
-    else:
-        row_ind, col_ind = linear_sum_assignment(cost)
-    matched = set(row_ind.tolist())
-
-    total_amount = float(a_amt0.sum())
-    matched_amount = float(a_amt0[list(matched)].sum()) if matched else 0.0
-    unmatched_amount = max(total_amount - matched_amount, 0.0)
-    frac = float(unmatched_amount / max(total_amount, 1.0)) if total_amount else 1.0
-
-    diffs = np.abs(a_up0[row_ind] - b_up0[col_ind])
-    return float(1.0 - frac), frac, float(max(0, n - len(matched))), _median_small(diffs)
-
-
-def _fz(v) -> float:
-    """float with NULL/NaN ⇒ 0.0 (scalar form of _nan_to_zero)."""
-    if v is None:
-        return 0.0
-    v = float(v)
-    return 0.0 if v != v else v
-
-
-def _line_assign_small(
-    a_desc, a_qty, a_up, a_amt, b_desc, b_qty, b_up, alpha, beta, gamma
-) -> tuple[float, float, float, float]:
-    """numpy-free path for ≤8×8 line matrices — same math, same JW cache,
-    same JV solver (``_lsa_small``), python-float arithmetic."""
-    n, m = len(a_desc), len(b_desc)
-    a_amt0 = [_fz(v) for v in a_amt]
-    a_up0 = [_fz(v) for v in a_up]
-    b_up0 = [_fz(v) for v in b_up]
-    a_qty0 = [_fz(v) for v in a_qty]
-    b_qty0 = [_fz(v) for v in b_qty]
-    # hoist the b-side null-cleanup out of the cell loop: inline it re-ran
-    # ``b_desc[j] or ""`` n times per j
-    b_descs0 = [d or "" for d in b_desc]
-    cache = _JW_CACHE
-    cost = []
-    for i in range(n):
-        da = a_desc[i] or ""
-        aui = a_up0[i]
-        aqi = a_qty0[i]
-        den_u = abs(aui) if abs(aui) > 1.0 else 1.0
-        den_q = abs(aqi) if abs(aqi) > 1.0 else 1.0
-        row = []
-        for j in range(m):
-            db = b_descs0[j]
-            key = (db, da) if da > db else (da, db)
-            jw = cache.get(key)
-            if jw is None:
-                jw = jw_cached(da, db)
-            u = abs(aui - b_up0[j]) / den_u
-            if u > 5.0:
-                u = 5.0
-            q = abs(aqi - b_qty0[j]) / den_q
-            if q > 5.0:
-                q = 5.0
-            row.append(alpha * (1.0 - jw) + beta * u + gamma * q)
-        cost.append(row)
-
-    if n == 1:
-        best = min(range(m), key=lambda j: cost[0][j])
-        row_ind, col_ind = [0], [best]
-    elif m == 1:
-        best = min(range(n), key=lambda i: cost[i][0])
-        row_ind, col_ind = [best], [0]
-    elif n <= m:
-        assigned = _lsa_small(cost, n, m)
-        pairs_ = sorted((assigned[j] - 1, j - 1) for j in range(1, m + 1) if assigned[j])
-        row_ind = [p[0] for p in pairs_]
-        col_ind = [p[1] for p in pairs_]
-    else:
-        cost_t = [[cost[i][j] for i in range(n)] for j in range(m)]
-        assigned = _lsa_small(cost_t, m, n)
-        pairs_ = sorted((assigned[j] - 1, j - 1) for j in range(1, n + 1) if assigned[j])
-        row_ind = [p[1] for p in pairs_]
-        col_ind = [p[0] for p in pairs_]
-        order = sorted(range(len(row_ind)), key=lambda k: row_ind[k])
-        row_ind = [row_ind[k] for k in order]
-        col_ind = [col_ind[k] for k in order]
-
-    total_amount = float(sum(a_amt0))
-    matched = set(row_ind)
-    matched_amount = float(sum(a_amt0[i] for i in sorted(matched))) if matched else 0.0
-    unmatched_amount = total_amount - matched_amount
-    if unmatched_amount < 0.0:
-        unmatched_amount = 0.0
-    frac = float(unmatched_amount / max(total_amount, 1.0)) if total_amount else 1.0
-
-    diffs = sorted(abs(a_up0[i] - b_up0[j]) for i, j in zip(row_ind, col_ind))
-    k = len(diffs)
-    if k == 0:
-        med = 0.0
-    elif k % 2:
-        med = float(diffs[k // 2])
-    else:
-        med = float((diffs[k // 2 - 1] + diffs[k // 2]) / 2.0)
-    return float(1.0 - frac), frac, float(max(0, n - len(matched))), med
-
-
-def _median_small(diffs: np.ndarray) -> float:
-    """np.median semantics (mean of the two middles for even n) without
-    np.median's ~55 µs small-array overhead."""
-    k = len(diffs)
-    if k == 0:
-        return 0.0
-    s = sorted(diffs.tolist())
-    h = k // 2
-    if k % 2:
-        return float(s[h])
-    return float((s[h - 1] + s[h]) / 2.0)
+    median_unit_price_diff). The B=1 case of ``line_assign_batch``."""
+    feats = line_assign_batch(
+        [a_desc], [a_qty], [a_up], [a_amt], [b_desc], [b_qty], [b_up],
+        alpha=alpha, beta=beta, gamma=gamma,
+    )[0]
+    return tuple(float(x) for x in feats)
 
 
 def line_assign_features(
@@ -608,7 +588,7 @@ def line_assign_features(
     ``desc_norm``, ``qty``, ``unit_price``, ``amount``. Either side empty
     triggers the degenerate branch (:54-65). Thin dict-API wrapper over
     ``line_assign_features_arrays`` (tests and the reference fixtures use
-    this form; the pair kernel calls the array form directly).
+    this form; the pair kernel scores whole batches).
     """
     def unpack(lines, with_amt):
         descs = [x.get("desc_norm") for x in lines]
@@ -618,10 +598,6 @@ def line_assign_features(
             return descs, qty, up
         return descs, qty, up, [_f(x.get("amount")) for x in lines]
 
-    # the b-side amounts never enter the math (reference app/features.py
-    # reads only the A side's amounts for the unmatched fraction), so the
-    # array form does not take them — and the pair kernel does not ship
-    # them across Arrow
     cov, frac, new_items, med = line_assign_features_arrays(
         *unpack(a_lines, True), *unpack(b_lines, False),
         alpha=alpha, beta=beta, gamma=gamma

@@ -69,10 +69,9 @@ def _pair_kernel_fn(
     a_descs: pd.Series, a_qtys: pd.Series, a_ups: pd.Series, a_amts: pd.Series,
     b_descs: pd.Series, b_qtys: pd.Series, b_ups: pd.Series,
 ) -> pd.DataFrame:
-    """All Python-side pair features in ONE Arrow crossing:
+    """All Python-side pair features of one Arrow batch in ONE crossing:
 
-    - invnum_edit = 1 − JaroWinkler (app/features.py:39), memoized per
-      worker (every doc recurs across its ≤200 candidates),
+    - invnum_edit = 1 − JaroWinkler (app/features.py:39),
     - text_cosine = Dice over distinct char-3-grams of the ' '-joined
       desc_norm blobs (app/main.py:290-296) — the blob is rebuilt here
       from line_descs (' '-joined, nulls as '') so the same characters
@@ -80,59 +79,27 @@ def _pair_kernel_fn(
     - Hungarian line-assignment features (app/features.py:47-101) over the
       flat per-line arrays.
 
-    Work stays batch-local — no shuffle; results land in preallocated
-    numpy columns (no per-row dict churn).
+    The batch is scored at once, not row by row: ``K.line_assign_batch``
+    flattens the line arrays, dedupes the batch's description pairs
+    against the worker's Jaro-Winkler cache and solves each line-count
+    shape as one lockstep cost stack; ``K.jw_pairs`` does the same dedupe
+    for the invoice numbers. Only text_cosine stays a per-row loop. Work
+    stays batch-local (no shuffle), and each row's features are the
+    ones it gets scored alone.
     """
-    k = len(a_inv)
-    empty: list = []
-    out = {name: np.empty(k) for name in (
-        "invnum_edit", "text_cosine", "line_coverage_pct",
-        "unmatched_amount_frac", "count_new_items", "median_unit_price_diff",
-    )}
-    # warm the worker-global JW cache with ONE vectorized evaluation of
-    # every distinct string pair this batch STILL MISSES (invnums + the
-    # full desc-cost grids) — the feature loop below then only does dict
-    # hits. The membership test is inline: on a warm worker (reused across
-    # tasks) nearly every key hits, and collecting only the misses skips
-    # building a ~16·pairs-element key set plus jw_warm_cache's second
-    # full scan of it, per batch (~20 µs/pair of pure bookkeeping).
-    cache = K._JW_CACHE
-    jw_key = K.jw_key
-    keys = set()
-    for ai, bi in zip(a_inv.tolist(), b_inv.tolist()):
-        kk = jw_key(ai or "", bi or "")
-        if kk not in cache:
-            keys.add(kk)
-    for ad, bd in zip(a_descs, b_descs):
-        if ad is None or bd is None or len(ad) == 0 or len(bd) == 0:
-            continue
-        b_clean = [d or "" for d in bd]
-        for da in ad:
-            da = da or ""
-            for db in b_clean:
-                kk = jw_key(da, db)
-                if kk not in cache:
-                    keys.add(kk)
-    if keys:
-        K.jw_warm_cache(keys)
-    blob = _blob_of
-    it = zip(
-        a_inv.tolist(), b_inv.tolist(),
-        a_descs, a_qtys, a_ups, a_amts, b_descs, b_qtys, b_ups,
+    lines = K.line_assign_batch(a_descs, a_qtys, a_ups, a_amts, b_descs, b_qtys, b_ups)
+    text = np.fromiter(
+        (K.dice_3gram(_blob_of(ad), _blob_of(bd)) for ad, bd in zip(a_descs, b_descs)),
+        np.float64, count=len(a_descs),
     )
-    for i, (ai, bi, ad, aq, au, aa, bd, bq, bu) in enumerate(it):
-        ab, bb = blob(ad), blob(bd)
-        cov, frac, new_items, med = K.line_assign_features_arrays(
-            ad if ad is not None else empty, aq, au, aa,
-            bd if bd is not None else empty, bq, bu,
-        )
-        out["line_coverage_pct"][i] = cov
-        out["unmatched_amount_frac"][i] = frac
-        out["count_new_items"][i] = new_items
-        out["median_unit_price_diff"][i] = med
-        out["invnum_edit"][i] = 1.0 - K.jw_cached(ai or "", bi or "")
-        out["text_cosine"][i] = K.dice_3gram(ab or "", bb or "")
-    return pd.DataFrame(out)
+    return pd.DataFrame({
+        "invnum_edit": 1.0 - K.jw_pairs(a_inv, b_inv),
+        "text_cosine": text,
+        "line_coverage_pct": lines[:, 0],
+        "unmatched_amount_frac": lines[:, 1],
+        "count_new_items": lines[:, 2],
+        "median_unit_price_diff": lines[:, 3],
+    })
 
 
 def _blob_of(descs) -> str:
