@@ -52,18 +52,14 @@ def route_cases(
     catalog: ParquetCatalog, verdicts: DataFrame, run_ts,
     buckets: int = CASES_BUCKETS,
 ) -> int:
-    """MERGE the run's open cases into the cases table.
+    """MERGE the run's open cases into the cases table; returns the
+    snapshot id of the merge.
 
     Existing cases keep their original ``created_at`` (the reference's ON
     CONFLICT clause updates only status/sla_due/updated_at); everything
-    else is refreshed. Keyed on doc_id — idempotent under re-runs.
-
-    Scale shape: the table is doc_id-bucketed copy-on-write, so both the
-    created_at-preservation read AND the merge rewrite touch only the
-    buckets this run's flagged docs hash into — O(touched buckets) per
-    run against an O(all-history) case table. A pre-bucketing table (or a
-    different bucket count) falls back to a full read + one-time layout
-    migration inside merge_upsert.
+    else is refreshed. Keyed on doc_id — idempotent under re-runs. The
+    table is doc_id-bucketed, so a run reads and rewrites only the buckets
+    its flagged docs hash into (``ParquetCatalog.merge_upsert``).
 
     Note on ids: case_id is ``case_`` + sha2(doc_id)[:32] (was [:12]
     before round 4 — 48 bits hits birthday collisions at ~17M cases).
@@ -71,45 +67,10 @@ def route_cases(
     (and created_at) but present the new id format on their next re-flag;
     external consumers must track cases by doc_id, which is stable.
     """
-    fresh = open_cases(verdicts, run_ts)
-    if catalog.exists(CASES_TABLE):
-        spec = catalog.table_meta(CASES_TABLE).get("bucket_spec")
-        existing = None
-        if spec and spec.get("keys") == ["doc_id"] and spec.get("buckets") == buckets:
-            touched = [
-                r["_b"]
-                for r in fresh.select(
-                    catalog._bucket_col(["doc_id"], buckets).alias("_b")
-                ).distinct().collect()
-            ]
-            existing = catalog.read_buckets(CASES_TABLE, touched)
-            # None ⇒ no prior rows in any touched bucket ⇒ nothing to preserve
-        elif spec is None or spec.get("keys") != ["doc_id"] or spec.get("buckets") != buckets:
-            existing = catalog.read(CASES_TABLE)
-            if "_bucket" in existing.columns:
-                existing = existing.drop("_bucket")
-        if existing is not None:
-            existing = existing.select(
-                F.col("doc_id").alias("_doc_id"), F.col("created_at").alias("_created_at")
-            )
-            # NO broadcast: the cases table grows one row per flagged doc
-            # across ALL runs — O(history), the same unbounded-broadcast ban
-            # as the dup rollup (plans/validate.py). shuffle_hash keys both
-            # sides on doc_id: bounded exchanges, no driver collect.
-            fresh = (
-                fresh.join(
-                    existing.hint("shuffle_hash"),
-                    fresh["doc_id"] == existing["_doc_id"],
-                    "left",
-                )
-                .withColumn("created_at", F.coalesce("_created_at", "created_at"))
-                .drop("_doc_id", "_created_at")
-            )
-    # count BEFORE the merge: the merge's overwrite swaps the table's data
-    # files, invalidating this plan's reference to the pre-merge snapshot
-    n = fresh.count()
-    catalog.merge_upsert(CASES_TABLE, fresh, ["doc_id"], buckets=buckets)
-    return n
+    return catalog.merge_upsert(
+        CASES_TABLE, open_cases(verdicts, run_ts), ["doc_id"], buckets=buckets,
+        on_match={"created_at": lambda new, old: F.coalesce(old, new)},
+    )
 
 
 def review_queue(verdicts: DataFrame, cases: DataFrame | None = None) -> DataFrame:

@@ -59,6 +59,11 @@ def get_spark(
         # compiles none. A static conf: Spark sizes the cache once per JVM,
         # so it must be set before the first session starts.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers whole-stage codegen stages in the order it creates
+        # query stages, which varies with task timing. With the id in the
+        # class name, the same stage code under a new id is a new cache
+        # key: 3 of 22 warm runs recompiled 3-7 stages (none of 14 without)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SIEVE_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")

@@ -5,15 +5,19 @@ jar, so the engine is format-agnostic behind this thin catalog exposing the
 three Iceberg capabilities it actually uses (SURVEY.md §7.0):
 
 - ``append(name, df)``      ≈ ``df.writeTo(t).append()``
-- ``merge_upsert(...)``     ≈ ``MERGE INTO t USING s ON keys WHEN MATCHED
-  UPDATE ... WHEN NOT MATCHED INSERT`` (S4/S5/S7/S11)
+- ``merge_upsert(name, s, keys, on_match=...)`` ≈ ``MERGE INTO t USING s
+  ON keys WHEN MATCHED UPDATE SET ... WHEN NOT MATCHED INSERT``
+  (S4/S5/S7/S11); ``on_match`` is the SET list for columns whose stored
+  value also depends on the target row's
 - snapshot manifest + ``read_since(snapshot)`` ≈ Iceberg incremental reads
   between snapshots (the checkpoint/resume story, SURVEY.md §2.9)
 
 Layout per table: ``<root>/<name>/data/part-*.parquet`` plus
 ``<root>/<name>/snapshots/N.json`` manifests listing the files each
-snapshot added. Appends write new files only (no rewrite); merge rewrites
-the table into a fresh data generation and records a full snapshot.
+snapshot added. Appends write new files only (no rewrite); a merge
+rewrites the table into a fresh data generation, or, on a key-bucketed
+table, only the ``data/_bucket=N`` directories the source touches, and
+records a full snapshot. Only this module knows the bucket layout.
 On a real deployment this module is swapped for Iceberg catalog calls —
 every caller goes through this API.
 """
@@ -26,8 +30,10 @@ import re
 import shutil
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class ParquetCatalog:
@@ -105,10 +111,13 @@ class ParquetCatalog:
 
     # -- operations ------------------------------------------------------
     def read(self, name: str) -> DataFrame:
-        # appends land in gen-* subdirs; recursive lookup covers both layouts
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self._data_dir(name)
-        )
+        return self._scan(self._data_dir(name))
+
+    def _scan(self, *paths: str) -> DataFrame:
+        # appends land in gen-* subdirs and buckets in _bucket=* subdirs;
+        # recursive lookup covers every layout and turns partition
+        # discovery off, so no _bucket column is ever read
+        return self.spark.read.option("recursiveFileLookup", "true").parquet(*paths)
 
     def append(self, name: str, df: DataFrame) -> int:
         """Append-only write (S9/S10 decision + audit sinks): stage new
@@ -124,9 +133,14 @@ class ParquetCatalog:
         return self._record_snapshot(name, files, "append")
 
     def overwrite(self, name: str, df: DataFrame) -> int:
+        return self._swap(name, df, None, "overwrite")
+
+    def _swap(self, name: str, df: DataFrame, spec: dict | None, op: str) -> int:
+        """Write ``df`` as a new data generation (bucketed by ``spec``, see
+        ``merge_upsert``) and swap it in for the whole table."""
         gen = uuid.uuid4().hex[:12]
         staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-        df.write.mode("overwrite").parquet(staged)
+        self._write(df, staged, spec)
         data = self._data_dir(name)
         backup = os.path.join(self._table_dir(name), f"old-{gen}")
         if os.path.isdir(data):
@@ -137,12 +151,35 @@ class ParquetCatalog:
         # the table forever — O(runs × size) storage. The newest backup is
         # kept one generation so an in-flight reader of the pre-swap files
         # is not yanked mid-scan.
-        self._gc_generations(name, keep={f"old-{gen}", f"stage-{gen}"})
-        files = [f for f in os.listdir(data) if f.endswith(".parquet")]
+        self._gc_generations(name, keep={f"old-{gen}"})
+        self._set_spec(name, spec)
+        return self._record_snapshot(name, self._files(data), op)
+
+    def _rewrite_buckets(self, name: str, df: DataFrame, spec: dict) -> int:
+        """Write ``df`` bucketed by ``spec`` and move each bucket it holds
+        over the table's copy of that bucket; files of the other buckets
+        stay as they are. Creates the table when it is absent."""
+        gen = uuid.uuid4().hex[:12]
+        staged = os.path.join(self._table_dir(name), f"stage-{gen}")
+        self._write(df, staged, spec)
+        data = self._data_dir(name)
+        os.makedirs(data, exist_ok=True)
+        for b in os.listdir(staged):
+            if b.startswith("_bucket="):
+                shutil.rmtree(os.path.join(data, b), ignore_errors=True)
+                os.rename(os.path.join(staged, b), os.path.join(data, b))
+        shutil.rmtree(staged, ignore_errors=True)
+        self._set_spec(name, spec)
+        return self._record_snapshot(name, self._files(data), "merge-bucketed")
+
+    def _set_spec(self, name: str, spec: dict | None) -> None:
         meta = self.table_meta(name)
-        if meta.pop("bucket_spec", None) is not None:  # layout destroyed
+        if meta.get("bucket_spec") != spec:
+            if spec is None:
+                del meta["bucket_spec"]
+            else:
+                meta["bucket_spec"] = spec
             self._write_meta(name, meta)
-        return self._record_snapshot(name, files, "overwrite")
 
     def _gc_generations(self, name: str, keep: set[str]) -> None:
         """Remove retired ``old-*`` backups and orphaned ``stage-*``
@@ -155,165 +192,110 @@ class ParquetCatalog:
                 shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
 
     def merge_upsert(
-        self, name: str, source: DataFrame, keys: list[str], buckets: int | None = None
+        self,
+        name: str,
+        source: DataFrame,
+        keys: list[str],
+        buckets: int | None = None,
+        on_match: dict[str, Callable[[Column, Column], Column]] | None = None,
     ) -> int:
         """MERGE semantics (S4/S7): source rows replace same-key target
         rows; unmatched source rows insert. Implemented as anti-join +
         union + rewrite (what Iceberg copy-on-write MERGE does).
 
+        ``on_match`` maps a column to ``fn(new, old) -> Column``, the value
+        the source row stores (``WHEN MATCHED UPDATE SET``): ``old`` is the
+        target row's value, NULL when the key is new. Columns it does not
+        name take the source's value.
+
         ``buckets``: key-bucketed copy-on-write — the table is laid out as
-        ``bucket=pmod(xxhash64(key), buckets)`` hive partitions and a merge
-        rewrites ONLY the buckets the source touches (Iceberg's
-        bucket-transform partitioning + merge-on-read compaction analog).
-        A small update against a huge registry then costs O(touched
-        buckets), not O(table) — the property that keeps S7 registry
-        maintenance and streaming micro-batch merges viable at 10^12 docs.
-        The full rewrite remains the default for small dimension tables.
+        ``_bucket=pmod(xxhash64(keys), buckets)`` directories, one file
+        each, and a merge reads and rewrites ONLY the buckets the source
+        touches (Iceberg's bucket-transform partitioning analog). A small
+        update against a huge table then costs O(touched buckets), not
+        O(table). The full rewrite remains the default for small tables.
 
         The bucket spec is PERSISTED in table metadata and validated on
         every merge: merging with a different bucket count (or into a
-        table created non-bucketed) triggers a one-time full migration to
-        the requested layout instead of silently skipping the anti-join
-        and leaving stale same-key rows behind; merging with
-        ``buckets=None`` into a bucketed table routes through the stored
-        spec rather than flattening the layout.
+        table created non-bucketed) reads the whole table and migrates it
+        to the requested layout, so no stale same-key row is left behind;
+        merging with ``buckets=None`` into a bucketed table routes through
+        the stored spec rather than flattening the layout.
         """
-        meta = self.table_meta(name)
-        stored = meta.get("bucket_spec")
-        if buckets is None and stored and stored.get("keys") == keys:
-            buckets = stored["buckets"]
-        if buckets is not None:
-            migrate = self.exists(name) and (
-                stored is None
-                or stored.get("keys") != keys
-                or stored.get("buckets") != buckets
-            )
-            sid = self._merge_upsert_bucketed(name, source, keys, buckets, migrate)
-            meta["bucket_spec"] = {"keys": keys, "buckets": buckets}
-            self._write_meta(name, meta)
-            return sid
-        if not self.exists(name):
-            return self.overwrite(name, source)
-        target = self.read(name)
-        if "_bucket" in target.columns:  # un-spec'd bucketed table: de-layout
-            target = target.drop("_bucket")
-        kept = target.join(source.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(source, allowMissingColumns=True)
-        return self.overwrite(name, merged)
+        stored = self.table_meta(name).get("bucket_spec")
+        if buckets is None and stored and stored["keys"] == keys:
+            spec = stored
+        else:
+            spec = None if buckets is None else {"keys": keys, "buckets": buckets}
+        exists = self.exists(name)
+        in_place = spec is not None and (stored == spec or not exists)
+        # 1. the target rows the source can match
+        prior = None
+        if in_place and exists:
+            data = self._data_dir(name)
+            touched = source.select(self._bucket_col(keys, spec["buckets"])).distinct()
+            paths = [os.path.join(data, f"_bucket={r[0]}") for r in touched.collect()]
+            paths = [p for p in paths if os.path.isdir(p)]
+            if paths:
+                prior = self._scan(*paths)
+        elif exists:
+            prior = self.read(name)
+        # 2. the unmatched target rows plus the source as it is stored
+        merged = self._apply_on_match(source, prior, keys, on_match or {})
+        if prior is not None:
+            kept = prior.join(source.select(*keys).distinct(), keys, "left_anti")
+            merged = kept.unionByName(merged, allowMissingColumns=True)
+        # 3. rewrite the touched buckets, or swap in the whole table
+        if in_place:
+            return self._rewrite_buckets(name, merged, spec)
+        op = "overwrite" if spec is None else "merge-bucketed-migrate"
+        return self._swap(name, merged, spec, op)
+
+    @staticmethod
+    def _apply_on_match(
+        source: DataFrame, prior: DataFrame | None, keys: list[str], on_match: dict
+    ) -> DataFrame:
+        if not on_match:
+            return source
+        if prior is None:
+            old = {c: F.lit(None).cast(source.schema[c].dataType) for c in on_match}
+            joined = source
+        else:
+            # NO broadcast: the target is O(history) (cases, registry);
+            # shuffle_hash keys both sides on the merge keys
+            olds = prior.select(*keys, *[F.col(c).alias(f"_old_{c}") for c in on_match])
+            joined = source.join(olds.hint("shuffle_hash"), keys, "left")
+            old = {c: F.col(f"_old_{c}") for c in on_match}
+        return joined.select(*[
+            on_match[c](F.col(c), old[c]).alias(c) if c in on_match else c
+            for c in source.columns
+        ])
 
     @staticmethod
     def _bucket_col(keys: list[str], buckets: int):
-        from pyspark.sql import functions as F
-
         return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(buckets)).cast("int")
 
-    def _merge_upsert_bucketed(
-        self,
-        name: str,
-        source: DataFrame,
-        keys: list[str],
-        buckets: int,
-        migrate: bool = False,
-    ) -> int:
-        """Bucketed MERGE (see ``merge_upsert``). Each touched bucket is
-        written as one file (``_write_buckets``)."""
-        src = source.withColumn("_bucket", self._bucket_col(keys, buckets))
-        data = self._data_dir(name)
-        if not self.exists(name):
-            # a merge of an empty source leaves data/ holding no parquet
-            # file (only _SUCCESS), which exists() reports as absent; clear
-            # it so the rename below does not hit a non-empty directory
-            shutil.rmtree(data, ignore_errors=True)
-            gen = uuid.uuid4().hex[:12]
-            staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-            self._write_buckets(src, staged)
-            os.rename(staged, data)
-            files = self._bucket_files(data)
-            return self._record_snapshot(name, files, "merge-bucketed")
-        if migrate:
-            # layout mismatch (different bucket count, or a table written
-            # non-bucketed): one-time full merge + rewrite into the
-            # requested layout — every row lands in its correct bucket
-            target = self.read(name)
-            if "_bucket" in target.columns:
-                target = target.drop("_bucket")
-            kept = target.join(
-                source.select(*keys).distinct(), keys, "left_anti"
-            ).withColumn("_bucket", self._bucket_col(keys, buckets))
-            merged = kept.unionByName(src, allowMissingColumns=True)
-            gen = uuid.uuid4().hex[:12]
-            staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-            self._write_buckets(merged, staged)
-            backup = os.path.join(self._table_dir(name), f"old-{gen}")
-            os.rename(data, backup)
-            os.rename(staged, data)
-            self._gc_generations(name, keep={f"old-{gen}"})
-            return self._record_snapshot(
-                name, self._bucket_files(data), "merge-bucketed-migrate"
-            )
-        # rewrite ONLY the touched buckets: anti-join within the bucket subset
-        touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
-        old_paths = [
-            os.path.join(data, f"_bucket={b}")
-            for b in touched
-            if os.path.isdir(os.path.join(data, f"_bucket={b}"))
-        ]
-        if old_paths:
-            target = self.spark.read.option("basePath", data).parquet(*old_paths)
-            kept = target.drop("_bucket").join(
-                source.select(*keys).distinct(), keys, "left_anti"
-            ).withColumn("_bucket", self._bucket_col(keys, buckets))
-            merged = kept.unionByName(src, allowMissingColumns=True)
-        else:
-            merged = src
-        gen = uuid.uuid4().hex[:12]
-        staged = os.path.join(self._table_dir(name), f"stage-{gen}")
-        self._write_buckets(merged, staged)
-        for b in touched:
-            new_b = os.path.join(staged, f"_bucket={b}")
-            old_b = os.path.join(data, f"_bucket={b}")
-            if os.path.isdir(old_b):
-                shutil.rmtree(old_b)
-            if os.path.isdir(new_b):
-                os.rename(new_b, old_b)
-        shutil.rmtree(staged, ignore_errors=True)
-        return self._record_snapshot(name, self._bucket_files(data), "merge-bucketed")
-
-    def _write_buckets(self, df: DataFrame, path: str) -> None:
-        """Write ``df`` partitioned by ``_bucket``, one file per bucket.
-        Hash-repartitioning on the bucket puts each bucket in one task, and
-        every core writes; the explicit partition count matters, because
-        AQE coalesces a repartition without one into a single task."""
+    def _write(self, df: DataFrame, path: str, spec: dict | None) -> None:
+        """Write ``df`` to ``path``; with a bucket ``spec``, partitioned by
+        ``_bucket``, one file per bucket. Hash-repartitioning on the bucket
+        puts each bucket in one task, and every core writes; the explicit
+        partition count matters, because AQE coalesces a repartition
+        without one into a single task."""
+        if spec is None:
+            df.write.mode("overwrite").parquet(path)
+            return
         n = self.spark.sparkContext.defaultParallelism
-        df.repartition(n, "_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(path)
+        df.withColumn("_bucket", self._bucket_col(spec["keys"], spec["buckets"])).repartition(
+            n, "_bucket"
+        ).write.partitionBy("_bucket").mode("overwrite").parquet(path)
 
-    def _bucket_files(self, data: str) -> list[str]:
+    def _files(self, data: str) -> list[str]:
         out = []
         for root, _, files in os.walk(data):
             for f in files:
                 if f.endswith(".parquet"):
                     out.append(os.path.relpath(os.path.join(root, f), data))
         return sorted(out)
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucket-partitioned table (drops the layout column)."""
-        return self.read(name).drop("_bucket")
-
-    def read_buckets(self, name: str, bucket_ids: list[int]) -> DataFrame | None:
-        """Read ONLY the given buckets of a bucket-partitioned table —
-        manual partition pruning (the Iceberg bucket-transform scan-prune
-        analog). Returns None when none of the buckets exist yet."""
-        data = self._data_dir(name)
-        paths = [
-            os.path.join(data, f"_bucket={b}")
-            for b in bucket_ids
-            if os.path.isdir(os.path.join(data, f"_bucket={b}"))
-        ]
-        if not paths:
-            return None
-        return self.spark.read.option("basePath", data).parquet(*paths).drop("_bucket")
 
     def read_since(
         self, name: str, snapshot_id: int, until: int | None = None

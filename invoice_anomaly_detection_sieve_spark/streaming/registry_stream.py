@@ -60,14 +60,13 @@ def sink_registry(
 ):
     """foreachBatch sink merging each micro-batch into the catalog —
     idempotent under retries because merge_upsert replaces same-key rows
-    (the Iceberg-MERGE exactly-once pattern).
+    (the Iceberg-MERGE exactly-once pattern). A matched key widens its
+    stored [first_seen, last_seen] (app/main.py:169-185).
 
-    The registry is laid out in ``buckets`` key-hash buckets: a micro-batch
-    reads ONLY the previous values of the buckets it touches (manual
-    partition pruning) and the merge rewrites only those buckets — per
-    batch the cost is O(touched buckets), not O(registry), the property
-    that keeps a continuously-maintained registry viable at 10^12-doc
-    scale. (Round 1 re-read and rewrote the whole table every batch.)
+    The registry is laid out in ``buckets`` key-hash buckets, so a
+    micro-batch reads and rewrites only the buckets it touches — per batch
+    the cost is O(touched buckets), not O(registry), the property that
+    keeps a continuously-maintained registry viable at 10^12-doc scale.
     """
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -76,40 +75,10 @@ def sink_registry(
         merged = batch_df.groupBy("media_key").agg(
             F.min("first_seen").alias("first_seen"), F.max("last_seen").alias("last_seen")
         )
-        touched = [
-            r["_b"]
-            for r in merged.select(
-                catalog._bucket_col(["media_key"], buckets).alias("_b")
-            ).distinct().collect()
-        ]
-        prev = None
-        if catalog.exists(table):
-            spec = catalog.table_meta(table).get("bucket_spec")
-            if spec and spec.get("keys") == ["media_key"] and spec.get("buckets") == buckets:
-                prev = catalog.read_buckets(table, touched)
-            else:
-                # layout mismatch (table written non-bucketed, or the
-                # stream restarted with a different bucket count): pruned
-                # paths would hash into the WRONG directories and miss
-                # existing keys, silently regressing first_seen to the
-                # current batch. Read the full table once; merge_upsert
-                # migrates the layout on this write and pruning resumes.
-                prev = catalog.read(table)
-        if prev is not None:
-            prev = prev.select(
-                "media_key",
-                F.col("first_seen").alias("_pf"),
-                F.col("last_seen").alias("_pl"),
-            )
-            merged = (
-                merged.join(prev, "media_key", "left")
-                .select(
-                    "media_key",
-                    F.least("first_seen", "_pf").alias("first_seen"),
-                    F.greatest("last_seen", "_pl").alias("last_seen"),
-                )
-            )
-        catalog.merge_upsert(table, merged, ["media_key"], buckets=buckets)
+        catalog.merge_upsert(
+            table, merged, ["media_key"], buckets=buckets,
+            on_match={"first_seen": F.least, "last_seen": F.greatest},
+        )
 
     return (
         updates.writeStream.outputMode("update")

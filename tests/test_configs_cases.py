@@ -57,10 +57,9 @@ def test_route_cases_idempotent_and_preserves_created_at(spark, tmp_path):
     catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
     v1 = _verdicts(spark, [("P1", "d1", "HOLD", 90.0), ("P1", "d2", "REVIEW", 55.0),
                            ("P1", "d3", "PASS", 1.0)])
-    n = C.route_cases(catalog, v1, "2025-01-01 00:00:00")
-    assert n == 2  # PASS opens no case (app/case.py:13)
+    C.route_cases(catalog, v1, "2025-01-01 00:00:00")
     first = {r["doc_id"]: r.asDict() for r in catalog.read(C.CASES_TABLE).collect()}
-    assert set(first) == {"d1", "d2"}
+    assert set(first) == {"d1", "d2"}  # PASS opens no case (app/case.py:13)
     assert all(r["status"] == "OPEN" for r in first.values())
     assert str(first["d1"]["sla_due"]).startswith("2025-01-03")  # +2d SLA
 
@@ -86,12 +85,12 @@ def test_route_cases_after_a_run_that_routed_none(spark, tmp_path):
     the next run's bucketed create must replace it, not fail on renaming
     onto a non-empty directory."""
     catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
-    assert C.route_cases(catalog, _verdicts(spark, [("P1", "d1", "PASS", 1.0)]),
-                         "2025-01-01 00:00:00") == 0
+    C.route_cases(catalog, _verdicts(spark, [("P1", "d1", "PASS", 1.0)]),
+                  "2025-01-01 00:00:00")
     assert not catalog.exists(C.CASES_TABLE)
-    assert C.route_cases(catalog, _verdicts(spark, [("P1", "d2", "HOLD", 90.0)]),
-                         "2025-01-02 00:00:00") == 1
-    assert [r["doc_id"] for r in catalog.read_bucketed(C.CASES_TABLE).collect()] == ["d2"]
+    C.route_cases(catalog, _verdicts(spark, [("P1", "d2", "HOLD", 90.0)]),
+                  "2025-01-02 00:00:00")
+    assert [r["doc_id"] for r in catalog.read(C.CASES_TABLE).collect()] == ["d2"]
 
 
 def test_review_queue_order(spark):
@@ -172,7 +171,7 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
         [(f"k{i}", i) for i in range(200)], "media_key string, v long"
     )
     catalog.merge_upsert("reg", base, ["media_key"], buckets=8)
-    assert catalog.read_bucketed("reg").count() == 200
+    assert catalog.read("reg").count() == 200
 
     data = os.path.join(str(tmp_path / "wh"), "reg", "data")
     def bucket_state():
@@ -193,7 +192,7 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     catalog.merge_upsert("reg", delta, ["media_key"], buckets=8)
 
     after = bucket_state()
-    got = {r["media_key"]: r["v"] for r in catalog.read_bucketed("reg").collect()}
+    got = {r["media_key"]: r["v"] for r in catalog.read("reg").collect()}
     assert len(got) == 201 and got["k1"] == 111 and got["k2"] == 222 and got["new1"] == 1
     assert got["k5"] == 5  # untouched key survives
     untouched = [b for b in before if int(b.split("=")[1]) not in touched]
@@ -237,18 +236,18 @@ def test_bucketed_merge_migrates_mismatched_layout(spark, tmp_path):
     cat.merge_upsert("t", df1, ["k"])  # plain, non-bucketed
     upd = spark.createDataFrame([("a", 2), ("e", 2)], "k string, v int")
     cat.merge_upsert("t", upd, ["k"], buckets=8)  # layout mismatch -> migrate
-    rows = {r["k"]: r["v"] for r in cat.read_bucketed("t").collect()}
+    rows = {r["k"]: r["v"] for r in cat.read("t").collect()}
     assert rows == {"a": 2, "b": 1, "c": 1, "d": 1, "e": 2}  # no stale 'a'
     assert cat.table_meta("t")["bucket_spec"] == {"keys": ["k"], "buckets": 8}
     # different bucket count -> migrate again, still exactly-one-row-per-key
     cat.merge_upsert("t", spark.createDataFrame([("b", 3)], "k string, v int"),
                      ["k"], buckets=4)
-    rows = {r["k"]: r["v"] for r in cat.read_bucketed("t").collect()}
+    rows = {r["k"]: r["v"] for r in cat.read("t").collect()}
     assert rows == {"a": 2, "b": 3, "c": 1, "d": 1, "e": 2}
     assert cat.table_meta("t")["bucket_spec"]["buckets"] == 4
     # buckets=None against a bucketed table routes through the stored spec
     cat.merge_upsert("t", spark.createDataFrame([("c", 4)], "k string, v int"), ["k"])
-    rows = {r["k"]: r["v"] for r in cat.read_bucketed("t").collect()}
+    rows = {r["k"]: r["v"] for r in cat.read("t").collect()}
     assert rows == {"a": 2, "b": 3, "c": 4, "d": 1, "e": 2}
     assert cat.table_meta("t")["bucket_spec"]["buckets"] == 4
 
@@ -292,10 +291,92 @@ def test_route_cases_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
     assert all(len(files) == 1 for files in after.values())
 
     rows = {r["doc_id"]: r.asDict()
-            for r in catalog.read_bucketed(C.CASES_TABLE).collect()}
+            for r in catalog.read(C.CASES_TABLE).collect()}
     assert len(rows) == 41
     assert str(rows["d1"]["created_at"]).startswith("2025-01-01")  # preserved
     assert str(rows["d1"]["updated_at"]).startswith("2025-02-01")
     assert rows["d1"]["decision"] == "REVIEW"
     assert str(rows["dX"]["created_at"]).startswith("2025-02-01")
     assert str(rows["d5"]["updated_at"]).startswith("2025-01-01")  # untouched row
+
+
+@pytest.mark.parametrize("prior_buckets", [8, None])
+def test_route_cases_keeps_created_at_across_layouts(spark, tmp_path, prior_buckets):
+    """A cases table written with another bucket count, or non-bucketed,
+    is read whole and migrated to the requested layout; matched cases
+    keep their created_at through the migration."""
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    v1 = _verdicts(spark, [("P1", f"d{i}", "HOLD", 90.0) for i in range(20)])
+    catalog.merge_upsert(C.CASES_TABLE, C.open_cases(v1, "2025-01-01 00:00:00"),
+                         ["doc_id"], buckets=prior_buckets)
+
+    v2 = _verdicts(spark, [("P1", "d1", "REVIEW", 60.0), ("P1", "dX", "HOLD", 99.0)])
+    C.route_cases(catalog, v2, "2025-02-01 00:00:00", buckets=4)
+    rows = {r["doc_id"]: r.asDict() for r in catalog.read(C.CASES_TABLE).collect()}
+    assert len(rows) == 21
+    assert str(rows["d1"]["created_at"]).startswith("2025-01-01")  # kept
+    assert str(rows["d1"]["updated_at"]).startswith("2025-02-01")
+    assert rows["d1"]["decision"] == "REVIEW"
+    assert str(rows["dX"]["created_at"]).startswith("2025-02-01")
+    assert str(rows["d5"]["updated_at"]).startswith("2025-01-01")
+    assert catalog.table_meta(C.CASES_TABLE)["bucket_spec"] == {
+        "keys": ["doc_id"], "buckets": 4}
+
+
+def test_merge_upsert_on_match_plain_table(spark, tmp_path):
+    """``on_match`` on the non-bucketed path: ``fn(new, old)`` is the
+    stored value, ``old`` the target row's value and NULL for a new key;
+    the other columns take the source's value."""
+    import os
+
+    cat = ParquetCatalog(spark, str(tmp_path / "cat"))
+    rule = {"v": lambda new, old: new + F.coalesce(old, F.lit(100))}
+
+    def merge(rows):
+        cat.merge_upsert("t", spark.createDataFrame(rows, "k string, v int, w string"),
+                         ["k"], on_match=rule)
+        return {r["k"]: (r["v"], r["w"]) for r in cat.read("t").collect()}
+
+    assert merge([("a", 1, "x"), ("b", 2, "x")]) == {"a": (101, "x"), "b": (102, "x")}
+    assert merge([("b", 5, "y"), ("c", 3, "y")]) == {
+        "a": (101, "x"), "b": (107, "y"), "c": (103, "y")}
+    assert "bucket_spec" not in cat.table_meta("t")
+    data = os.path.join(str(tmp_path / "cat"), "t", "data")
+    assert not [d for d in os.listdir(data) if d.startswith("_bucket=")]
+
+
+def _jobs(spark, fn) -> list[str]:
+    """Call site of each Spark job ``fn`` runs, in job order, read from
+    the status tracker through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return [st.getStageInfo(min(st.getJobInfo(j).stageIds)).name
+            for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def test_route_cases_job_count(spark, tmp_path):
+    """route_cases runs no count and no extra collect: creating the table
+    is the write alone, and a merge into the existing bucketed table
+    collects its touched buckets once (one call site) before the write."""
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    v1 = _verdicts(spark, [("P1", f"d{i}", "HOLD", 90.0) for i in range(40)])
+    v2 = _verdicts(spark, [("P1", "d1", "REVIEW", 60.0), ("P1", "dX", "HOLD", 99.0)])
+
+    create = _jobs(spark, lambda: C.route_cases(catalog, v1, "2025-01-01 00:00:00",
+                                                buckets=8))
+    assert not [j for j in create if j.startswith("collect at")], create
+    assert len(create) <= 2, create
+
+    merge = _jobs(spark, lambda: C.route_cases(catalog, v2, "2025-02-01 00:00:00",
+                                               buckets=8))
+    collects = {j for j in merge if j.startswith("collect at")}
+    assert len(collects) == 1, merge
+    assert len(merge) <= 10, merge

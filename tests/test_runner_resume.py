@@ -285,11 +285,14 @@ def test_warm_run_compiles_no_codegen_class(spark, tmp_path, corpus):
     per-run value is inlined into generated code, so a second run over
     the same inputs in the same JVM compiles nothing. Fails with the
     default 100-entry cache (a run generates more classes than that, so
-    LRU order evicts them all) and with the ledger's wall time as an
-    ``F.lit`` double in a projection (a new class every run)."""
+    LRU order evicts them all), with the ledger's wall time as an
+    ``F.lit`` double in a projection (a new class every run), and, in some
+    runs only, with AQE's timing-dependent codegen stage id in the class
+    name (the same stage code under another id is another cache key)."""
     from invoice_anomaly_detection_sieve_spark.session import CODEGEN_CACHE_ENTRIES
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     documents, registry = corpus
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     catalogs = [ParquetCatalog(spark, str(tmp_path / f"wh{i}")) for i in range(2)]

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from invoice_anomaly_detection_sieve_spark.sources.catalog import ParquetCatalog
@@ -57,6 +58,41 @@ def test_registry_stream_merges_into_catalog(spark, tmp_path):
     assert set(reg) == {"K1", "K2", "K3"}
     assert reg["K1"]["first_seen"] == t0
     assert reg["K1"]["last_seen"] == t0 + dt.timedelta(hours=5)
+
+
+@pytest.mark.parametrize("prior_buckets", [8, None])
+def test_registry_sink_migrates_layout_keeping_first_seen(spark, tmp_path, prior_buckets):
+    """A registry written with another bucket count, or non-bucketed, is
+    read whole on the sink's first merge: a matched key keeps its earliest
+    first_seen and the table moves to the sink's layout."""
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    prior = spark.createDataFrame(
+        [(f"K{i}", t0, t0) for i in range(20)],
+        "media_key string, first_seen timestamp, last_seen timestamp",
+    )
+    catalog.merge_upsert("media_registry", prior, ["media_key"], buckets=prior_buckets)
+
+    src = str(tmp_path / "obs")
+    later = t0 + dt.timedelta(days=3)
+    _write_obs(spark, src, [("K1", later), ("KN", later)])
+    stream = spark.readStream.schema(OBS_SCHEMA).parquet(src)
+    q = (
+        R.sink_registry(R.registry_updates(stream), catalog, str(tmp_path / "ckpt"),
+                        buckets=4)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    reg = {r["media_key"]: (r["first_seen"], r["last_seen"])
+           for r in catalog.read("media_registry").collect()}
+    assert len(reg) == 21
+    assert reg["K1"] == (t0, later)  # earliest first_seen kept, last_seen widened
+    assert reg["KN"] == (later, later)
+    assert reg["K5"] == (t0, t0)
+    assert catalog.table_meta("media_registry")["bucket_spec"] == {
+        "keys": ["media_key"], "buckets": 4}
 
 
 def test_first_seen_alerts(spark, tmp_path):
