@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 from .functions import normalize as N
 from .functions.exprcache import cached_exprs
-
-LINE_JSON_SCHEMA = "desc string, qty double, unit_price double, amount double, sku string"
+from .schema import LINE_PAYLOAD
 
 # per-line columns emitted as FLAT parallel arrays (column -> ``lines``
 # field), the docs shape the pair kernel reads: an array<struct> cell
@@ -79,7 +78,7 @@ def _lines_from_sorted(ordered: Column) -> Column:
     ``text``; order is the offset order (≈ ORDER BY line_no,
     app/main.py:59). ``from_json`` is lenient: junk ⇒ null fields.
     """
-    parsed = F.transform(ordered, lambda s: F.from_json(s["text"], LINE_JSON_SCHEMA))
+    parsed = F.transform(ordered, lambda s: F.from_json(s["text"], LINE_PAYLOAD))
     return F.transform(
         parsed,
         lambda p: F.struct(

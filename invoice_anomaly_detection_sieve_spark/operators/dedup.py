@@ -5,8 +5,9 @@ pipeline needs document dedup. All variants are expressed shuffle-light:
 
 - exact: sha256-hash groupBy (one shuffle on the hash),
 - MinHash + LSH: shingle → K minhashes via ``xxhash64`` with K seeds
-  (column expressions, no Python) → band buckets → self-join per bucket —
-  candidate pairs only, never the full cross product,
+  (column expressions, no Python) → band buckets → pairs per bucket
+  (``balance.bucket_pairs``) — candidate pairs only, never the full
+  cross product,
 - SimHash: 64-bit signature from weighted gram-bit majority (bitwise
   column math), near-dups = equal signature or small Hamming distance
   within a bucket,
@@ -22,33 +23,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import normalize as N
-from .balance import ensure_min_parallelism, guard_hot_keys
+from .balance import bit_bands, bucket_pairs, ensure_min_parallelism
 
 DEFAULT_SHINGLE = 5
 DEFAULT_MINHASHES = 16
 DEFAULT_BANDS = 4  # 16 hashes / 4 bands -> rows-per-band 4
-
-# Ceiling for the UNGUARDED (max_bucket=None) exact-recall paths: a
-# degenerate bucket holds its full id array in ONE aggregation buffer and
-# emits O(K²) pairs from one task — fine on the oracle/verify corpora the
-# unguarded mode exists for, an OOM at corpus scale. Past this many ids in
-# a single bucket (~tens of MB of buffer, ~10¹² exploded pairs) the task
-# fails LOUDLY with the remedy instead of dying in the explode.
-UNGUARDED_BUCKET_CEIL = 1_000_000
-
-
-def _ceil_unguarded(arr, op: str):
-    return F.when(
-        F.size(arr) > UNGUARDED_BUCKET_CEIL,
-        F.raise_error(
-            F.concat(
-                F.lit(f"{op}: a bucket holds "), F.size(arr).cast("string"),
-                F.lit(f" ids (> unguarded ceiling {UNGUARDED_BUCKET_CEIL}); "
-                      "set max_bucket to bound degenerate buckets"),
-            )
-        ),
-    ).otherwise(arr)
-
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via content hash: every doc annotated with its group
@@ -128,28 +107,15 @@ def minhash_lsh_pairs(
     shingle: int = DEFAULT_SHINGLE,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash LSH.
-
-    Plan (guarded default): one projection (signatures) → explode into
-    ``bands`` bucket keys → ONE shuffle on the bucket key → window count
-    (hot-bucket guard, rides the same shuffle) → per-bucket sorted id
-    array (``collect_list``, bounded ≤ ``max_bucket`` by the guard, on the
-    same partitioning so no new exchange) → pair explosion JVM-side →
-    count shared bands. The signature pipeline is computed exactly ONCE
-    with no self-join, no persist (nothing to leak, round-3 VERDICT item
-    3), and no reliance on ReuseExchange — which AQE's initial plan does
-    not apply to self-joins of this shape.
+    """Candidate near-duplicate pairs via banded MinHash LSH: each band's
+    hash of the signature is a bucket key of ``balance.bucket_pairs``, and
+    each candidate pair counts the bands it shares.
 
     ``max_bucket`` drops degenerate buckets (same guard as the blocking
     join's max_key_fanout); pass ``None`` to disable the guard and keep
     the full (1-(1-J^r)^b) candidate recall — required when an exact
-    oracle will compare the output. The unguarded path uses the SAME
-    single-pass formulation minus the count filter: a bucket self-join
-    would recompute the whole signature pipeline for both sides (AQE
-    does not reuse the exchange), and it concentrates a degenerate
-    bucket's O(bucket²) pair output into one task anyway — identical to
-    the array explosion — while the array side holds only O(bucket) ids
-    in the agg buffer. Output: a_id, b_id (a < b), n_shared_bands.
+    oracle will compare the output. Output: a_id, b_id (a < b),
+    n_shared_bands.
     """
     if num_hashes % bands:
         # silent truncation (h{r*b}..h{K-1} dead) would quietly change the
@@ -181,40 +147,8 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ]
     )
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    # explicit repartition: the guard window and BOTH downstream groupBys
-    # (bucket collect, pair count) ride this one exchange, pinned to the
-    # session's defaultParallelism instead of spark.sql.shuffle.partitions
-    # (scale-adaptive on a cluster; locally it removes two extra
-    # tiny-data exchanges' worth of stage overhead)
-    buckets = guard_hot_keys(
-        with_sig.select("_id", F.explode(band_arr).alias("bucket"))
-        .repartition(n_part, "bucket"),
-        ["bucket"], max_bucket,
-    )
-    # sorted per-bucket id array (≤ max_bucket elements under the guard;
-    # same partitioning as the window ⇒ no extra exchange), then i<j pair
-    # explosion: sorted array ⇒ a_id ≤ b_id by construction; the strict
-    # filter drops the (x, x) self-pair a duplicated array element would
-    # emit (only reachable via a cross-band hash collision — signatures
-    # are one row per id — but the comparison is free)
-    grouped = buckets.groupBy("bucket").agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
-    if max_bucket is None:
-        grouped = grouped.withColumn("_ids", _ceil_unguarded(F.col("_ids"), "minhash_lsh_pairs"))
-    exploded = grouped.select(F.posexplode("_ids").alias("_i", "a_id"), F.col("_ids"))
     return (
-        exploded.select(
-            "a_id",
-            F.explode(F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))).alias("b_id"),
-        )
-        .where(F.col("a_id") != F.col("b_id"))
-        # explicit repartition on the full grouping key: the band-count
-        # groupBy rides it with no further exchange. Fan-in per (a, b) is
-        # bounded by ``bands`` (≤ a handful), so forgoing map-side partial
-        # aggregation costs at most bands× the final row count — bounded
-        # at any scale — while the pinned width removes a
-        # shuffle.partitions-wide stage of overhead per run.
-        .repartition(n_part, "a_id", "b_id")
+        bucket_pairs(with_sig, band_arr, "_id", max_bucket=max_bucket, op="minhash_lsh_pairs")
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -396,7 +330,6 @@ def simhash_near_duplicates(
     if 64 % bands:
         raise ValueError("bands must divide 64")
     width = 64 // bands
-    mask = (1 << width) - 1
     # null-text docs: no grams => identical degenerate signatures would
     # pair every null doc with every other (hamming 0); the oracle's
     # NULL-neq-NULL join excludes them — align (no text, no evidence)
@@ -406,60 +339,13 @@ def simhash_near_duplicates(
     # the two columns again
     sig = simhash_signatures(
         ensure_min_parallelism(docs).select(F.col(id_col).alias("_docid"), F.col(text_col)),
-        text_col, "_sig", id_col="_docid",
+        text_col, "sig", id_col="_docid",
     )
-    band_arr = F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}|"),
-                F.shiftrightunsigned(F.col("_sig"), b * width)
-                .bitwiseAND(F.lit(mask))
-                .cast("string"),
-            )
-            for b in range(bands)
-        ]
-    )
-    # Window count (hot-bucket guard, riding the single shuffle, skipped
-    # when max_bucket is None) → per-bucket sorted (id, sig) array →
-    # i<j pair explosion — the 64-sum signature pipeline runs exactly
-    # ONCE, with no self-join, no persist, and no reliance on exchange
-    # reuse (a self-join would recompute the signatures for both sides
-    # and concentrates a degenerate bucket's O(bucket²) pair output in
-    # one task anyway, same as the array explosion).
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    # explicit repartition: guard window + bucket groupBy ride one pinned
-    # exchange (same pattern as minhash_lsh_pairs)
-    bucketed = guard_hot_keys(
-        sig.select("_id", "_sig", F.explode(band_arr).alias("_bucket"))
-        .repartition(n_part, "_bucket"),
-        ["_bucket"], max_bucket,
-    )
-    grouped = bucketed.groupBy("_bucket").agg(
-        F.array_sort(F.collect_list(F.struct("_id", "_sig"))).alias("_rows")
-    )
-    if max_bucket is None:
-        grouped = grouped.withColumn(
-            "_rows", _ceil_unguarded(F.col("_rows"), "simhash_near_duplicates")
-        )
-    exploded = grouped.select(F.posexplode("_rows").alias("_i", "_a"), F.col("_rows"))
     return (
-        exploded.select(
-            "_a",
-            F.explode(
-                F.slice(F.col("_rows"), F.col("_i") + 2, F.size("_rows"))
-            ).alias("_b"),
-        )
-        .select(
-            F.col("_a._id").alias("a_id"), F.col("_b._id").alias("b_id"),
-            F.col("_a._sig").alias("_sa"), F.col("_b._sig").alias("_sb"),
-        )
-        .where(F.col("a_id") != F.col("b_id"))
-        # pinned repartition on the dedup key: dropDuplicates rides it
-        # (bounded ≤bands duplicate rows per pair, same rationale as the
-        # minhash band-count groupBy)
-        .repartition(n_part, "a_id", "b_id")
+        bucket_pairs(sig, bit_bands(F.col("sig"), width, bands), "_id", ("sig",),
+                     max_bucket=max_bucket, op="simhash_near_duplicates")
         .dropDuplicates(["a_id", "b_id"])
-        .withColumn("hamming", hamming64(F.col("_sa"), F.col("_sb")))
+        .withColumn("hamming", hamming64(F.col("a_sig"), F.col("b_sig")))
         .where(F.col("hamming") <= max_hamming)
         .select("a_id", "b_id", "hamming")
     )

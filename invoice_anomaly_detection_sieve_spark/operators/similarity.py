@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .balance import guard_hot_keys
+from .balance import bit_bands, bucket_pairs, guard_hot_keys
 
 
 def l2_norm(v: Column) -> Column:
@@ -150,22 +150,10 @@ def lsh_topk(
     degenerate candidate buckets (templated/near-zero embeddings collapsing
     to one band pattern), the same hot-key guard as every other pair
     generator here."""
-    bits_per_band = bits // bands
-
     def with_bands(df, prefix):
         sig = hyperplane_signature(F.col(vec_col), dim, bits)
         out = df.select(F.col(id_col).alias(f"{prefix}_id"), sig.alias("_sig"))
-        band_arr = F.array(
-            *[
-                F.concat(
-                    F.lit(f"{b}|"),
-                    F.shiftrightunsigned(F.col("_sig"), b * bits_per_band)
-                    .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                    .cast("string"),
-                )
-                for b in range(bands)
-            ]
-        )
+        band_arr = bit_bands(F.col("_sig"), bits // bands, bands)
         return out.select(f"{prefix}_id", F.explode(band_arr).alias("bucket"))
 
     qb = with_bands(queries, "query")
@@ -329,9 +317,9 @@ def cosine_near_duplicates(
       the JVM-side ``cosine``. O(n²) by definition; the correctness
       oracle, and the path an exact-recall comparison must use.
     - ``method="lsh"`` (the 100 TB path): banded random-hyperplane
-      signatures → ONE shuffle on (band, band-bits) buckets → window
-      count hot-bucket guard (``max_bucket``, same guard family as
-      ``minhash_lsh_pairs``; ``None`` disables) → exact cosine only on
+      signatures → band buckets paired by ``balance.bucket_pairs``
+      (the hot-bucket guard ``max_bucket``, shared with
+      ``minhash_lsh_pairs``; ``None`` disables it) → exact cosine only on
       bucket-mates. Recall is probabilistic (1-(1-p^r)^b with
       p = 1 - θ/π), tunable by bits/bands; pinned by a planted-pair
       recall test.
@@ -344,46 +332,12 @@ def cosine_near_duplicates(
     if method == "exact":
         cand = a_vecs.crossJoin(b_vecs).where(F.col("a_id") < F.col("b_id"))
     elif method == "lsh":
-        bits_per_band = bits // bands
         sig = hyperplane_signature(F.col("_vec"), dim, bits, seed)
-        band_arr = F.array(
-            *[
-                F.concat(
-                    F.lit(f"{b}|"),
-                    F.shiftrightunsigned(F.col("_sig"), b * bits_per_band)
-                    .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                    .cast("string"),
-                )
-                for b in range(bands)
-            ]
-        )
-        buckets = (
-            e.select("_id", sig.alias("_sig"))
-            .where(F.col("_sig").isNotNull())
-            .select("_id", F.explode(band_arr).alias("bucket"))
-        )
-        buckets = guard_hot_keys(buckets, ["bucket"], max_bucket)
-        # per-bucket sorted id array → i<j pair explosion: the signature
-        # pipeline (a Pandas-UDF matmul per row) runs exactly ONCE — a
-        # bucket self-join would recompute it for both sides (AQE does
-        # not reuse the exchange) and concentrates a hot bucket's O(K²)
-        # pair output in one task anyway
-        grouped = buckets.groupBy("bucket").agg(
-            F.array_sort(F.collect_list("_id")).alias("_ids")
-        )
-        exploded = grouped.select(
-            F.posexplode("_ids").alias("_i", "a_id"), F.col("_ids")
-        )
-        pair_ids = (
-            exploded.select(
-                "a_id",
-                F.explode(
-                    F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
-                ).alias("b_id"),
-            )
-            .where(F.col("a_id") != F.col("b_id"))
-            .dropDuplicates(["a_id", "b_id"])
-        )
+        rows = e.select("_id", sig.alias("_sig")).where(F.col("_sig").isNotNull())
+        pair_ids = bucket_pairs(
+            rows, bit_bands(F.col("_sig"), bits // bands, bands), "_id",
+            max_bucket=max_bucket, op="cosine_near_duplicates",
+        ).dropDuplicates(["a_id", "b_id"])
         # vectors re-enter via two key joins (NOT carried through the band
         # explode, which would ship each vector `bands` times per bucket)
         cand = pair_ids.join(a_vecs, "a_id").join(b_vecs, "b_id")

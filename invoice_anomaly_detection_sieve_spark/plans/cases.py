@@ -14,6 +14,7 @@ document either way (the reference's SELECT-first guarantees that too).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,9 +30,19 @@ CASES_BUCKETS = 64
 
 
 def open_cases(verdicts: DataFrame, run_ts) -> DataFrame:
-    """Case rows for every verdict that needs manual work."""
-    ts = F.to_timestamp(F.lit(str(run_ts)))
-    return verdicts.where(F.col("decision").isin(*CASE_OPEN_DECISIONS)).select(
+    """Case rows for every verdict that needs manual work, stamped with
+    ``run_ts`` (a timestamp string in the session time zone)."""
+    # the stamp joins as a one-row frame handed over through Arrow (a
+    # local relation): as a literal it would be inlined into generated
+    # code, and every run with a new stamp would compile new classes. A
+    # nested-loop join reads the one row in each task; a broadcast would
+    # run one more Spark job per plan that reads the cases.
+    stamp = verdicts.sparkSession.createDataFrame(
+        pd.DataFrame({"_ts": [str(run_ts)]}), "_ts string"
+    ).select(F.to_timestamp("_ts").alias("_ts"))
+    ts = F.col("_ts")
+    flagged = verdicts.where(F.col("decision").isin(*CASE_OPEN_DECISIONS))
+    return flagged.crossJoin(stamp.hint("shuffle_replicate_nl")).select(
         # 32 hex chars = 128 bits: a 12-char (48-bit) id hits birthday
         # collisions at ~17M cases — guaranteed conflation at target scale
         F.concat(F.lit("case_"), F.substring(F.sha2(F.col("doc_id"), 256), 1, 32)).alias(

@@ -30,6 +30,7 @@ import argparse
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -160,21 +161,19 @@ def _commit_sinks(
     violations: DataFrame,
     part_verdicts: DataFrame,
     profiles: DataFrame,
-    cases_ts: str | None,
+    cases_ts: str,
 ) -> None:
     """Write every per-run sink except the ledger, all at the same time:
     they read the materialized verdicts and write separate tables, so the
     stage costs about as much as its slowest sink. Returns once every sink
     has finished, then raises the first failure, so the caller appends
-    the ledger only after all of them committed. ``cases_ts`` is the case
-    timestamp; None routes no cases."""
+    the ledger only after all of them committed. ``cases_ts`` stamps the
+    cases this run opens."""
     from . import cases as C
 
     tag = F.lit(run_id)
-    sinks = []
-    if cases_ts is not None:  # the longest sink goes first
-        sinks.append(lambda: C.route_cases(catalog, verdicts, cases_ts))
-    sinks += [
+    sinks = [
+        lambda: C.route_cases(catalog, verdicts, cases_ts),  # the longest goes first
         lambda: catalog.append("doc_verdicts", verdicts.withColumn("run_id", tag)),
         lambda: catalog.append("violations", violations.withColumn("run_id", tag)),
         lambda: catalog.append("part_verdicts", part_verdicts.withColumn("run_id", tag)),
@@ -200,15 +199,16 @@ def run(
     config: V.ValidationConfig | None = None,
     baseline_profiles: DataFrame | None = None,
     configs: DataFrame | None = None,
-    run_ts: str = "2025-01-01 00:00:00",
-    enable_cases: bool = True,
+    run_ts: str | None = None,
     consumed_snapshot_id: int | None = None,
 ) -> dict:
     """Execute (or resume) a validation run; write all outputs through the
     catalog. ``configs`` (S12) overrides decision thresholds from data;
-    HOLD/REVIEW verdicts open cases with an SLA (D4). Returns run
+    HOLD/REVIEW verdicts open cases with an SLA (D4), stamped ``run_ts``
+    (``yyyy-MM-dd HH:mm:ss``, UTC; default: the run's start). Returns run
     metrics."""
     run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
+    run_ts = run_ts or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     cfg = config or V.ValidationConfig()
     if configs is not None:
         from ..sources.configs import apply_config_table
@@ -239,8 +239,7 @@ def run(
         parts, schema = [], LEDGER
         if n_docs:
             _commit_sinks(
-                catalog, run_id, verdicts, out["violations"], part_v, profiles,
-                run_ts if enable_cases else None,
+                catalog, run_id, verdicts, out["violations"], part_v, profiles, run_ts,
             )
             elapsed = time.time() - t0
             parts = part_v.select("part", "n_docs", "n_violations").collect()

@@ -35,7 +35,6 @@ class ValidationConfig:
     max_key_fanout: int | None = 2000
     dq_as_of: str | None = None  # pin "today" for deterministic DQ date checks
     enable_dq: bool = True
-    enable_benford: bool = True
     # trained duplicate model ({"weights": {...}, "bias": b}, the
     # plans/train.py:train_duplicate_model output / load_duplicate_model
     # artifact); None scores with the reference's fallback coefficients
@@ -323,12 +322,9 @@ def violations_from_verdicts(verdicts: DataFrame) -> DataFrame:
     return exploded.select(*cached_exprs(("violations.out",), _out_cols))
 
 
-def partition_verdicts(
-    verdicts: DataFrame,
-    benford: DataFrame | None = None,
-) -> DataFrame:
+def partition_verdicts(verdicts: DataFrame, benford: DataFrame) -> DataFrame:
     """Per-partition pass/fail rollup: counts by decision, violation
-    totals, optional Benford drift status. FAIL iff any HOLD or any
+    totals, Benford drift status. FAIL iff any HOLD or any
     partition-level drift failure; WARN on REVIEWs only; else PASS."""
     agg = verdicts.groupBy("part").agg(*cached_exprs(("partv.agg",), lambda: [
         F.count(F.lit(1)).alias("n_docs"),
@@ -337,13 +333,7 @@ def partition_verdicts(
         F.sum(F.size("reason_codes")).alias("n_violations"),
         F.max("risk_score").alias("max_risk_score"),
     ]))
-    if benford is not None:
-        agg = agg.join(benford.select("part", "benford_mad", "benford_fail"), "part", "left")
-    else:
-        agg = agg.withColumns({
-            "benford_mad": F.lit(None).cast("double"),
-            "benford_fail": F.lit(False),
-        })
+    agg = agg.join(benford.select("part", "benford_mad", "benford_fail"), "part", "left")
     status = (
         F.when((F.col("n_hold") > 0) | F.coalesce(F.col("benford_fail"), F.lit(False)), "FAIL")
         .when(F.col("n_review") > 0, "WARN")
@@ -403,20 +393,17 @@ def run_validation(
     verdicts = doc_verdicts_from_docs(
         docs, media_registry, baseline_profiles, cfg, profiles
     )
-    if cfg.enable_benford:
-        # Benford conformity is a test of the data being VALIDATED: under
-        # a stored baseline the profile's digit_hist describes the
-        # HISTORY, so a grossly non-Benford current batch would pass (and
-        # a failed historical distribution would fail every future run).
-        # Self-profiling reuses the profile's hist — same data.
-        ben_src = (
-            profiles
-            if baseline_profiles is None
-            else profile.digit_histogram(docs, "total")
-        )
-        benford = drift.benford_stats(ben_src)
-    else:
-        benford = None
+    # Benford conformity is a test of the data being VALIDATED: under a
+    # stored baseline the profile's digit_hist describes the HISTORY, so a
+    # grossly non-Benford current batch would pass (and a failed
+    # historical distribution would fail every future run). Self-profiling
+    # reuses the profile's hist — same data.
+    ben_src = (
+        profiles
+        if baseline_profiles is None
+        else profile.digit_histogram(docs, "total")
+    )
+    benford = drift.benford_stats(ben_src)
     return {
         "doc_verdicts": verdicts,
         "violations": violations_from_verdicts(verdicts),

@@ -86,7 +86,9 @@ PROFILES = T.StructType(
     ]
 )
 
-# Per-document verdict (≈ decisions, app/schema.sql:64-79).
+# Per-document verdict (≈ decisions, app/schema.sql:64-79) plus the
+# evidence each decision rests on: the registry, baseline and row-check
+# flags, the canonical span sequence and the header total.
 DOC_VERDICTS = T.StructType(
     [
         T.StructField("part", T.StringType(), False),
@@ -97,6 +99,14 @@ DOC_VERDICTS = T.StructType(
         T.StructField("dup_prob", T.DoubleType(), True),
         T.StructField("anom_prob", T.DoubleType(), True),
         T.StructField("top_match_doc_id", T.StringType(), True),
+        T.StructField("bank_change", T.BooleanType(), True),
+        T.StructField("amount_z", T.DoubleType(), True),
+        T.StructField("amount_outlier", T.BooleanType(), True),
+        T.StructField("dq_line_sum_mismatch", T.BooleanType(), True),
+        T.StructField("dq_bad_currency", T.BooleanType(), True),
+        T.StructField("dq_future_date", T.BooleanType(), True),
+        T.StructField("span_canon", T.StringType(), True),
+        T.StructField("total", T.DoubleType(), True),
     ]
 )
 

@@ -200,8 +200,8 @@ class ParquetCatalog:
         on_match: dict[str, Callable[[Column, Column], Column]] | None = None,
     ) -> int:
         """MERGE semantics (S4/S7): source rows replace same-key target
-        rows; unmatched source rows insert. Implemented as anti-join +
-        union + rewrite (what Iceberg copy-on-write MERGE does).
+        rows; unmatched source rows insert. Implemented as one full outer
+        join on the keys + rewrite (what Iceberg copy-on-write MERGE does).
 
         ``on_match`` maps a column to ``fn(new, old) -> Column``, the value
         the source row stores (``WHEN MATCHED UPDATE SET``): ``old`` is the
@@ -229,8 +229,9 @@ class ParquetCatalog:
             spec = None if buckets is None else {"keys": keys, "buckets": buckets}
         exists = self.exists(name)
         in_place = spec is not None and (stored == spec or not exists)
-        # 1. the target rows the source can match
-        prior = None
+        # 1. the target rows the source can match; none on create, where
+        # the optimizer drops the empty side of the join below
+        prior = source.limit(0)
         if in_place and exists:
             data = self._data_dir(name)
             touched = source.select(self._bucket_col(keys, spec["buckets"])).distinct()
@@ -240,11 +241,9 @@ class ParquetCatalog:
                 prior = self._scan(*paths)
         elif exists:
             prior = self.read(name)
-        # 2. the unmatched target rows plus the source as it is stored
-        merged = self._apply_on_match(source, prior, keys, on_match or {})
-        if prior is not None:
-            kept = prior.join(source.select(*keys).distinct(), keys, "left_anti")
-            merged = kept.unionByName(merged, allowMissingColumns=True)
+        # 2. one outer join on the keys: a key the source holds stores the
+        # source row, any other key keeps its prior row
+        merged = self._merge_rows(source, prior, keys, on_match or {})
         # 3. rewrite the touched buckets, or swap in the whole table
         if in_place:
             return self._rewrite_buckets(name, merged, spec)
@@ -252,24 +251,38 @@ class ParquetCatalog:
         return self._swap(name, merged, spec, op)
 
     @staticmethod
-    def _apply_on_match(
-        source: DataFrame, prior: DataFrame | None, keys: list[str], on_match: dict
+    def _merge_rows(
+        source: DataFrame, prior: DataFrame, keys: list[str], on_match: dict
     ) -> DataFrame:
-        if not on_match:
-            return source
-        if prior is None:
-            old = {c: F.lit(None).cast(source.schema[c].dataType) for c in on_match}
-            joined = source
-        else:
-            # NO broadcast: the target is O(history) (cases, registry);
-            # shuffle_hash keys both sides on the merge keys
-            olds = prior.select(*keys, *[F.col(c).alias(f"_old_{c}") for c in on_match])
-            joined = source.join(olds.hint("shuffle_hash"), keys, "left")
-            old = {c: F.col(f"_old_{c}") for c in on_match}
-        return joined.select(*[
-            on_match[c](F.col(c), old[c]).alias(c) if c in on_match else c
-            for c in source.columns
-        ])
+        """``prior`` rows whose keys the source lacks plus the source rows
+        after ``on_match``, by name; a column only one side has is NULL on
+        the other side's rows. Columns keep ``prior``'s order, then the
+        source-only ones."""
+        olds = [c for c in prior.columns if c not in keys]
+        # NO broadcast: the target is O(history) (cases, registry);
+        # shuffle_hash keys both sides on the merge keys
+        joined = source.withColumn("_new", F.lit(True)).join(
+            prior.select(*keys, *[F.col(c).alias(f"_old_{c}") for c in olds])
+            .hint("shuffle_hash"),
+            keys, "full_outer",
+        )
+        is_new = F.col("_new").isNotNull()
+
+        def old(c):
+            if c in olds:
+                return F.col(f"_old_{c}")
+            return F.lit(None).cast(source.schema[c].dataType)
+
+        def value(c):
+            if c in keys:
+                return F.col(c)
+            if c not in source.columns:
+                return F.when(~is_new, old(c))
+            new = on_match[c](F.col(c), old(c)) if c in on_match else F.col(c)
+            return F.when(is_new, new).otherwise(old(c))
+
+        cols = prior.columns + [c for c in source.columns if c not in prior.columns]
+        return joined.select(*[value(c).alias(c) for c in cols])
 
     @staticmethod
     def _bucket_col(keys: list[str], buckets: int):

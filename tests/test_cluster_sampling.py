@@ -126,6 +126,40 @@ def test_minhash_unguarded_matches_guarded_without_hot_buckets(spark):
     assert all(x != y for x, y, _ in a)
 
 
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "simhash_near_duplicates", "cosine_near_duplicates"]
+)
+def test_unguarded_bucket_ceiling_fails_loudly(spark, monkeypatch, op):
+    """max_bucket=None keeps exact recall only up to
+    ``balance.UNGUARDED_BUCKET_CEIL`` rows in one bucket: past it each
+    pair generator fails with its own name and the remedy instead of
+    exploding O(K²) pairs in one task."""
+    from pyspark.errors import PySparkException
+
+    from invoice_anomaly_detection_sieve_spark.operators import balance, similarity
+
+    # six equal docs / vectors: every band bucket holds all six
+    docs = spark.createDataFrame(
+        [(f"d{i}", "alpha beta gamma delta epsilon zeta") for i in range(6)],
+        "doc_id string, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [1.0] * 16) for i in range(6)], "vec_id long, embedding array<float>"
+    )
+    calls = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs, max_bucket=None),
+        "simhash_near_duplicates": lambda: dedup.simhash_near_duplicates(
+            docs, max_bucket=None),
+        "cosine_near_duplicates": lambda: similarity.cosine_near_duplicates(
+            vecs, dim=16, max_bucket=None),
+    }
+    monkeypatch.setattr(balance, "UNGUARDED_BUCKET_CEIL", 5)
+    with pytest.raises(PySparkException, match=f"{op}: a bucket holds 6 ids .*set max_bucket"):
+        calls[op]().collect()
+    monkeypatch.setattr(balance, "UNGUARDED_BUCKET_CEIL", 6)
+    assert calls[op]().count() == 15
+
+
 def test_lsh_config_validation():
     """Config contracts fail loudly: bands must divide num_hashes (silent
     signature truncation changes the advertised recall), and a SimHash

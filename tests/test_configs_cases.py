@@ -362,11 +362,21 @@ def _jobs(spark, fn) -> list[str]:
             for j in sorted(st.getJobIdsForGroup(group))]
 
 
-def test_route_cases_job_count(spark, tmp_path):
+def test_route_cases_job_count(spark, tmp_path, monkeypatch):
     """route_cases runs no count and no extra collect: creating the table
     is the write alone, and a merge into the existing bucketed table
-    collects its touched buckets once (one call site) before the write."""
+    collects its touched buckets once (one call site) before the write,
+    which reads each touched bucket once (one join of the prior rows and
+    the source)."""
     catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    plans = []
+    rewrite = ParquetCatalog._rewrite_buckets
+
+    def spy(self, name, df, spec):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return rewrite(self, name, df, spec)
+
+    monkeypatch.setattr(ParquetCatalog, "_rewrite_buckets", spy)
     v1 = _verdicts(spark, [("P1", f"d{i}", "HOLD", 90.0) for i in range(40)])
     v2 = _verdicts(spark, [("P1", "d1", "REVIEW", 60.0), ("P1", "dX", "HOLD", 99.0)])
 
@@ -379,4 +389,6 @@ def test_route_cases_job_count(spark, tmp_path):
                                                buckets=8))
     collects = {j for j in merge if j.startswith("collect at")}
     assert len(collects) == 1, merge
-    assert len(merge) <= 10, merge
+    assert len(merge) <= 7, merge
+    scans = [p.count(" parquet") for p in plans]
+    assert scans == [0, 1], plans

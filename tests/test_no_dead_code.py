@@ -26,7 +26,7 @@ import pathlib
 REPO = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "invoice_anomaly_detection_sieve_spark"
 IMPORT_CHECKED = [PACKAGE, REPO / "tests", REPO / "tools"]
-IMPORT_CHECKED_SCRIPTS = ["bench.py", "bench_extra.py", "__spark_entry__.py"]
+IMPORT_CHECKED_SCRIPTS = ["bench.py", "__spark_entry__.py"]
 _SCOPES = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 
 

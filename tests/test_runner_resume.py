@@ -288,7 +288,9 @@ def test_warm_run_compiles_no_codegen_class(spark, tmp_path, corpus):
     LRU order evicts them all), with the ledger's wall time as an
     ``F.lit`` double in a projection (a new class every run), and, in some
     runs only, with AQE's timing-dependent codegen stage id in the class
-    name (the same stage code under another id is another cache key)."""
+    name (the same stage code under another id is another cache key).
+    The warm run stamps its cases with a new time, which reaches the plan
+    as data, not as a literal."""
     from invoice_anomaly_detection_sieve_spark.session import CODEGEN_CACHE_ENTRIES
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
@@ -298,9 +300,18 @@ def test_warm_run_compiles_no_codegen_class(spark, tmp_path, corpus):
     catalogs = [ParquetCatalog(spark, str(tmp_path / f"wh{i}")) for i in range(2)]
     runner.run(spark, documents, registry, catalogs[0], run_id="cold")
     before = compiles.getCount()
-    runner.run(spark, documents, registry, catalogs[1], run_id="warm")
+    runner.run(spark, documents, registry, catalogs[1], run_id="warm",
+               run_ts="2030-06-01 12:00:00")
     warm_compiles = compiles.getCount() - before
     assert warm_compiles == 0, f"the warm run compiled {warm_compiles} classes"
+    # each run stamps its cases with its own time
+    stamps = [
+        {r[0] for r in c.read("cases")
+         .select(F.date_format("created_at", "yyyy-MM-dd HH:mm:ss")).collect()}
+        for c in catalogs
+    ]
+    assert stamps[1] == {"2030-06-01 12:00:00"}
+    assert len(stamps[0]) == 1 and stamps[0] != stamps[1]
     # the wall time still reaches the ledger, one value per run
     walls = [
         {r[0] for r in c.read("ledger").select("run_wall_time_sec").collect()}

@@ -340,9 +340,8 @@ def test_trained_weights_reach_the_scoring_pipeline(spark, docs, tmp_path):
     # the config plumbing: doc_verdicts_from_docs scores with cfg.dup_model
     reg = docs.sparkSession.createDataFrame(
         [], "media_key string, first_seen timestamp, last_seen timestamp")
-    cfg_fb = V.ValidationConfig(enable_dq=False, enable_benford=False)
-    cfg_tr = V.ValidationConfig(enable_dq=False, enable_benford=False,
-                                dup_model=loaded)
+    cfg_fb = V.ValidationConfig(enable_dq=False)
+    cfg_tr = V.ValidationConfig(enable_dq=False, dup_model=loaded)
     v_fb = {r["doc_id"]: r["dup_prob"]
             for r in V.doc_verdicts_from_docs(docs, reg, config=cfg_fb)
             .select("doc_id", "dup_prob").collect()}

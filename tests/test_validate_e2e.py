@@ -26,7 +26,20 @@ def corpus(spark):
         "verdicts": {r["doc_id"]: r.asDict() for r in verdicts.collect()},
         "violations": violations.collect(),
         "parts": {r["part"]: r.asDict() for r in parts.collect()},
+        "schemas": {k: out[k].schema for k in ("doc_verdicts", "violations", "profiles")},
     }
+
+
+def test_outputs_match_declared_schemas(corpus):
+    """The run's output frames carry exactly the columns and types
+    ``schema`` declares for them, in order (nullability aside)."""
+    from invoice_anomaly_detection_sieve_spark import schema as SC
+
+    declared = {"doc_verdicts": SC.DOC_VERDICTS, "violations": SC.VIOLATIONS,
+                "profiles": SC.PROFILES}
+    for name, decl in declared.items():
+        got = [(f.name, f.dataType.simpleString()) for f in corpus["schemas"][name]]
+        assert got == [(f.name, f.dataType.simpleString()) for f in decl], name
 
 
 def test_duplicate_pairs_hold_with_exact_invnum(corpus):
