@@ -92,12 +92,10 @@ def synthesize_documents(
         date: dt.date | None = None,
         media: str | None = None,
         pdf: str | None = None,
-        n_lines: int = 3,
         bad_sum: bool = False,
-        doc_id: str | None = None,
         line_tag: int | None = None,
     ) -> str:
-        doc_id = doc_id or f"P{p}-D{seq:05d}"
+        doc_id = f"P{p}-D{seq:05d}"
         # log10-uniform over an integer number of decades ⇒ exactly
         # Benford-distributed leading digits (a fractional decade would
         # bias low digits and trip the chi² gate on large partitions)
@@ -118,11 +116,11 @@ def synthesize_documents(
             _span("media", None, media, 7),
             _span("pdf", None, pdf, 8),
         ]
-        amounts = [total / n_lines] * n_lines
+        amounts = [total / 3] * 3
         if bad_sum:
             amounts = [a * 1.5 for a in amounts]
         tag = line_tag if line_tag is not None else seq
-        for j in range(n_lines):
+        for j in range(3):
             qty = float(j + 1)  # deterministic: true duplicates get identical lines
             h = (tag * 2654435761 + j * 40503 + 12345) & 0xFFFFFFFF
             desc_words = (
@@ -215,20 +213,19 @@ def synthesize_documents(
 # ---------------------------------------------------------------------------
 
 
+# media keys M0..M498: the documents reference them, the registry lists them
+TPCH_MEDIA_POOL = 499
+
+
 def _lit_s(v: str | None):
     return F.lit(v).cast("string")
 
 
-def docs_from_tpch(
-    spark: SparkSession,
-    sf_dir: str,
-    dup_every: int = 997,
-    media_pool: int = 499,
-) -> DataFrame:
+def docs_from_tpch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved documents derived from orders+lineitem, fully columnar.
 
     doc_id = ``C{custkey}-O{orderkey}`` so the derived partition key is the
-    customer (≈ vendor). Every ``dup_every``-th order gets a planted clone
+    customer (≈ vendor). Every 997th order gets a planted clone
     (same number/po/total/pdf, +3 days) so the uniqueness sieve always has
     work. Scales linearly: one shuffle to nest lineitem, one join.
     """
@@ -253,7 +250,7 @@ def docs_from_tpch(
                 ).alias("text"),
                 F.when(
                     F.pmod(F.col("l_partkey"), F.lit(17)) == 0,
-                    F.concat(F.lit("M"), F.pmod(F.col("l_partkey"), F.lit(media_pool)).cast("string")),
+                    F.concat(F.lit("M"), F.pmod(F.col("l_partkey"), F.lit(TPCH_MEDIA_POOL)).cast("string")),
                 ).otherwise(F.lit(None).cast("string")).alias("media_ref"),
                 (F.lit(10) + F.col("l_linenumber")).cast("int").alias("offset"),
             ).alias("span"),
@@ -281,7 +278,7 @@ def docs_from_tpch(
             mk("date", F.date_format(date_col, "yyyy-MM-dd"), null_s, 5),
             mk("payee", F.concat(F.lit("Payee-"), F.col("o_custkey").cast("string")), null_s, 6),
             mk("media", null_s,
-               F.concat(F.lit("M"), F.pmod(F.col("o_orderkey"), F.lit(media_pool)).cast("string")), 7),
+               F.concat(F.lit("M"), F.pmod(F.col("o_orderkey"), F.lit(TPCH_MEDIA_POOL)).cast("string")), 7),
             mk("pdf", null_s,
                F.sha2(F.concat(F.col("o_orderkey").cast("string"),
                                F.col("o_totalprice").cast("string")), 256), 8),
@@ -299,7 +296,7 @@ def docs_from_tpch(
     )
 
     clones = (
-        base.where(F.pmod(F.col("o_orderkey"), F.lit(dup_every)) == 0)
+        base.where(F.pmod(F.col("o_orderkey"), F.lit(997)) == 0)
         .select(
             F.concat(F.lit("C"), F.col("o_custkey").cast("string"), F.lit("-O"),
                      F.col("o_orderkey").cast("string"), F.lit("D")).alias("doc_id"),
@@ -383,13 +380,13 @@ def replicate_registry(registry: DataFrame, times: int) -> DataFrame:
     )
 
 
-def registry_from_tpch(spark: SparkSession, media_pool: int = 499, dangling_mod: int = 19) -> DataFrame:
-    """Media registry for the TPC-H adapter: keys M0..M{pool-1} except
-    every ``dangling_mod``-th (those stay unregistered ⇒ referential
-    violations); every 23rd key is 'fresh' (first_seen == last_seen)."""
+def registry_from_tpch(spark: SparkSession) -> DataFrame:
+    """Media registry for the TPC-H adapter: keys M0..M498 except every
+    19th (those stay unregistered ⇒ referential violations); every 23rd
+    key is 'fresh' (first_seen == last_seen)."""
     return (
-        spark.range(media_pool)
-        .where(F.pmod(F.col("id"), F.lit(dangling_mod)) != 0)
+        spark.range(TPCH_MEDIA_POOL)
+        .where(F.pmod(F.col("id"), F.lit(19)) != 0)
         .select(
             F.concat(F.lit("M"), F.col("id").cast("string")).alias("media_key"),
             F.to_timestamp(F.lit("2023-06-01 00:00:00")).alias("first_seen"),

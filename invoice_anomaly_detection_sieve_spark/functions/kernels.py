@@ -92,7 +92,11 @@ def jaro_similarity(s1: str, s2: str) -> float:
     return (m / n1 + m / n2 + (m - t) / m) / 3.0
 
 
-def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
+# Winkler's prefix scale; ``jw_batch`` must apply the same one
+_JW_PREFIX_WEIGHT = 0.1
+
+
+def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = _JW_PREFIX_WEIGHT) -> float:
     """Jaro-Winkler similarity with the standard 0.7 boost threshold.
 
     Matches ``rapidfuzz.distance.JaroWinkler.normalized_similarity``
@@ -208,7 +212,7 @@ def _pad_codes(strs: list[str], length: int) -> np.ndarray:
 _JW_BLOCK = 2048
 
 
-def jw_batch(a_strs: list[str], b_strs: list[str], prefix_weight: float = 0.1) -> np.ndarray:
+def jw_batch(a_strs: list[str], b_strs: list[str]) -> np.ndarray:
     """Jaro-Winkler for N string pairs: cache-blocked vectorized passes.
 
     Exact re-expression of ``jaro_winkler_similarity`` (same greedy window
@@ -219,10 +223,10 @@ def jw_batch(a_strs: list[str], b_strs: list[str], prefix_weight: float = 0.1) -
     if n_pairs == 0:
         return np.zeros(0)
     codes, strs = _factorize([*a_strs, *b_strs])
-    return _jw_indexed(strs, codes[:n_pairs], codes[n_pairs:], prefix_weight)
+    return _jw_indexed(strs, codes[:n_pairs], codes[n_pairs:])
 
 
-def _jw_indexed(strs, ia: np.ndarray, ib: np.ndarray, prefix_weight: float = 0.1) -> np.ndarray:
+def _jw_indexed(strs, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
     """Jaro-Winkler of ``(strs[ia[k]], strs[ib[k]])`` for every k. Each
     string is encoded once; pairs are sorted by max length so each block
     pads to ITS longest string (short blocks run fewer position passes),
@@ -242,14 +246,12 @@ def _jw_indexed(strs, ia: np.ndarray, ib: np.ndarray, prefix_weight: float = 0.1
         idx = order[lo : lo + _JW_BLOCK]
         length = max(int(longest[idx[-1]]), 1)
         out[idx] = _jw_batch_block(
-            codes[ia[idx], :length], codes[ib[idx], :length], n1[idx], n2[idx], prefix_weight
+            codes[ia[idx], :length], codes[ib[idx], :length], n1[idx], n2[idx]
         )
     return out
 
 
-def _jw_batch_block(
-    a: np.ndarray, b: np.ndarray, n1: np.ndarray, n2: np.ndarray, prefix_weight: float
-) -> np.ndarray:
+def _jw_batch_block(a: np.ndarray, b: np.ndarray, n1: np.ndarray, n2: np.ndarray) -> np.ndarray:
     """One block of pairs as padded code rows ``a``/``b`` of lengths n1/n2."""
     n_pairs, length = a.shape
 
@@ -304,7 +306,7 @@ def _jw_batch_block(
         eq = alive & (n1 > k) & (n2 > k) & (a[:, k] == b[:, k])
         prefix += eq
         alive = eq
-    sim = np.where(boost, sim + prefix * prefix_weight * (1.0 - sim), sim)
+    sim = np.where(boost, sim + prefix * _JW_PREFIX_WEIGHT * (1.0 - sim), sim)
     sim = np.minimum(1.0, sim)
     equal = (n1 == n2) & (a == b).all(axis=1)
     return np.where(equal, 1.0, sim)
@@ -403,15 +405,15 @@ def linear_sum_assignment(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return np.array(rows[0]), cols[0]
 
 
-def _f(value: Any, default: float = 0.0) -> float:
-    """Tolerant numeric coercion (reference ``_to_float``, app/features.py:11-17)."""
+def _f(value: Any) -> float:
+    """Tolerant numeric coercion to 0.0 (reference ``_to_float``, app/features.py:11-17)."""
     if value is None:
-        return default
+        return 0.0
     try:
         out = float(value)
     except (TypeError, ValueError):
-        return default
-    return default if math.isnan(out) else out
+        return 0.0
+    return 0.0 if math.isnan(out) else out
 
 
 def _flatten(desc_col, num_cols) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
@@ -448,9 +450,6 @@ _CELL_BLOCK = 1 << 18
 def line_assign_batch(
     a_desc, a_qty, a_up, a_amt,
     b_desc, b_qty, b_up,
-    alpha: float = 0.7,
-    beta: float = 0.2,
-    gamma: float = 0.1,
 ) -> np.ndarray:
     """Line-matching features of a batch of document pairs, ``(P, 4)``:
     line_coverage_pct, unmatched_amount_frac, count_new_items,
@@ -495,14 +494,12 @@ def line_assign_batch(
         else:
             segments.append((rows, n, m, ai, b_off[rows][:, None] + np.arange(m)))
         if e == len(order) or chunk[e] != chunk[s]:
-            _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u,
-                         alpha, beta, gamma, out)
+            _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u, out)
             segments = []
     return out
 
 
-def _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u,
-                 alpha, beta, gamma, out) -> None:
+def _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u, out) -> None:
     if not segments:
         return
     los, his = [], []
@@ -517,11 +514,10 @@ def _score_chunk(segments, a_c, b_c, uniques, a_q, a_u, a_a, b_q, b_u,
         size = len(rows) * n * m
         seg_jw = jw[lo : lo + size].reshape(len(rows), n, m)
         lo += size
-        out[rows] = _score_stack(seg_jw, a_q[ai], a_u[ai], a_a[ai], b_q[bi], b_u[bi],
-                                 alpha, beta, gamma)
+        out[rows] = _score_stack(seg_jw, a_q[ai], a_u[ai], a_a[ai], b_q[bi], b_u[bi])
 
 
-def _score_stack(jw, a_q, a_u, a_a, b_q, b_u, alpha, beta, gamma) -> np.ndarray:
+def _score_stack(jw, a_q, a_u, a_a, b_q, b_u) -> np.ndarray:
     """Features of one ``(B, n, m)`` shape group, ``(B, 4)``."""
     n_b, n, m = jw.shape
     up_term = np.minimum(
@@ -530,7 +526,7 @@ def _score_stack(jw, a_q, a_u, a_a, b_q, b_u, alpha, beta, gamma) -> np.ndarray:
     qty_term = np.minimum(
         np.abs(a_q[:, :, None] - b_q[:, None, :]) / np.maximum(np.abs(a_q), 1.0)[:, :, None], 5.0
     )
-    cost = alpha * (1.0 - jw) + beta * up_term + gamma * qty_term
+    cost = 0.7 * (1.0 - jw) + 0.2 * up_term + 0.1 * qty_term
     rows, cols = _assign_stack(cost)
 
     if n <= 8 and m <= 8:
@@ -561,16 +557,12 @@ def _sum_left_to_right(x: np.ndarray) -> np.ndarray:
 def line_assign_features_arrays(
     a_desc, a_qty, a_up, a_amt,
     b_desc, b_qty, b_up,
-    alpha: float = 0.7,
-    beta: float = 0.2,
-    gamma: float = 0.1,
 ) -> tuple[float, float, float, float]:
     """Line-matching features of ONE pair from its per-line arrays:
     (line_coverage_pct, unmatched_amount_frac, count_new_items,
     median_unit_price_diff). The B=1 case of ``line_assign_batch``."""
     feats = line_assign_batch(
-        [a_desc], [a_qty], [a_up], [a_amt], [b_desc], [b_qty], [b_up],
-        alpha=alpha, beta=beta, gamma=gamma,
+        [a_desc], [a_qty], [a_up], [a_amt], [b_desc], [b_qty], [b_up]
     )[0]
     return tuple(float(x) for x in feats)
 
@@ -578,9 +570,6 @@ def line_assign_features_arrays(
 def line_assign_features(
     a_lines: list[dict[str, Any]],
     b_lines: list[dict[str, Any]],
-    alpha: float = 0.7,
-    beta: float = 0.2,
-    gamma: float = 0.1,
 ) -> dict[str, float]:
     """Optimal line-item matching features between two documents.
 
@@ -599,8 +588,7 @@ def line_assign_features(
         return descs, qty, up, [_f(x.get("amount")) for x in lines]
 
     cov, frac, new_items, med = line_assign_features_arrays(
-        *unpack(a_lines, True), *unpack(b_lines, False),
-        alpha=alpha, beta=beta, gamma=gamma
+        *unpack(a_lines, True), *unpack(b_lines, False)
     )
     return {
         "line_coverage_pct": cov,

@@ -202,20 +202,17 @@ def rule_same_po_near_total(
     total_a: Column,
     total_b: Column,
     date_gap_days: Column,
-    pct_tol: float = 0.005,
-    window: int = 30,
 ) -> Column:
     """Same PO, totals within 0.5% of max(|a|,1), ≤30-day gap
     (app/rules.py:15-32)."""
     same_po = po_a.isNotNull() & po_b.isNotNull() & (po_a != "") & (po_b != "") & (po_a == po_b)
     base = F.greatest(F.abs(_nz(total_a)), F.lit(1.0))
-    near = F.abs(_nz(total_a) - _nz(total_b)) <= F.lit(pct_tol) * base
-    return same_po & near & (date_gap_days <= window)
+    near = F.abs(_nz(total_a) - _nz(total_b)) <= F.lit(0.005) * base
+    return same_po & near & (date_gap_days <= 30)
 
 
-def rule_pdf_near_dup(hash_a: Column, hash_b: Column, shingle_jaccard: Column | None = None) -> Column:
-    """Equal content hashes or shingle-Jaccard ≥ 0.9 (app/rules.py:35-38)."""
-    exact = hash_a.isNotNull() & hash_b.isNotNull() & (hash_a == hash_b)
-    if shingle_jaccard is None:
-        return exact
-    return exact | (F.coalesce(shingle_jaccard, F.lit(0.0)) >= 0.9)
+def rule_pdf_near_dup(hash_a: Column, hash_b: Column) -> Column:
+    """Equal non-NULL content hashes (app/rules.py:35-38). The reference
+    also accepts shingle-Jaccard ≥ 0.9 over PDF text, which the documents
+    table does not carry."""
+    return hash_a.isNotNull() & hash_b.isNotNull() & (hash_a == hash_b)

@@ -75,13 +75,12 @@ def guard_hot_keys(df: DataFrame, keys: list[str], max_count: int | None) -> Dat
     )
 
 
-def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin rebalance ``df`` iff it is a shuffle-free (scan-shaped)
-    plan with fewer partitions than the session's default parallelism (or
-    ``min_partitions`` if given). Plans that already contain an exchange
-    are returned unchanged — see _EXCHANGE_NODES."""
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    plan with fewer partitions than the session's default parallelism.
+    Plans that already contain an exchange are returned unchanged — see
+    _EXCHANGE_NODES."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:

@@ -28,6 +28,7 @@ from .balance import bit_bands, bucket_pairs, ensure_min_parallelism
 DEFAULT_SHINGLE = 5
 DEFAULT_MINHASHES = 16
 DEFAULT_BANDS = 4  # 16 hashes / 4 bands -> rows-per-band 4
+SIMHASH_NGRAM = 3  # char n-gram size of every SimHash signature
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via content hash: every doc annotated with its group
@@ -164,8 +165,6 @@ def ngram_jaccard(a_grams: Column, b_grams: Column) -> Column:
 
 def near_duplicates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.8,
     **lsh_kwargs,
 ) -> DataFrame:
@@ -174,10 +173,10 @@ def near_duplicates(
     The scale path: LSH bounds the candidate set, the exact check runs
     only on candidates (join back to per-doc shingle arrays).
     """
-    pairs = minhash_lsh_pairs(docs, text_col, id_col, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(docs, **lsh_kwargs)
     shingles = docs.select(
-        F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), lsh_kwargs.get("shingle", DEFAULT_SHINGLE)).alias("_sh"),
+        F.col("doc_id").alias("_id"),
+        word_shingles(F.col("text"), lsh_kwargs.get("shingle", DEFAULT_SHINGLE)).alias("_sh"),
     )
     a = shingles.select(F.col("_id").alias("a_id"), F.col("_sh").alias("a_sh"))
     b = shingles.select(F.col("_id").alias("b_id"), F.col("_sh").alias("b_sh"))
@@ -219,13 +218,11 @@ def simhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
     out_col: str = "simhash",
-    shingle: int = 3,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, signature) rows via explode + codegen'd aggregation — the
-    shared core of ``with_simhash`` (which joins the signatures back onto
-    the docs) and ``simhash_near_duplicates`` (which consumes the bare
-    signatures and skips that join's shuffle entirely).
+    """(doc_id as ``_id``, signature) rows via explode + codegen'd
+    aggregation — the shared core of ``with_simhash`` (which joins the
+    signatures back onto the docs) and ``simhash_near_duplicates`` (which
+    consumes the bare signatures and skips that join's shuffle entirely).
 
     The 64 bit-majority votes become 64 conditional sums over the exploded
     gram hashes (whole-stage codegen, map-side partial agg ⇒ one row per
@@ -233,8 +230,8 @@ def simhash_signatures(
     bitwise ORs in a final projection. Orders of magnitude faster than the
     interpreted higher-order-function formulation on long documents.
     """
-    staged = docs.select(F.col(id_col).alias("_id"), N.desc_norm(F.col(text_col)).alias("_n"))
-    staged = staged.select("_id", N.char_ngram_set(F.col("_n"), shingle).alias("_g"))
+    staged = docs.select(F.col("doc_id").alias("_id"), N.desc_norm(F.col(text_col)).alias("_n"))
+    staged = staged.select("_id", N.char_ngram_set(F.col("_n"), SIMHASH_NGRAM).alias("_g"))
     ex = staged.select("_id", F.explode_outer("_g").alias("_gram"))
     # materialize the gram hash ONCE as an attribute: each of the 64 bit
     # aggregates below referencing xxhash64(_gram) directly would embed
@@ -262,19 +259,17 @@ def with_simhash(
     docs: DataFrame,
     text_col: str = "text",
     out_col: str = "simhash",
-    shingle: int = 3,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Attach a SimHash column to ``docs`` (join of ``simhash_signatures``)."""
-    sigs = simhash_signatures(docs, text_col, out_col, shingle, id_col)
-    return docs.join(sigs, docs[id_col] == sigs["_id"], "left").drop("_id")
+    sigs = simhash_signatures(docs, text_col, out_col)
+    return docs.join(sigs, docs["doc_id"] == sigs["_id"], "left").drop("_id")
 
 
-def simhash64(col: Column, shingle: int = 3) -> Column:
+def simhash64(col: Column) -> Column:
     """Expression form of SimHash (small inputs / tests): convenient but
     re-evaluates the gram pipeline inside each bit expression — prefer
     ``with_simhash`` on DataFrames of any size."""
-    grams = N.char_ngram_set(N.desc_norm(col), shingle)
+    grams = N.char_ngram_set(N.desc_norm(col), SIMHASH_NGRAM)
     return simhash64_from_hashes(F.transform(grams, lambda g: F.xxhash64(g)))
 
 
@@ -285,10 +280,7 @@ def hamming64(a: Column, b: Column) -> Column:
 
 def simhash_near_duplicates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
-    bands: int | None = None,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """SimHash near-dup pairs via banded buckets — exact recall when
@@ -299,7 +291,7 @@ def simhash_near_duplicates(
     distance ≤ bands−1 differs in at most bands−1 bands, so some band
     matches — full recall for ``max_hamming ≤ bands − 1`` (the earlier
     single-prefix bucketing silently missed near-dups differing inside the
-    prefix). ``bands`` defaults to the smallest divisor of 64 that covers
+    prefix). ``bands`` is the smallest divisor of 64 that covers
     ``max_hamming`` (4 for the default radius 3 ⇒ 16-bit bands). Each doc
     explodes into ``bands`` bucket rows ⇒ one shuffle on (band, band_bits);
     pairs deduped before the exact Hamming check.
@@ -312,35 +304,22 @@ def simhash_near_duplicates(
     (a pair survives if any of its other shared bands is under the cap);
     pass ``None`` to keep exact recall. Output: a_id, b_id, hamming.
     """
-    if bands is None:
-        bands = next(
-            (b for b in (1, 2, 4, 8, 16, 32) if b >= max_hamming + 1), None
-        )
-        if bands is None:  # max_hamming >= 32: no 64-divisor band count covers it
-            raise ValueError(
-                f"banded SimHash over 64 bits supports max_hamming <= 31 "
-                f"(needs bands >= max_hamming+1 dividing 64; got "
-                f"max_hamming={max_hamming})"
-            )
-    if max_hamming > bands - 1:
+    bands = next((b for b in (1, 2, 4, 8, 16, 32) if b >= max_hamming + 1), None)
+    if bands is None:  # max_hamming >= 32: no 64-divisor band count covers it
         raise ValueError(
-            f"banded SimHash guarantees recall only for max_hamming <= bands-1 "
-            f"(got max_hamming={max_hamming}, bands={bands})"
+            f"banded SimHash over 64 bits supports max_hamming <= 31 "
+            f"(needs bands >= max_hamming+1 dividing 64; got "
+            f"max_hamming={max_hamming})"
         )
-    if 64 % bands:
-        raise ValueError("bands must divide 64")
     width = 64 // bands
     # null-text docs: no grams => identical degenerate signatures would
     # pair every null doc with every other (hamming 0); the oracle's
     # NULL-neq-NULL join excludes them — align (no text, no evidence)
-    docs = docs.where(F.col(text_col).isNotNull())
+    docs = docs.where(F.col("text").isNotNull())
     # bare (id, sig) rows: joining the signatures back onto docs (the old
     # with_simhash call) paid a full extra shuffle join only to re-project
     # the two columns again
-    sig = simhash_signatures(
-        ensure_min_parallelism(docs).select(F.col(id_col).alias("_docid"), F.col(text_col)),
-        text_col, "sig", id_col="_docid",
-    )
+    sig = simhash_signatures(ensure_min_parallelism(docs).select("doc_id", "text"), "text", "sig")
     return (
         bucket_pairs(sig, bit_bands(F.col("sig"), width, bands), "_id", ("sig",),
                      max_bucket=max_bucket, op="simhash_near_duplicates")
@@ -364,8 +343,6 @@ def _release_checkpoint(df: DataFrame) -> None:
 
 def duplicate_clusters(
     pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
     max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list.
@@ -392,7 +369,7 @@ def duplicate_clusters(
     """
     # undirected edge list, both directions, so one join step propagates
     # labels across every edge
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    e = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -449,16 +426,12 @@ def duplicate_clusters(
     return labels.select(F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id"))
 
 
-def keep_canonical(
-    docs: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def keep_canonical(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Drop every clustered doc except its cluster's canonical member.
 
     The canonical doc IS the cluster_id (min doc_id of the component), so
     the kill list is just ``doc_id != cluster_id`` — one broadcast-able
     anti-join against docs (the kill list is O(duplicates), tiny relative
     to the corpus)."""
-    kill = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return docs.join(kill, id_col, "left_anti")
+    kill = clusters.where(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+    return docs.join(kill, "doc_id", "left_anti")

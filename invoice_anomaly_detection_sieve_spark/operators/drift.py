@@ -32,7 +32,6 @@ from ..functions import scoring as S
 BENFORD_EXPECTED = [math.log10(1 + 1 / d) for d in range(1, 10)]
 Z_OUTLIER_THRESHOLD = 2.5  # app/anomaly.py:85
 PSI_ALERT = 0.2  # industry-standard "significant shift" cut
-BENFORD_MAD_ALERT = 0.015  # Nigrini's conformity bound (reported)
 BENFORD_CHI2_ALERT = 26.12  # χ² critical value, df=8, α=0.001 (the flag)
 
 
@@ -100,6 +99,8 @@ def benford_stats(profiles: DataFrame) -> DataFrame:
     """Benford conformity per partition from the profiled digit histogram.
 
     Output: part, benford_n, benford_chi2, benford_mad, benford_fail.
+    ``benford_fail`` is the χ² test; ``benford_mad`` is reported only, to
+    be read against Nigrini's conformity bound of 0.015.
     """
     from ..functions.exprcache import cached_exprs
 

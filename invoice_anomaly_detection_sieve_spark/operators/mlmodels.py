@@ -6,12 +6,12 @@ Forest / one-class SVM on engineered features" (ML-003,
 is the textbook isolation forest (Liu, Ting, Zhou 2008) on numpy, split
 into two bounded-memory phases:
 
-1. FIT (``fit_forests``): per group, a deterministic bounded sample pool —
-   the ``pool_factor × sample`` rows with the smallest
-   ``(xxhash64(id), id)`` — is assembled with a cheap count + hash-stride
-   pre-filter + small top-k window, then a grouped-map builds the trees
+1. FIT (``fit_forests``): per ``part``, a deterministic bounded sample
+   pool — the ``_POOL`` rows with the smallest
+   ``(xxhash64(doc_id, total), doc_id)`` — is assembled with a small
+   top-k window, then a grouped-map builds the trees
    from per-tree subsamples of the pool. The pandas group a worker sees is
-   ≤ the pool size (default 1024 rows), NEVER the whole partition.
+   ≤ the pool size (1024 rows), NEVER the whole partition.
 2. SCORE (``isolation_scores``): the fitted models (one small JSON blob
    per group) are collected and broadcast — O(groups), the same
    broadcast-scale assumption as the profile baselines — and every row is
@@ -37,6 +37,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _EULER = 0.5772156649015329
+# the fit and the score must agree on the features and the tree count
+_FEATURES = ["total"]
+_N_TREES = 32
+_SAMPLE = 256  # rows per tree
+_POOL = 4 * _SAMPLE  # rows per group the trees are drawn from
 
 
 def _c(n: float) -> float:
@@ -83,21 +88,13 @@ def _path_length(tree, x: np.ndarray, depth: int = 0) -> np.ndarray:
     return out
 
 
-def fit_forests(
-    docs: DataFrame,
-    features: tuple[str, ...] = ("total",),
-    group_col: str = "part",
-    id_col: str = "doc_id",
-    n_trees: int = 32,
-    sample: int = 256,
-    pool_factor: int = 4,
-) -> DataFrame:
-    """Fit one isolation forest per group from a bounded deterministic
-    sample. Output: (group, model, psi) — ``model`` is the JSON tree list
+def fit_forests(docs: DataFrame) -> DataFrame:
+    """Fit one isolation forest per ``part`` from a bounded deterministic
+    sample. Output: (part, model, psi) — ``model`` is the JSON tree list
     (NULL for groups under 8 rows), ``psi`` the per-tree subsample size.
 
-    The pool is the ``pool_factor × sample`` rows with smallest
-    ``(xxhash64(id, features...), id)``. The ``row_number() <= pool``
+    The pool is the ``_POOL`` rows with smallest
+    ``(xxhash64(doc_id, features...), doc_id)``. The ``row_number() <= _POOL``
     filter is rewritten by Catalyst's WindowGroupLimit (Spark 3.5+) into
     a per-map-task partial top-k, so the exchange carries O(tasks × pool)
     rows per group, never a full per-group sort — the previous
@@ -107,55 +104,41 @@ def fit_forests(
     a default 0.5). Hashing the feature values alongside the id keeps
     the rank deterministic yet row-distinct under duplicate ids.
     """
-    feat_list = list(features)
-    pool = pool_factor * sample
-    h = F.xxhash64(F.col(id_col), *[F.col(f) for f in feat_list])
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())
+    h = F.xxhash64(F.col("doc_id"), *[F.col(f) for f in _FEATURES])
+    w = Window.partitionBy("part").orderBy(h.asc(), F.col("doc_id").asc())
     pooled = (
-        docs.select(group_col, id_col, *feat_list)
+        docs.select("part", "doc_id", *_FEATURES)
         .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= pool)
+        .where(F.col("_rk") <= _POOL)
     )
 
-    schema = f"{group_col} string, model string, psi long"
-
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = str(pdf[group_col].iloc[0])
+        part = str(pdf["part"].iloc[0])
         pdf = pdf.sort_values("_rk")
-        x = pdf[feat_list].to_numpy(dtype=np.float64)
+        x = pdf[_FEATURES].to_numpy(dtype=np.float64)
         x = np.where(np.isnan(x), 0.0, x)
         n = len(x)
         if n < 8:
-            return pd.DataFrame({group_col: [part], "model": [None], "psi": [n]})
+            return pd.DataFrame({"part": [part], "model": [None], "psi": [n]})
         seed = int.from_bytes(hashlib.sha256(part.encode()).digest()[:4], "big")
         rng = np.random.RandomState(seed)
-        psi = min(sample, n)
+        psi = min(_SAMPLE, n)
         limit = int(np.ceil(np.log2(max(psi, 2))))
         trees = []
-        for _ in range(n_trees):
+        for _ in range(_N_TREES):
             idx = rng.choice(n, size=psi, replace=False)
             trees.append(_build_tree(rng, x[idx], 0, limit))
-        return pd.DataFrame(
-            {group_col: [part], "model": [json.dumps(trees)], "psi": [psi]}
-        )
+        return pd.DataFrame({"part": [part], "model": [json.dumps(trees)], "psi": [psi]})
 
-    return pooled.groupBy(group_col).applyInPandas(_fit, schema)
+    return pooled.groupBy("part").applyInPandas(_fit, "part string, model string, psi long")
 
 
-def isolation_scores(
-    docs: DataFrame,
-    features: tuple[str, ...] = ("total",),
-    group_col: str = "part",
-    id_col: str = "doc_id",
-    n_trees: int = 32,
-    sample: int = 256,
-    score_threshold: float = 0.65,
-    max_groups: int = 65_536,
-) -> DataFrame:
-    """Per-doc isolation-forest anomaly score within each partition.
+def isolation_scores(docs: DataFrame, max_groups: int = 65_536) -> DataFrame:
+    """Per-doc isolation-forest anomaly score of ``total`` within each
+    ``part``.
 
     Output: part, doc_id, iso_score (∈(0,1], higher = more anomalous),
-    iso_flag (score > threshold; 0.65 ≈ the conventional "anomaly" cut).
+    iso_flag (score > 0.65, the conventional "anomaly" cut).
     NULL/NaN features are zero-filled (the engine's tolerant-coercion
     convention). Partitions with < 8 rows emit score 0.5
     (indistinguishable) — the cold-start analog of the z-score gate.
@@ -170,28 +153,24 @@ def isolation_scores(
     instead of OOMing the driver mid-collect. Raise it deliberately if
     your driver is sized for more; each model blob is ~10-40 KB.
     """
-    feat_list = list(features)
     # the guard rides the fit itself: fit_forests emits exactly one row
     # per group, so counting its (persisted) output enforces the
     # driver-memory bound with ZERO extra passes over docs — a separate
     # distinct() census re-evaluated the whole upstream plan
-    models_df = fit_forests(docs, features, group_col, id_col, n_trees, sample).persist()
+    models_df = fit_forests(docs).persist()
     n_groups = models_df.count()
     if n_groups > max_groups:
         models_df.unpersist()
         raise ValueError(
-            f"isolation_scores fits one model per '{group_col}' group and "
+            f"isolation_scores fits one model per 'part' group and "
             f"broadcasts them all: {n_groups} groups exceeds max_groups="
             f"{max_groups} (~{max_groups * 20 // 1024} MB of driver memory). "
             f"Score per-group slices separately or raise max_groups if the "
             f"driver is sized for it."
         )
-    models = {
-        r[group_col]: (r["model"], int(r["psi"])) for r in models_df.collect()
-    }
+    models = {r["part"]: (r["model"], int(r["psi"])) for r in models_df.collect()}
     models_df.unpersist()
     bc = docs.sparkSession.sparkContext.broadcast(models)
-    schema = f"{group_col} string, {id_col} string, iso_score double, iso_flag boolean"
 
     def _score_iter(batches):
         cache: dict = {}
@@ -206,10 +185,10 @@ def isolation_scores(
             return cache[part]
 
         for pdf in batches:
-            x = pdf[feat_list].to_numpy(dtype=np.float64)
+            x = pdf[_FEATURES].to_numpy(dtype=np.float64)
             x = np.where(np.isnan(x), 0.0, x)
             score = np.full(len(pdf), 0.5)
-            for part, idx in pdf.groupby(group_col, dropna=False).indices.items():
+            for part, idx in pdf.groupby("part", dropna=False).indices.items():
                 fitted = forest(str(part))
                 if fitted is None:
                     continue
@@ -219,15 +198,17 @@ def isolation_scores(
                 for t in trees:
                     paths += _path_length(t, xs)
                 score[idx] = np.power(
-                    2.0, -(paths / n_trees) / max(_c(float(psi)), 1e-12)
+                    2.0, -(paths / _N_TREES) / max(_c(float(psi)), 1e-12)
                 )
             yield pd.DataFrame(
                 {
-                    group_col: pdf[group_col].astype(str),
-                    id_col: pdf[id_col].astype(str),
+                    "part": pdf["part"].astype(str),
+                    "doc_id": pdf["doc_id"].astype(str),
                     "iso_score": score,
-                    "iso_flag": score > score_threshold,
+                    "iso_flag": score > 0.65,
                 }
             )
 
-    return docs.select(group_col, id_col, *feat_list).mapInPandas(_score_iter, schema)
+    return docs.select("part", "doc_id", *_FEATURES).mapInPandas(
+        _score_iter, "part string, doc_id string, iso_score double, iso_flag boolean"
+    )

@@ -9,12 +9,10 @@ span model's ``media_ref`` resolves to rows of a media table:
 
 Decode / feature-extract / resize / frame-sample run as Arrow-batched
 ``mapInPandas`` stages. General codec libraries (PIL/ffmpeg/torchaudio)
-are not in this container, so ``decode_stub=True`` (the default) derives
-a deterministic fake feature vector from the payload bytes; with
-``decode_stub=False`` one REAL pure-numpy decoder per modality is wired
-in — uncompressed 24-bit BMP for images, PCM-16 WAV for audio, and
-YUV4MPEG2 (y4m) for video frame sampling (all public fixed layouts that
-need no codec library). Payloads in any other format fail per-row
+are not in this container, so one REAL pure-numpy decoder per modality
+is wired in: uncompressed 24-bit BMP for images, PCM-16 WAV for audio,
+and YUV4MPEG2 (y4m) for video frame sampling (all public fixed layouts
+that need no codec library). Payloads in any other format fail per-row
 (``decode_ok=False`` / no emitted frames), never the job.
 """
 
@@ -178,7 +176,7 @@ def decode_y4m(payload: bytes) -> tuple[list[np.ndarray], float]:
     return frames, float(fps)
 
 
-def _decode_image(payload: bytes, meta, dim: int = 64) -> np.ndarray:
+def _decode_image(payload: bytes, dim: int = 64) -> np.ndarray:
     """Real image path: BMP → grayscale → block-mean resize to a √dim
     grid → [0, 1] floats. (PIL would slot in here for general formats.)"""
     img = decode_bmp(payload)
@@ -198,7 +196,7 @@ def _decode_image(payload: bytes, meta, dim: int = 64) -> np.ndarray:
     return vec[:dim]
 
 
-def _decode_audio(payload: bytes, meta, dim: int = 64) -> np.ndarray:
+def _decode_audio(payload: bytes, dim: int = 64) -> np.ndarray:
     """Real audio path: PCM-16 WAV → rFFT magnitude → ``dim`` band means
     (log1p-compressed, peak-normalized)."""
     x, _rate = decode_wav(payload)
@@ -211,22 +209,7 @@ def _decode_audio(payload: bytes, meta, dim: int = 64) -> np.ndarray:
     return vec / peak if peak > 0 else vec
 
 
-def _fake_features(payload: bytes, dim: int = 64) -> np.ndarray:
-    out = np.empty(dim, dtype=np.float32)
-    h = b""
-    raw = payload or b""
-    i = 0
-    while i < dim:
-        h = hashlib.sha256(h + raw[:256]).digest()
-        take = min(dim - i, len(h))
-        out[i : i + take] = np.frombuffer(h[:take], dtype=np.uint8).astype(np.float32) / 255.0
-        i += take
-    return out
-
-
-def extract_media_features(
-    media: DataFrame, dim: int = 64, decode_stub: bool = True
-) -> DataFrame:
+def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
     """Decode + featurize media rows via ``mapInPandas`` (Arrow batches).
 
     Partition-friendly: stateless per batch, no shuffle; heavy rows stay on
@@ -237,14 +220,12 @@ def extract_media_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, ok = [], []
-            for payload, kind, meta in zip(pdf["payload"], pdf["kind"], pdf["meta"]):
+            for payload, kind in zip(pdf["payload"], pdf["kind"]):
                 try:
-                    if decode_stub:
-                        vec = _fake_features(payload, dim)
-                    elif kind == "image":
-                        vec = _decode_image(payload, meta, dim)
+                    if kind == "image":
+                        vec = _decode_image(payload, dim)
                     elif kind == "audio":
-                        vec = _decode_audio(payload, meta, dim)
+                        vec = _decode_audio(payload, dim)
                     else:
                         raise ValueError(f"no real decoder for kind={kind}")
                     feats.append([float(x) for x in vec])
@@ -265,69 +246,35 @@ def extract_media_features(
     return media.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, decode_stub: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video rows: emits (media_key, frame_idx,
     frame hash) per sampled frame — one output row per sampled frame, the
     fan-out governed by the video's own timing.
 
-    ``decode_stub=False`` runs the REAL pure-numpy YUV4MPEG2 decoder
-    (``decode_y4m``): the payload's frames are decoded to RGB, sampled at
-    the stream's frame rate every ``every_ms``, and each emitted hash is
-    the sha256 of the sampled frame's actual pixel bytes (frame_idx = the
-    source frame index). Undecodable payloads fail per-row, never the job.
-    With the stub (default), the sampled-frame count comes from
-    ``meta.duration_ms`` and hashes are deterministic payload-slice
-    hashes — the fan-out shape without a codec dependency.
+    The pure-numpy YUV4MPEG2 decoder (``decode_y4m``) decodes the
+    payload's frames to RGB; they are sampled at the stream's frame rate
+    every ``every_ms``, and each emitted hash is the sha256 of the sampled
+    frame's pixel bytes (frame_idx = the source frame index). Undecodable
+    payloads contribute no frames, never fail the job.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             keys, idxs, hashes = [], [], []
-            for key, payload, meta in zip(pdf["media_key"], pdf["payload"], pdf["meta"]):
-                raw = payload or b""
-                if not decode_stub:
-                    try:
-                        frames, fps = decode_y4m(raw)
-                    except ValueError:
-                        continue  # undecodable row: contributes no frames
-                    step = max(1, int(round(fps * every_ms / 1000.0)))
-                    for i in range(0, len(frames), step):
-                        keys.append(key)
-                        idxs.append(i)
-                        hashes.append(hashlib.sha256(frames[i].tobytes()).hexdigest())
-                    continue
-                duration = 0
-                if meta is not None:
-                    duration = (meta.get("duration_ms") if isinstance(meta, dict) else meta["duration_ms"]) or 0
-                n_frames = max(1, duration // every_ms)
-                for i in range(int(n_frames)):
+            for key, payload in zip(pdf["media_key"], pdf["payload"]):
+                try:
+                    frames, fps = decode_y4m(payload or b"")
+                except ValueError:
+                    continue  # undecodable row: contributes no frames
+                step = max(1, int(round(fps * every_ms / 1000.0)))
+                for i in range(0, len(frames), step):
                     keys.append(key)
                     idxs.append(i)
-                    hashes.append(hashlib.sha256(raw + i.to_bytes(4, "big")).hexdigest())
+                    hashes.append(hashlib.sha256(frames[i].tobytes()).hexdigest())
             yield pd.DataFrame({"media_key": keys, "frame_idx": idxs, "frame_sha256": hashes})
 
     return media.where(F.col("kind") == "video").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
-
-def synth_media(spark, n: int = 50, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (payload = seeded bytes)."""
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = bytes(rng.getrandbits(8) for _ in range(128))
-        meta = {
-            "width": 64 if kind == "image" else None,
-            "height": 64 if kind == "image" else None,
-            "sample_rate": 16000 if kind == "audio" else None,
-            "duration_ms": 3500 if kind == "video" else None,
-            "mime": f"{kind}/x-fake",
-        }
-        rows.append((f"MK-{i}", kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 # --------------------------------------------------------------------------
 # real-format synthesis + metadata probe (the oracle-checkable surface)
@@ -370,13 +317,11 @@ def encode_wav_pcm16(samples_i16: np.ndarray, rate: int) -> bytes:
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 
 
-def encode_y4m(frames_yuv, fps=(25, 1), chroma: str = "420") -> bytes:
-    """Minimal YUV4MPEG2 writer (inverse of ``decode_y4m``): frames_yuv is
-    a list of (Y, Cb, Cr) uint8 planes (Cb/Cr quarter-size for C420)."""
+def encode_y4m(frames_yuv, fps=(25, 1)) -> bytes:
+    """Minimal C420 YUV4MPEG2 writer (inverse of ``decode_y4m``):
+    frames_yuv is a list of (Y, Cb, Cr) uint8 planes, Cb/Cr quarter-size."""
     h, w = frames_yuv[0][0].shape
-    out = bytearray(
-        f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 C{chroma}\n".encode()
-    )
+    out = bytearray(f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 C420\n".encode())
     for y, cb, cr in frames_yuv:
         out += b"FRAME\n" + y.tobytes() + cb.tobytes() + cr.tobytes()
     return bytes(out)
@@ -431,11 +376,11 @@ def probe_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, MEDIA_PROBE_SCHEMA)
 
 
-def synth_verification_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL-format media corpus derived deterministically from an integer
-    id column — every decoded property is an integer function of the id,
-    so an independent engine (the DuckDB correctness oracle) recomputes
-    the expected decode output without touching the decoders:
+def synth_verification_media(ids: DataFrame) -> DataFrame:
+    """REAL-format media corpus derived deterministically from the integer
+    ``doc_id`` column — every decoded property is an integer function of
+    the id, so an independent engine (the DuckDB correctness oracle)
+    recomputes the expected decode output without touching the decoders:
 
     - ``id % 3 == 0`` → image: 8×8 24-bit BMP, all three channels of the
       TOP-DOWN pixel (x, y) equal to ``(id + 7*(8*y + x)) % 256`` — so the
@@ -455,7 +400,7 @@ def synth_verification_media(ids: DataFrame, id_col: str = "doc_id") -> DataFram
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             keys, kinds, payloads, metas = [], [], [], []
-            for raw_id in pdf[id_col]:
+            for raw_id in pdf["doc_id"]:
                 i = int(raw_id)
                 keys.append(str(i))
                 m = i % 3
@@ -487,4 +432,4 @@ def synth_verification_media(ids: DataFrame, id_col: str = "doc_id") -> DataFram
             yield pd.DataFrame({"media_key": keys, "kind": kinds,
                                 "payload": payloads, "meta": metas})
 
-    return ids.select(id_col).mapInPandas(run, MEDIA_SCHEMA)
+    return ids.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)

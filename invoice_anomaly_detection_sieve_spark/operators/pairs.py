@@ -152,12 +152,14 @@ def _features_per_pair(docs: DataFrame, pairs: DataFrame) -> DataFrame:
       payload fanned out per pair (the other payload joins against pair
       rows already clustered on its key), and the B payload is the
       lighter one (no line_amts — the unmatched-amount feature reads only
-      the A side's amounts). Ending on the a_doc_id join also leaves the
-      kernel's output hash-partitioned by a_doc_id, which the top-k
-      window and the per-doc rollup downstream reuse — the old a-first
-      order shuffled the a-payload (4 line arrays) per pair AND re-
-      exchanged the kernel output for the window (3 exchanges of
-      pair-fanned payloads; now 1).
+      the A side's amounts). The old a-first order also shuffled
+      the a-payload (4 line arrays) per pair: 3 exchanges of pair-fanned
+      payloads, now 1. The top-k window downstream does not
+      reuse the a_doc_id partitioning of the last join: the formatted
+      plan has ``Exchange hashpartitioning(a_doc_id, n)`` right above the
+      kernel, fed by a partial ``WindowGroupLimit``, so the kernel output
+      is shuffled once more — 8 slim columns, at most k rows per doc per
+      task.
     """
     a = _prefixed(docs, "a_")
     b = _prefixed(docs, "b_")

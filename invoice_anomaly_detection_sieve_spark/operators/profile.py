@@ -10,11 +10,7 @@ edges), and the leading-digit histogram that feeds the Benford check
 One shuffle total. Every sketch used (``approx_count_distinct``,
 ``percentile_approx``) is a mergeable aggregate, so Catalyst's partial
 (map-side) aggregation already defuses row-count skew: a hot partition
-combines locally on every input split before the single exchange. The
-salted two-stage variant below exists for the moment-only profile where an
-explicit pre-shuffle spread is wanted (north_rule mandates explicit skew
-handling); it demonstrates the pattern used for genuinely non-mergeable
-aggregations.
+combines locally on every input split before the single exchange.
 """
 
 from __future__ import annotations
@@ -32,7 +28,7 @@ def leading_digit(col):
     return F.regexp_extract(F.abs(col).cast("string"), "[1-9]", 0)
 
 
-def profile(docs: DataFrame, field: str = "total", group_col: str = "part") -> DataFrame:
+def profile(docs: DataFrame, field: str = "total") -> DataFrame:
     """Profile one numeric field per partition — single groupBy.
 
     Output: part, field, cnt, null_rate, approx_distinct, mean, std,
@@ -48,7 +44,7 @@ def profile(docs: DataFrame, field: str = "total", group_col: str = "part") -> D
         # separate aggregate expressions get no common-subexpression
         # elimination — inlined, the regexp (abs → cast-to-string → regex
         # scan) ran 9× per input row (same fix as the simhash gram hash)
-        return [F.col(group_col), F.col(field).alias("_v"),
+        return [F.col("part"), F.col(field).alias("_v"),
                 leading_digit(F.col(field)).alias("_d")]
 
     def _agg_cols():
@@ -78,7 +74,7 @@ def profile(docs: DataFrame, field: str = "total", group_col: str = "part") -> D
     def _out_cols():
         nq = len(PROFILE_QUANTILES)
         return [
-            F.col(group_col).alias("part"),
+            F.col("part"),
             F.lit(field).alias("field"),
             F.col("cnt"),
             F.col("null_rate"),
@@ -91,67 +87,21 @@ def profile(docs: DataFrame, field: str = "total", group_col: str = "part") -> D
             F.col("sample_count"),
         ]
 
-    staged = docs.select(*cached_exprs(("profile.in", field, group_col), _in_cols))
-    agg = staged.groupBy(group_col).agg(
-        *cached_exprs(("profile.agg", field, group_col), _agg_cols)
-    )
-    return agg.select(*cached_exprs(("profile.out", field, group_col), _out_cols))
+    staged = docs.select(*cached_exprs(("profile.in", field), _in_cols))
+    agg = staged.groupBy("part").agg(*cached_exprs(("profile.agg", field), _agg_cols))
+    return agg.select(*cached_exprs(("profile.out", field), _out_cols))
 
 
-def digit_histogram(docs: DataFrame, field: str = "total", group_col: str = "part") -> DataFrame:
+def digit_histogram(docs: DataFrame, field: str = "total") -> DataFrame:
     """Leading-digit histogram alone (the Benford input) — one slim
     groupBy for testing CURRENT data against the Benford expectation when
     a stored baseline supplies the rest of the profile (recomputing the
     full profile just for its digit_hist would waste the sketch work)."""
     # digit materialized as an attribute below the aggregate: 9 separate
     # sum aggregates referencing the regexp inline would each re-run it
-    staged = docs.select(F.col(group_col), leading_digit(F.col(field)).alias("_d"))
+    staged = docs.select(F.col("part"), leading_digit(F.col(field)).alias("_d"))
     digit = F.col("_d")
-    return (
-        staged.groupBy(group_col)
-        .agg(
-            F.array(
-                *[F.sum((digit == str(d)).cast("long")) for d in range(1, 10)]
-            ).alias("digit_hist")
-        )
-        .select(F.col(group_col).alias("part"), "digit_hist")
-    )
-
-
-def profile_moments_salted(
-    docs: DataFrame, field: str = "total", group_col: str = "part", n_salt: int = 16
-) -> DataFrame:
-    """Two-stage salted mean/std/count — the explicit skew pattern.
-
-    Stage 1 groups on (part, salt) where salt = pmod(xxhash64(doc_id),
-    n_salt), spreading one hot partition over ``n_salt`` reducers; stage 2
-    merges exact sufficient statistics (n, Σx, Σx²). Matches ``profile``'s
-    mean/std/cnt exactly (stddev_samp, NULL→0 like train_anomaly.py:33).
-    """
-    col = F.col(field)
-    salted = docs.withColumn("_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salt)))
-    stage1 = salted.groupBy(group_col, "_salt").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(col).alias("n"),
-        F.sum(col).alias("s1"),
-        F.sum(col * col).alias("s2"),
-    )
-    merged = stage1.groupBy(group_col).agg(
-        F.sum("n_rows").alias("cnt"),
-        F.sum("n").alias("sample_count"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-    )
-    n = F.col("sample_count")
-    mean = F.col("s1") / n
-    # sample variance: (Σx² − n·μ²) / (n−1), guarded like stddev_samp
-    var = F.when(n > 1, (F.col("s2") - n * mean * mean) / (n - 1)).otherwise(F.lit(None))
-    return merged.select(
-        F.col(group_col).alias("part"),
-        F.lit(field).alias("field"),
-        "cnt",
-        mean.alias("mean"),
-        F.coalesce(F.sqrt(F.greatest(var, F.lit(0.0))), F.lit(0.0)).alias("std"),
-        "sample_count",
+    return staged.groupBy("part").agg(
+        F.array(*[F.sum((digit == str(d)).cast("long")) for d in range(1, 10)]).alias("digit_hist")
     )
 

@@ -11,12 +11,6 @@ LINE_SUM_TOL = 0.01  # header total vs Σ line amounts within ±1%
 MAX_FUTURE_DAYS = 365
 VALID_CURRENCIES = ["USD", "EUR", "GBP", "CAD", "AUD", "JPY", "CHF", "CNY", "INR", "MXN"]
 
-DQ_REASONS = {
-    "dq_line_sum_mismatch": "LINE_SUM_MISMATCH",
-    "dq_bad_currency": "INVALID_CURRENCY",
-    "dq_future_date": "IMPLAUSIBLE_DATE",
-}
-
 
 def line_sum_mismatch(total: Column, line_amount_sum: Column, n_lines: Column) -> Column:
     """|Σ lines − total| > 1%·max(|total|, 1) — only when lines exist."""

@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def stratified_sample(
-    df: DataFrame, group_col: str, k: int, id_col: str = "doc_id"
-) -> DataFrame:
+def stratified_sample(df: DataFrame, group_col: str, k: int) -> DataFrame:
     """Exactly ``min(k, group size)`` rows per group, chosen by md5 rank.
 
     Plan: one shuffle on ``group_col``; the rank predicate is a
@@ -30,11 +28,11 @@ def stratified_sample(
     top-k before the exchange, so the shuffle carries O(groups * k) rows,
     not the corpus. The md5 order is uniform in the id (so the sample is
     unbiased w.r.t. any data column) and reproducible across engines,
-    runs, and partitionings; ``id_col`` breaks md5 ties so the output is
+    runs, and partitionings; ``doc_id`` breaks md5 ties so the output is
     total-ordered even under (astronomically unlikely) digest collisions.
     """
     w = Window.partitionBy(group_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))
@@ -43,10 +41,9 @@ def stratified_sample(
     )
 
 
-def hash_fraction_sample(
-    df: DataFrame, fraction_pct: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep ~``fraction_pct``% of rows, deterministically, with NO shuffle.
+def hash_fraction_sample(df: DataFrame, fraction_pct: int) -> DataFrame:
+    """Keep ~``fraction_pct``% of rows, deterministically by ``doc_id``,
+    with NO shuffle.
 
     The predicate is a pure column expression (md5 hex prefix compared to
     a threshold), so it pushes into the scan and costs nothing beyond the
@@ -65,5 +62,5 @@ def hash_fraction_sample(
     if buckets >= 256:
         return df
     threshold = format(buckets, "02x")
-    prefix = F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
+    prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     return df.where(prefix < F.lit(threshold))

@@ -46,8 +46,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -55,10 +53,10 @@ def brute_force_topk(
     excluded. Output: query_id, neighbor_id, rank, cos_sim.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -74,10 +72,10 @@ def brute_force_topk(
 
 
 @lru_cache(maxsize=32)
-def hyperplane_weights(dim: int, bits: int = 16, seed: int = 7) -> np.ndarray:
+def hyperplane_weights(dim: int, bits: int = 16) -> np.ndarray:
     """Deterministic pseudo-random hyperplane matrix (bits × dim).
 
-    w(b, i) = (sha256("{seed}:{b}:{i}")[:8] % 1001) − 500 — integer,
+    w(b, i) = (sha256("7:{b}:{i}")[:8] % 1001) − 500 — integer,
     reproducible across runs/workers, computed ONCE per worker and cached
     (the round-1 formulation re-evaluated a hash per (bit × dimension)
     inside interpreted zip_with lambdas — ~768 hash evals per row).
@@ -86,13 +84,13 @@ def hyperplane_weights(dim: int, bits: int = 16, seed: int = 7) -> np.ndarray:
     for b in range(bits):
         for i in range(dim):
             h = int.from_bytes(
-                hashlib.sha256(f"{seed}:{b}:{i}".encode()).digest()[:8], "big"
+                hashlib.sha256(f"7:{b}:{i}".encode()).digest()[:8], "big"
             )
             w[b, i] = float(h % 1001) - 500.0
     return w
 
 
-def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 7) -> Column:
+def hyperplane_signature(vec: Column, dim: int, bits: int = 16) -> Column:
     """Random-hyperplane LSH signature as a ``bits``-bit integer.
 
     One Arrow-vectorized pass: each batch of vectors becomes a (batch ×
@@ -104,7 +102,7 @@ def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 7) -
     from pyspark.sql.functions import pandas_udf
 
     def _sig(batch: pd.Series) -> pd.Series:
-        w = hyperplane_weights(dim, bits, seed)
+        w = hyperplane_weights(dim, bits)
         if len(batch) == 0:
             return pd.Series(np.empty(0, dtype=np.int64))
         # null / ragged / malformed vectors degrade to a NULL signature
@@ -132,8 +130,6 @@ def lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     bits: int = 12,
     bands: int = 3,
@@ -151,8 +147,8 @@ def lsh_topk(
     to one band pattern), the same hot-key guard as every other pair
     generator here."""
     def with_bands(df, prefix):
-        sig = hyperplane_signature(F.col(vec_col), dim, bits)
-        out = df.select(F.col(id_col).alias(f"{prefix}_id"), sig.alias("_sig"))
+        sig = hyperplane_signature(F.col("embedding"), dim, bits)
+        out = df.select(F.col("vec_id").alias(f"{prefix}_id"), sig.alias("_sig"))
         band_arr = bit_bands(F.col("_sig"), bits // bands, bands)
         return out.select(f"{prefix}_id", F.explode(band_arr).alias("bucket"))
 
@@ -164,10 +160,10 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     q_vecs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     c_vecs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("neighbor_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("neighbor_vec")
     )
     cand = (
         pair_ids.join(q_vecs, "query_id")
@@ -185,8 +181,6 @@ def lsh_topk(
 def ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """Deterministic coarse quantizer for IVF: the ``n_centroids`` corpus
     vectors of smallest ``md5(id)`` rank — a uniform, engine-reproducible
@@ -201,9 +195,9 @@ def ivf_centroids(
     """
     rows = (
         embeddings.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
+            F.col("vec_id").alias("c_id"),
+            F.col("embedding").alias("c_vec"),
+            F.md5(F.col("vec_id").cast("string")).alias("_h"),
         )
         .orderBy("_h", "c_id")
         .limit(n_centroids)
@@ -231,8 +225,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: coarse-quantize the corpus into ``n_centroids`` cells,
     probe only the ``n_probe`` cells nearest each query, exact cosine
@@ -253,16 +245,16 @@ def ivf_topk(
 
     Output: query_id, neighbor_id, rank, cos_sim.
     """
-    cent = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
+    cent = ivf_centroids(embeddings, n_centroids)
     # corpus side: one cell per vector (argmax cosine, first max on ties)
-    e = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    e = embeddings.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
     scores = _cell_scores(F.col("c_vec"), cent)
     assigned = e.select(
         "neighbor_id", "c_vec",
         F.array_position(scores, F.array_max(scores)).cast("int").alias("cell"),
     )
     # query side: top-n_probe cells per query, exploded + broadcast
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     qs = q.select(
         "query_id", "q_vec", _cell_scores(F.col("q_vec"), cent).alias("_cs")
     )
@@ -299,13 +291,10 @@ def ivf_topk(
 def cosine_near_duplicates(
     embeddings: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "lsh",
     dim: int = 64,
     bits: int = 16,
     bands: int = 4,
-    seed: int = 7,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a_id < b_id, cos_sim ≥
@@ -326,13 +315,13 @@ def cosine_near_duplicates(
 
     Output: a_id, b_id, cos_sim.
     """
-    e = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
+    e = embeddings.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec"))
     a_vecs = e.select(F.col("_id").alias("a_id"), F.col("_vec").alias("_av"))
     b_vecs = e.select(F.col("_id").alias("b_id"), F.col("_vec").alias("_bv"))
     if method == "exact":
         cand = a_vecs.crossJoin(b_vecs).where(F.col("a_id") < F.col("b_id"))
     elif method == "lsh":
-        sig = hyperplane_signature(F.col("_vec"), dim, bits, seed)
+        sig = hyperplane_signature(F.col("_vec"), dim, bits)
         rows = e.select("_id", sig.alias("_sig")).where(F.col("_sig").isNotNull())
         pair_ids = bucket_pairs(
             rows, bit_bands(F.col("_sig"), bits // bands, bands), "_id",

@@ -103,7 +103,11 @@ def language_scores(col: Column) -> dict[str, Column]:
     return out
 
 
-def language_id(col: Column, min_score: float = 0.02) -> Column:
+# stopword rate below which a text's language is 'und', in both paths
+_LANG_MIN_SCORE = 0.02
+
+
+def language_id(col: Column) -> Column:
     """argmax language by stopword rate; 'und' (undetermined) below floor.
 
     Deterministic tie-break by language code.
@@ -114,7 +118,7 @@ def language_id(col: Column, min_score: float = 0.02) -> Column:
           for lang in sorted(scores)]
     )
     best = F.array_max(pairs)  # struct compare: score first, then lang
-    return F.when(best["score"] >= min_score, best["lang"]).otherwise(F.lit("und"))
+    return F.when(best["score"] >= _LANG_MIN_SCORE, best["lang"]).otherwise(F.lit("und"))
 
 
 def fingerprint(col: Column) -> Column:
@@ -123,14 +127,15 @@ def fingerprint(col: Column) -> Column:
     return F.sha2(N.desc_norm(col), 256)
 
 
-def rolling_fingerprints(col: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint set: xxhash64 of each ``window``-token
+def rolling_fingerprints(col: Column) -> Column:
+    """Winnowing-style fingerprint set: xxhash64 of each 8-token
     shingle, keep every hash ≡ 0 (mod 8) — a deterministic sample of the
     document's local structure for containment detection.
 
     Shingles come from zipping ``window`` shifted views of the token array
     (never indexing the token expression inside a lambda — interpreted
     HOFs re-evaluate captured expressions per element)."""
+    window = 8
     toks = tokens(N.desc_norm(col))
     n = F.size(toks)
     shifted = [
@@ -161,10 +166,9 @@ def _score_expr(stop_ratio, mean_wl, punct_ratio, digit_ratio, n_tok):
     )
 
 
-def with_text_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Attach the full text-analysis column set — the corpus-scale path.
+def with_text_stats(docs: DataFrame) -> DataFrame:
+    """Attach the full text-analysis column set of ``text`` to the docs,
+    keyed by ``doc_id`` — the corpus-scale path.
 
     Token-derived features come from ONE explode + codegen'd aggregation
     (map-side partial agg ⇒ one row per doc over the exchange); the
@@ -173,9 +177,9 @@ def with_text_stats(
     everywhere — on multi-hundred-token documents they are 10-100× slower
     than this plan.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     docs = ensure_min_parallelism(docs)
-    ex = docs.select(F.col(id_col).alias("_id"), F.explode_outer(tokens(c)).alias("_t"))
+    ex = docs.select(F.col("doc_id").alias("_id"), F.explode_outer(tokens(c)).alias("_t"))
     # materialize the cleaned token once as an attribute: each of the 7
     # per-language aggregates referencing the regexp_replace expression
     # directly would re-run the regex per aggregate
@@ -210,7 +214,9 @@ def with_text_stats(
         "n_tokens",
         safe(F.col("_sum_len")).alias("mean_word_len"),
         safe(F.col("_hits_en")).alias("stopword_ratio"),
-        F.when(best["score"] >= 0.02, best["lang"]).otherwise(F.lit("und")).alias("lang_pred"),
+        F.when(best["score"] >= _LANG_MIN_SCORE, best["lang"])
+        .otherwise(F.lit("und"))
+        .alias("lang_pred"),
     )
 
     n_chars = F.length(c)
@@ -226,7 +232,7 @@ def with_text_stats(
         fingerprint(c).alias("doc_fingerprint"),
         bpe_ish_token_count(c).cast("long").alias("bpe_token_count"),
     )
-    out = base.join(stats, base[id_col] == stats["_id"], "left").drop("_id")
+    out = base.join(stats, base["doc_id"] == stats["_id"], "left").drop("_id")
     return out.withColumn(
         "quality_score",
         _score_expr(

@@ -282,9 +282,7 @@ def q_profile_baselines(spark, sf_dir):
     NULL std -> 0, plus null rate.
 
     mean/std derive from *exact decimal* sufficient statistics (n, Σx, Σx²)
-    so the result is invariant to partial-aggregation order — the same
-    (n, s1, s2) merge formula the salted two-stage profile uses
-    (operators/profile.py:profile_moments_salted). Float-sum
+    so the result is invariant to partial-aggregation order. Float-sum
     nondeterminism would otherwise flip rounded cents between runs.
     """
     o = _t(spark, sf_dir, "orders")
@@ -1529,9 +1527,7 @@ def q_mm_image_decode_verified(spark, sf_dir):
     ids = _t(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 3 == 0
     )
-    feats = M.extract_media_features(
-        M.synth_verification_media(ids), dim=64, decode_stub=False
-    )
+    feats = M.extract_media_features(M.synth_verification_media(ids), dim=64)
     return feats.select(
         "media_key", F.posexplode("feat").alias("band", "v")
     ).select(
@@ -1563,9 +1559,7 @@ def q_mm_frame_sampling(spark, sf_dir):
     ids = _t(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 3 == 2
     )
-    frames = M.sample_frames(
-        M.synth_verification_media(ids), every_ms=1000, decode_stub=False
-    )
+    frames = M.sample_frames(M.synth_verification_media(ids), every_ms=1000)
     return frames.select("media_key", "frame_idx")
 
 

@@ -82,10 +82,9 @@ def training_matrix(docs: DataFrame, cap: int = 200) -> DataFrame:
     )
 
 
-def fit_logistic(
-    X: np.ndarray, y: np.ndarray, lr: float = 0.5, iters: int = 500, l2: float = 1e-3
-) -> tuple[np.ndarray, float]:
-    """Balanced logistic regression via full-batch gradient descent.
+def fit_logistic(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
+    """Balanced logistic regression via full-batch gradient descent: 500
+    steps of rate 0.5 with an L2 penalty of 1e-3.
 
     Standard textbook solver — adequate for the tiny dense problems this
     produces (13 features). Features are standardized internally; returned
@@ -100,29 +99,27 @@ def fit_logistic(
     sw = np.where(y == 1, n / (2.0 * pos), n / (2.0 * neg))
     w = np.zeros(d)
     b = 0.0
-    for _ in range(iters):
+    for _ in range(500):
         z = Xs @ w + b
         p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
         g = sw * (p - y)
-        gw = Xs.T @ g / n + l2 * w
+        gw = Xs.T @ g / n + 1e-3 * w
         gb = float(g.mean())
-        w -= lr * gw
-        b -= lr * gb
+        w -= 0.5 * gw
+        b -= 0.5 * gb
     w_raw = w / sd
     b_raw = b - float((w * (mu / sd)).sum())
     return w_raw, b_raw
 
 
-def train_duplicate_model(
-    docs: DataFrame, cap: int = 200, max_rows: int = 200_000
-) -> dict:
+def train_duplicate_model(docs: DataFrame, cap: int = 200) -> dict:
     """End-to-end M6: returns {'weights': {name: w}, 'bias': b, 'auc': x}.
 
     Feature generation is fully distributed; only the (bounded) labeled
-    matrix is collected for the dense fit, like the reference's
-    driver-side sklearn fit.
+    matrix, at most 200,000 pairs, is collected for the dense fit, like the
+    reference's driver-side sklearn fit.
     """
-    mat = training_matrix(docs, cap=cap).limit(max_rows)
+    mat = training_matrix(docs, cap=cap).limit(200_000)
     pdf = mat.select(*FEATURE_ORDER, "label").toPandas()
     if pdf["label"].nunique() < 2:
         raise ValueError("training data has a single class; widen the corpus")

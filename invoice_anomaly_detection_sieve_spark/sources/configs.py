@@ -41,17 +41,16 @@ def coerce_config_value(value: Column) -> Column:
     return F.coalesce(direct, from_obj, unquoted)
 
 
-def config_values(
-    configs: DataFrame, defaults: dict[str, float], scope: str = "global"
-) -> dict[str, float]:
-    """Resolve ``defaults``' keys against the configs table.
+def config_values(configs: DataFrame, defaults: dict[str, float]) -> dict[str, float]:
+    """Resolve ``defaults``' keys against the configs table's ``global``
+    scope.
 
     One collect of a tiny filtered projection — the distributed analog of
     the reference's per-key point SELECT. Unknown keys and uncoercible
     values keep their defaults.
     """
     rows = (
-        configs.where((F.col("scope") == scope) & F.col("key").isin(*defaults.keys()))
+        configs.where((F.col("scope") == "global") & F.col("key").isin(*defaults.keys()))
         .select("key", coerce_config_value(F.col("value")).alias("v"))
         .collect()
     )

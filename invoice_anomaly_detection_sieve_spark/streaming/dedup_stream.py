@@ -11,7 +11,7 @@ batch sieve's exact-dup sieve applied to an unbounded arrival stream):
   bounds it for unbounded streams (an expired key readmits its next
   occurrence — the standard at-most-window dedup contract, identical to
   ``dropDuplicatesWithinWatermark``'s but with an observable dup count).
-- ``windowed_event_rollup``: watermarked sliding-window aggregation over
+- ``windowed_event_rollup``: watermarked tumbling-window aggregation over
   the events stream — the late-data-tolerant rollup (counts + value sum
   per event_type per window) a monitoring pipeline sits on.
 
@@ -85,14 +85,9 @@ def _dedup_fn(
     state.update((n_seen,))
 
 
-def streaming_exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    ttl_ms: int | None = 24 * 3600 * 1000,
-) -> DataFrame:
-    """Annotate a streaming corpus with first/dup per content hash.
+def streaming_exact_dedup(docs: DataFrame, ttl_ms: int | None = 24 * 3600 * 1000) -> DataFrame:
+    """Annotate a streaming corpus (doc_id, text, ts) with first/dup per
+    content hash of ``text``.
 
     Emits every row (append mode) tagged ``is_first`` ∈ {'first','dup'}
     and the running occurrence count — filter ``is_first = 'first'`` for
@@ -100,11 +95,7 @@ def streaming_exact_dedup(
     monitoring. One shuffle on the content hash; state is one struct per
     distinct hash, TTL-bounded.
     """
-    hashed = docs.select(
-        F.sha2(F.col(text_col), 256).alias("content_hash"),
-        F.col(id_col).alias("doc_id"),
-        F.col(ts_col).alias("ts"),
-    )
+    hashed = docs.select(F.sha2(F.col("text"), 256).alias("content_hash"), "doc_id", "ts")
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_ms is not None
@@ -126,20 +117,14 @@ def streaming_exact_dedup(
 def windowed_event_rollup(
     events: DataFrame,
     window: str = "10 minutes",
-    slide: str | None = None,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Late-tolerant per-type rollup: count + value sum per sliding
+    """Late-tolerant per-type rollup: count + value sum per tumbling
     window. Watermark closes windows ``watermark`` past max event time;
     later-than-watermark events are dropped (the documented bound)."""
-    w = (
-        F.window("ts", window, slide)
-        if slide is not None
-        else F.window("ts", window)
-    )
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(w.alias("win"), "event_type")
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("value_sum"),

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# event-time lateness both stateful operators tolerate
+_WATERMARK = "1 hour"
+
 
 def observations_from_documents(stream: DataFrame) -> DataFrame:
     """Streaming documents (doc_id, spans, event_ts) → (media_key, ts)
@@ -32,20 +35,20 @@ def observations_from_documents(stream: DataFrame) -> DataFrame:
     return stream.select(F.explode(refs).alias("media_key"), F.col("event_ts").alias("ts"))
 
 
-def registry_updates(observations: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def registry_updates(observations: DataFrame) -> DataFrame:
     """first_seen/last_seen per media_key (update-mode aggregation)."""
     return (
-        observations.withWatermark("ts", watermark)
+        observations.withWatermark("ts", _WATERMARK)
         .groupBy("media_key")
         .agg(F.min("ts").alias("first_seen"), F.max("ts").alias("last_seen"))
     )
 
 
-def first_seen_alerts(observations: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def first_seen_alerts(observations: DataFrame) -> DataFrame:
     """First observation of each media_key within the watermark window —
     the streaming BANK_CHANGE/new-account event (RR-004)."""
     return (
-        observations.withWatermark("ts", watermark)
+        observations.withWatermark("ts", _WATERMARK)
         .dropDuplicatesWithinWatermark(["media_key"])
         .select("media_key", F.col("ts").alias("first_seen"))
     )

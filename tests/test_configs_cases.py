@@ -105,6 +105,28 @@ def test_review_queue_order(spark):
     assert [r["queue_rank"] for r in q] == [1, 2, 3]
 
 
+def test_review_queue_sla_aging_with_cases(spark):
+    """With cases supplied (UI-001), equal risk_score orders by sla_due,
+    earliest first and NULL last (a NULL due date or no case row), then
+    by doc_id."""
+    v = _verdicts(spark, [
+        ("P1", "a", "HOLD", 91.0),
+        ("P1", "b", "HOLD", 91.0),
+        ("P1", "c", "HOLD", 91.0),
+        ("P1", "d", "HOLD", 91.0),   # no case row: NULL sla_due
+        ("P1", "e", "REVIEW", 60.0),
+        ("P1", "f", "HOLD", 95.0),
+    ])
+    cases = spark.createDataFrame(
+        [("a", None), ("b", "2025-01-05 00:00:00"), ("c", "2025-01-03 00:00:00"),
+         ("e", "2025-01-01 00:00:00"), ("f", "2025-01-09 00:00:00")],
+        "doc_id string, sla_due string",
+    ).withColumn("sla_due", F.to_timestamp("sla_due"))
+    q = C.review_queue(v, cases).collect()
+    assert [r["doc_id"] for r in q] == ["f", "c", "b", "a", "d", "e"]
+    assert [r["queue_rank"] for r in q] == [1, 2, 3, 4, 5, 6]
+
+
 def test_simhash_banded_recall_matches_brute_force(spark):
     """Banded bucketing must find EVERY pair within the Hamming radius —
     the round-1 single-prefix variant missed pairs differing in the top

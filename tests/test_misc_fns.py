@@ -206,3 +206,26 @@ def test_plan_extraction_is_shuffle_free(spark):
     raw = spark.createDataFrame([], DOCUMENTS)
     plan = extract_docs(raw)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:2000]
+
+
+def test_flagship_plan_exchange_count(spark):
+    """The unpersisted flagship DAG plans at most 11 Exchange nodes (the
+    count ``validate.exchanges`` reports; 6×40 synthesized docs on 4
+    shuffle partitions measure 11). A plan regression that adds a shuffle
+    fails here instead of waiting for a traced benchmark run."""
+    import re
+
+    from invoice_anomaly_detection_sieve_spark.datagen import synthesize_documents
+    from invoice_anomaly_detection_sieve_spark.plans import validate as V
+
+    documents, registry, _ = synthesize_documents(spark, docs_per_part=40, seed=42)
+    verdicts = V.run_validation(
+        documents, registry,
+        config=V.ValidationConfig(dq_as_of="2025-01-01", enable_dq=False),
+        persist_extraction=False,
+    )["doc_verdicts"]
+    plan = spark._jvm.PythonSQLUtils.explainString(verdicts._jdf.queryExecution(), "formatted")
+    # the formatted plan names each node once in its detail section
+    exchanges = re.findall(r"^\(\d+\) \w*Exchange\b", plan, flags=re.M)
+    assert "ArrowEvalPython" in plan
+    assert len(exchanges) <= 11, plan

@@ -5,10 +5,18 @@ referenced by name somewhere in the repo's Python files, outside its own
 definition. A use from the tests is enough, so a reference implementation
 kept as a test oracle survives; a helper nothing calls does not.
 
-A name counts as referenced when it appears as an identifier (``f(...)``),
+A name counts as referenced when it is read as an identifier (``f(...)``),
 an attribute (``mod.f``) or an imported name (``from mod import f``) in any
-``.py`` file of the repo; the ``def``/``class`` statement itself is not a
-reference.
+``.py`` file of the repo; the ``def``/``class`` statement or the assignment
+itself is not a reference.
+
+Every top-level assignment of the package must be read somewhere in the
+repo: a constant nothing reads fails. Dunder names (``__all__``) are exempt.
+
+Every optional parameter of a package function (nested ones included) must
+be set by some call: a call to a function of that name, in any ``.py`` file
+of the repo, passes it by keyword or positionally. A function also called with ``*args`` or ``**kwargs`` counts as
+fully set. A default no caller overrides is a constant, not an option.
 
 No import may bind a name its scope never uses: a module-level import must
 be used somewhere in its module, an import inside a function somewhere in
@@ -43,7 +51,7 @@ def _referenced_names() -> set[str]:
     names: set[str] = set()
     for path in _repo_py_files():
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 names.add(node.id)
             elif isinstance(node, ast.Attribute):
                 names.add(node.attr)
@@ -69,6 +77,86 @@ def test_every_package_function_and_class_is_referenced():
         "top-level definitions nothing references (delete them, or call "
         "them from a test if they are a reference implementation):\n"
         + "\n".join(unreferenced)
+    )
+
+
+def test_every_package_constant_is_read():
+    read = _referenced_names()
+    unread = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            for target in targets:
+                for name in ast.walk(target):
+                    if (isinstance(name, ast.Name) and name.id not in read
+                            and not (name.id.startswith("__") and name.id.endswith("__"))):
+                        unread.append(f"{path.relative_to(REPO)}:{node.lineno}: {name.id}")
+    assert not unread, "module-level names nothing reads:\n" + "\n".join(unread)
+
+
+# deployment settings: where a table lives, which table a sink writes
+SETTINGS = {"run_incremental.source_catalog", "sink_registry.table"}
+
+
+def _calls():
+    """Per called name: (positional count, keyword names) of every call,
+    and the names also called with ``*args``/``**kwargs``."""
+    calls: dict[str, list[tuple[int, set[str]]]] = {}
+    starred: set[str] = set()
+    for path in _repo_py_files():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            if isinstance(node.func, ast.Name):
+                name = node.func.id
+            elif isinstance(node.func, ast.Attribute):
+                name = node.func.attr
+            else:
+                continue
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                starred.add(name)
+            calls.setdefault(name, []).append(
+                (len(node.args), {k.arg for k in node.keywords if k.arg})
+            )
+    return calls, starred
+
+
+def _optional_params(fn):
+    """(positional index or None for keyword-only, name) per defaulted
+    parameter; the index does not count ``self``/``cls``."""
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+    first = len(pos) - len(args.defaults)
+    out = [(i - skip, a.arg) for i, a in enumerate(pos) if i >= first]
+    out += [(None, a.arg) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+    return out
+
+
+def test_every_optional_parameter_is_set_by_a_caller():
+    calls, starred = _calls()
+    unset = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name in starred:
+                continue
+            seen = calls.get(fn.name, [])
+            for index, name in _optional_params(fn):
+                if f"{fn.name}.{name}" in SETTINGS:
+                    continue
+                if not any(
+                    name in kw or (index is not None and n_pos > index) for n_pos, kw in seen
+                ):
+                    unset.append(f"{path.relative_to(REPO)}:{fn.lineno}: {fn.name}({name})")
+    assert not unset, (
+        "optional parameters no call sets (make them constants):\n" + "\n".join(unset)
     )
 
 

@@ -199,22 +199,6 @@ def test_rolling_fingerprints_containment(spark):
         assert len(out[1] & out[2]) / len(out[1]) >= 0.5
 
 
-def test_multimodal_features_and_frames(spark):
-    media = multimodal.synth_media(spark, n=30)
-    feats = multimodal.extract_media_features(media).collect()
-    assert len(feats) == 30
-    assert all(r["decode_ok"] for r in feats)
-    assert all(len(r["feat"]) == 64 for r in feats)
-    by_key = {r["media_key"]: r["feat"] for r in feats}
-    feats2 = multimodal.extract_media_features(media).collect()
-    assert {r["media_key"]: r["feat"] for r in feats2} == by_key  # deterministic
-
-    frames = multimodal.sample_frames(media).collect()
-    vids = media.where(F.col("kind") == "video").count()
-    assert len(frames) == vids * 3  # 3500ms at 1000ms sampling -> 3 frames
-    assert all(len(r["frame_sha256"]) == 64 for r in frames)
-
-
 def test_simhash_hot_bucket_guard(spark):
     """A degenerate band bucket (identical flood docs) is dropped by
     max_bucket, bounding the candidate join; small buckets are untouched."""
@@ -291,7 +275,7 @@ def _encode_wav(samples, rate=8000):
 
 
 def test_multimodal_real_bmp_wav_decoders(spark):
-    """decode_stub=False exercises the REAL pure-numpy BMP/WAV decoders;
+    """extract_media_features runs the REAL pure-numpy BMP/WAV decoders;
     malformed or unsupported payloads degrade per-row, not per-job."""
     white = _encode_bmp(8, 8, lambda x, y: (255, 255, 255))
     # brightness gradient: white on the left column fading to black
@@ -308,7 +292,7 @@ def test_multimodal_real_bmp_wav_decoders(spark):
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     out = {r["media_key"]: r.asDict()
-           for r in multimodal.extract_media_features(media, decode_stub=False).collect()}
+           for r in multimodal.extract_media_features(media).collect()}
     assert out["img-white"]["decode_ok"] and out["img-grad"]["decode_ok"]
     assert out["aud-tone"]["decode_ok"]
     assert not out["img-bad"]["decode_ok"] and not out["vid-any"]["decode_ok"]
@@ -336,7 +320,7 @@ def _encode_y4m(frames_yuv, fps=(25, 1), chroma="420"):
 
 
 def test_decode_y4m_real_video_frames(spark):
-    """decode_stub=False in sample_frames runs the REAL y4m decoder:
+    """sample_frames runs the REAL y4m decoder:
     emitted hashes are sha256 of actual decoded RGB pixel bytes, sampled
     at the stream's own frame rate."""
     # 4 frames of 4x4 video at 2 fps: luma ramps per frame, neutral chroma
@@ -360,7 +344,7 @@ def test_decode_y4m_real_video_frames(spark):
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     # every_ms=1000 at 2 fps -> every 2nd frame: indices 0 and 2
-    got = multimodal.sample_frames(media, every_ms=1000, decode_stub=False).collect()
+    got = multimodal.sample_frames(media, every_ms=1000).collect()
     by = {(r["media_key"], r["frame_idx"]): r["frame_sha256"] for r in got}
     assert set(by) == {("vid-ok", 0), ("vid-ok", 2)}
     import hashlib as _hl
@@ -434,7 +418,7 @@ def test_image_decode_feature_pixels_exact(spark):
     float32 path (equal channels ⇒ exact grayscale)."""
     ids = spark.createDataFrame([(i * 3,) for i in range(6)], "doc_id long")
     feats = multimodal.extract_media_features(
-        multimodal.synth_verification_media(ids), dim=64, decode_stub=False
+        multimodal.synth_verification_media(ids), dim=64
     )
     for r in feats.collect():
         i = int(r["media_key"])
@@ -449,7 +433,7 @@ def test_frame_sampling_matches_stream_timing(spark):
     what the mm_frame_sampling oracle recomputes."""
     ids = spark.createDataFrame([(i,) for i in range(2, 26, 3)], "doc_id long")
     out = multimodal.sample_frames(
-        multimodal.synth_verification_media(ids), every_ms=1000, decode_stub=False
+        multimodal.synth_verification_media(ids), every_ms=1000
     ).collect()
     got = sorted((r["media_key"], r["frame_idx"]) for r in out)
     expected = sorted(
