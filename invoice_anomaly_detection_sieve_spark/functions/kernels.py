@@ -96,7 +96,7 @@ def jaro_similarity(s1: str, s2: str) -> float:
 _JW_PREFIX_WEIGHT = 0.1
 
 
-def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = _JW_PREFIX_WEIGHT) -> float:
+def jaro_winkler_similarity(s1: str, s2: str) -> float:
     """Jaro-Winkler similarity with the standard 0.7 boost threshold.
 
     Matches ``rapidfuzz.distance.JaroWinkler.normalized_similarity``
@@ -109,7 +109,7 @@ def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = _JW_PREFIX_
             if a != b:
                 break
             prefix += 1
-        sim += prefix * prefix_weight * (1.0 - sim)
+        sim += prefix * _JW_PREFIX_WEIGHT * (1.0 - sim)
     return float(min(1.0, sim))
 
 
@@ -598,11 +598,11 @@ def line_assign_features(
     }
 
 
-def char_ngrams(text: str, n: int = 3) -> set[str]:
-    """Distinct character n-grams (reference ``_ngram_slices``, app/main.py:205-208)."""
-    if len(text) < n:
+def char_ngrams(text: str) -> set[str]:
+    """Distinct character 3-grams (reference ``_ngram_slices``, app/main.py:205-208)."""
+    if len(text) < 3:
         return set()
-    return {text[i : i + n] for i in range(len(text) - n + 1)}
+    return {text[i : i + 3] for i in range(len(text) - 2)}
 
 
 @lru_cache(maxsize=1 << 14)

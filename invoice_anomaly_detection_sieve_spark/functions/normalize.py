@@ -73,8 +73,8 @@ def text_blob(parts: Column) -> Column:
     return F.lower(F.array_join(kept, " "))
 
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Array of all character n-grams; empty array when len < n
+def char_ngrams(col: Column) -> Column:
+    """Array of all character 3-grams; empty array when len < 3
     (reference ``_ngram_slices``, app/main.py:205-208).
 
     One ``regexp_extract_all`` with a zero-width lookahead ((?s) so the
@@ -82,16 +82,16 @@ def char_ngrams(col: Column, n: int = 3) -> Column:
     Java-regex pass. The previous sequence + transform-lambda formulation
     fell out of whole-stage codegen (higher-order functions are
     interpreted) and paid interpreted-eval cost per gram."""
-    grams = F.regexp_extract_all(col, F.lit("(?s)(?=(.{%d}))" % n), 1)
-    return F.when(F.length(col) >= n, grams).otherwise(
+    grams = F.regexp_extract_all(col, F.lit("(?s)(?=(.{3}))"), 1)
+    return F.when(F.length(col) >= 3, grams).otherwise(
         F.array().cast("array<string>")
     )
 
 
-def char_ngram_set(col: Column, n: int = 3) -> Column:
-    """Distinct n-grams (the reference wraps slices in ``set()``,
+def char_ngram_set(col: Column) -> Column:
+    """Distinct 3-grams (the reference wraps slices in ``set()``,
     app/main.py:292-293)."""
-    return F.array_distinct(char_ngrams(col, n))
+    return F.array_distinct(char_ngrams(col))
 
 
 def dice_overlap(a_grams: Column, b_grams: Column) -> Column:

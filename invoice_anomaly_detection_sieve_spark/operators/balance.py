@@ -126,7 +126,6 @@ def _ceil_unguarded(arr: Column, op: str) -> Column:
 def bucket_pairs(
     rows: DataFrame,
     bucket: Column,
-    id_col: str,
     payload: tuple[str, ...] = (),
     *,
     max_bucket: int | None,
@@ -134,10 +133,10 @@ def bucket_pairs(
 ) -> DataFrame:
     """Every pair of rows that share a bucket, once per shared bucket.
 
-    ``bucket`` is the array of a row's bucket keys. Plan: explode → ONE
-    exchange on the bucket, pinned to the session's defaultParallelism
-    (not spark.sql.shuffle.partitions) → hot-bucket guard (a window count
-    riding that exchange; ``max_bucket=None`` keeps exact recall and fails
+    ``rows`` carry their id as ``_id``; ``bucket`` is the array of a row's
+    bucket keys. Plan: explode → ONE exchange on the bucket, pinned to the
+    session's defaultParallelism (not spark.sql.shuffle.partitions) →
+    hot-bucket guard (a window count riding that exchange; ``max_bucket=None`` keeps exact recall and fails
     loudly past ``UNGUARDED_BUCKET_CEIL``) → per-bucket sorted row array
     on the same partitioning → i<j pair explosion JVM-side. The rows'
     upstream pipeline runs exactly ONCE: a bucket self-join would
@@ -153,13 +152,13 @@ def bucket_pairs(
     """
     n_part = rows.sparkSession.sparkContext.defaultParallelism
     keyed = guard_hot_keys(
-        rows.select(id_col, *payload, F.explode(bucket).alias("_bucket"))
+        rows.select("_id", *payload, F.explode(bucket).alias("_bucket"))
         .repartition(n_part, "_bucket"),
         ["_bucket"], max_bucket,
     )
     # bare ids when nothing rides along: a one-field struct per element
     # costs sort and explode work for nothing
-    elem = F.struct(id_col, *payload) if payload else F.col(id_col)
+    elem = F.struct("_id", *payload) if payload else F.col("_id")
     grouped = keyed.groupBy("_bucket").agg(F.array_sort(F.collect_list(elem)).alias("_rows"))
     if max_bucket is None:
         grouped = grouped.select(_ceil_unguarded(F.col("_rows"), op).alias("_rows"))
@@ -168,7 +167,7 @@ def bucket_pairs(
     )
     if payload:
         cols = [F.col(f"_{s}")[c].alias(f"{s}_{c}") for s in "ab" for c in payload]
-        ids = [F.col("_a")[id_col].alias("a_id"), F.col("_b")[id_col].alias("b_id")]
+        ids = [F.col("_a")["_id"].alias("a_id"), F.col("_b")["_id"].alias("b_id")]
     else:
         cols, ids = [], [F.col("_a").alias("a_id"), F.col("_b").alias("b_id")]
     return (

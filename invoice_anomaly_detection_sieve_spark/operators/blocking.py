@@ -143,9 +143,10 @@ def candidate_pairs(
     )
 
 
-def training_pairs(docs: DataFrame, cap: int = DEFAULT_CAP) -> DataFrame:
+def training_pairs(docs: DataFrame) -> DataFrame:
     """Unordered within-partition pairs (a < b) for model training
     (scripts/train_duplicate.py:74-79 itertools.combinations ≡ self-join
-    with a theta filter; blocked first at scale per SURVEY.md J2)."""
-    pairs = candidate_pairs(docs, cap=cap)
+    with a theta filter; blocked first at scale per SURVEY.md J2), at
+    most ``DEFAULT_CAP`` per doc."""
+    pairs = candidate_pairs(docs)
     return pairs.where(F.col("a_doc_id") < F.col("b_doc_id"))

@@ -25,27 +25,28 @@ from pyspark.sql import functions as F
 from ..functions import normalize as N
 from .balance import bit_bands, bucket_pairs, ensure_min_parallelism
 
-DEFAULT_SHINGLE = 5
-DEFAULT_MINHASHES = 16
+SHINGLE = 5  # words per MinHash shingle
+NUM_HASHES = 16  # MinHash signature length
 DEFAULT_BANDS = 4  # 16 hashes / 4 bands -> rows-per-band 4
-SIMHASH_NGRAM = 3  # char n-gram size of every SimHash signature
+DEFAULT_MAX_BUCKET = 1000  # hot-bucket guard of the MinHash band buckets
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup via content hash: every doc annotated with its group
-    size and a keep/drop flag (first id per hash kept)."""
-    h = F.sha2(F.col(text_col), 256)
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Exact dedup via content hash of ``text``: every doc annotated with
+    its group size and a keep/drop flag (first ``doc_id`` per hash kept)."""
+    h = F.sha2(F.col("text"), 256)
     w_cnt = Window.partitionBy("content_hash")
-    w_rank = Window.partitionBy("content_hash").orderBy(id_col)
+    w_rank = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
         docs.withColumn("content_hash", h)
         .withColumn("dup_count", F.count(F.lit(1)).over(w_cnt))
         .withColumn("is_kept", F.row_number().over(w_rank) == 1)
-        .select(id_col, "content_hash", "dup_count", "is_kept")
+        .select("doc_id", "content_hash", "dup_count", "is_kept")
     )
 
 
-def word_shingles(col: Column, k: int = DEFAULT_SHINGLE) -> Column:
-    """Distinct k-word shingles of normalized text (column-only).
+def word_shingles(col: Column) -> Column:
+    """Distinct k-word shingles (k = ``SHINGLE``) of normalized text
+    (column-only).
 
     One ``regexp_extract_all`` with a zero-width lookahead anchored at
     word starts extracts every overlapping k-word window in a single
@@ -62,51 +63,40 @@ def word_shingles(col: Column, k: int = DEFAULT_SHINGLE) -> Column:
     # (?=...) makes matches overlap; (?:^| ) anchors each match at a word
     # start. desc_norm's output has no leading/trailing/double spaces, so
     # the captured window equals concat_ws(" ", k consecutive words).
-    pat = r"(?=(?:^| )((?:[^ ]+ ){%d}[^ ]+))" % (k - 1)
+    pat = r"(?=(?:^| )((?:[^ ]+ ){%d}[^ ]+))" % (SHINGLE - 1)
     full = F.regexp_extract_all(norm, F.lit(pat), 1)
-    # short texts (< k words) fall back to one whole-text shingle; the
-    # norm == "" guard keeps the k=1 edge identical (split("") yields
-    # [""], which the old path emitted as a single empty shingle but a
-    # [^ ]+ regex cannot match)
+    # short texts (< k words, the empty text too) fall back to one
+    # whole-text shingle
     return F.array_distinct(
-        F.when((F.size(words) >= k) & (norm != ""), full).otherwise(F.array(norm))
+        F.when(F.size(words) >= SHINGLE, full).otherwise(F.array(norm))
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_MINHASHES,
-    shingle: int = DEFAULT_SHINGLE,
-) -> DataFrame:
-    """Per-doc minhash signature columns h0..h{K-1} via explode + agg.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc minhash signature columns h0..h{K-1} (K = ``NUM_HASHES``)
+    of ``text`` via explode + agg.
 
     The K seeded xxhash64 projections run inside whole-stage codegen over
     the exploded shingles; partial (map-side) aggregation collapses to one
     row per doc before the exchange, so the shuffle is O(docs), not
-    O(shingles). Returns (id, h0..h{K-1}).
+    O(shingles). Returns (doc_id as ``_id``, h0..h{K-1}).
     """
     staged = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("_id"), word_shingles(F.col(text_col), shingle).alias("_sh")
+        F.col("doc_id").alias("_id"), word_shingles(F.col("text")).alias("_sh")
     )
     ex = staged.select("_id", F.explode_outer("_sh").alias("_s"))
     hashed = ex.select(
-        "_id", *[F.xxhash64(F.col("_s"), F.lit(i)).alias(f"h{i}") for i in range(num_hashes)]
+        "_id", *[F.xxhash64(F.col("_s"), F.lit(i)).alias(f"h{i}") for i in range(NUM_HASHES)]
     )
     return hashed.groupBy("_id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)]
     )
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_MINHASHES,
     bands: int = DEFAULT_BANDS,
-    shingle: int = DEFAULT_SHINGLE,
-    max_bucket: int | None = 1000,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH: each band's
     hash of the signature is a bucket key of ``balance.bucket_pairs``, and
@@ -118,21 +108,21 @@ def minhash_lsh_pairs(
     oracle will compare the output. Output: a_id, b_id (a < b),
     n_shared_bands.
     """
-    if num_hashes % bands:
+    if NUM_HASHES % bands:
         # silent truncation (h{r*b}..h{K-1} dead) would quietly change the
         # advertised (1-(1-J^r)^b) recall — same contract as the simhash
         # bands check
         raise ValueError(
-            f"bands must divide num_hashes (got num_hashes={num_hashes}, "
+            f"bands must divide num_hashes (got num_hashes={NUM_HASHES}, "
             f"bands={bands})"
         )
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // bands
     # null-text docs carry no shingles — without this filter every pair of
     # them shares an all-null signature (Jaccard 1.0 downstream), while
     # the DuckDB oracles (list_distinct drops NULLs => u=0) exclude them;
     # "no text" means "no similarity evidence", so exclude from pairing
-    docs = docs.where(F.col(text_col).isNotNull())
-    with_sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle)
+    docs = docs.where(F.col("text").isNotNull())
+    with_sig = minhash_signatures(docs)
     band_arr = F.array(
         *[
             F.xxhash64(
@@ -149,7 +139,7 @@ def minhash_lsh_pairs(
         ]
     )
     return (
-        bucket_pairs(with_sig, band_arr, "_id", max_bucket=max_bucket, op="minhash_lsh_pairs")
+        bucket_pairs(with_sig, band_arr, max_bucket=max_bucket, op="minhash_lsh_pairs")
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -166,17 +156,18 @@ def ngram_jaccard(a_grams: Column, b_grams: Column) -> Column:
 def near_duplicates(
     docs: DataFrame,
     threshold: float = 0.8,
-    **lsh_kwargs,
+    bands: int = DEFAULT_BANDS,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    """MinHash-LSH candidates verified with exact shingle Jaccard.
+    """``minhash_lsh_pairs`` candidates verified with exact shingle
+    Jaccard.
 
     The scale path: LSH bounds the candidate set, the exact check runs
     only on candidates (join back to per-doc shingle arrays).
     """
-    pairs = minhash_lsh_pairs(docs, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(docs, bands, max_bucket)
     shingles = docs.select(
-        F.col("doc_id").alias("_id"),
-        word_shingles(F.col("text"), lsh_kwargs.get("shingle", DEFAULT_SHINGLE)).alias("_sh"),
+        F.col("doc_id").alias("_id"), word_shingles(F.col("text")).alias("_sh")
     )
     a = shingles.select(F.col("_id").alias("a_id"), F.col("_sh").alias("a_sh"))
     b = shingles.select(F.col("_id").alias("b_id"), F.col("_sh").alias("b_sh"))
@@ -214,13 +205,9 @@ def simhash64_from_hashes(hashes: Column) -> Column:
     return sig
 
 
-def simhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-) -> DataFrame:
-    """(doc_id as ``_id``, signature) rows via explode + codegen'd
-    aggregation — the shared core of ``with_simhash`` (which joins the
+def simhash_signatures(docs: DataFrame, out_col: str) -> DataFrame:
+    """(doc_id as ``_id``, ``out_col``) SimHash rows of ``text`` via
+    explode + codegen'd aggregation — the shared core of ``with_simhash`` (which joins the
     signatures back onto the docs) and ``simhash_near_duplicates`` (which
     consumes the bare signatures and skips that join's shuffle entirely).
 
@@ -230,8 +217,8 @@ def simhash_signatures(
     bitwise ORs in a final projection. Orders of magnitude faster than the
     interpreted higher-order-function formulation on long documents.
     """
-    staged = docs.select(F.col("doc_id").alias("_id"), N.desc_norm(F.col(text_col)).alias("_n"))
-    staged = staged.select("_id", N.char_ngram_set(F.col("_n"), SIMHASH_NGRAM).alias("_g"))
+    staged = docs.select(F.col("doc_id").alias("_id"), N.desc_norm(F.col("text")).alias("_n"))
+    staged = staged.select("_id", N.char_ngram_set(F.col("_n")).alias("_g"))
     ex = staged.select("_id", F.explode_outer("_g").alias("_gram"))
     # materialize the gram hash ONCE as an attribute: each of the 64 bit
     # aggregates below referencing xxhash64(_gram) directly would embed
@@ -255,13 +242,10 @@ def simhash_signatures(
     return votes.select(F.col("_id"), sig.alias(out_col))
 
 
-def with_simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-) -> DataFrame:
-    """Attach a SimHash column to ``docs`` (join of ``simhash_signatures``)."""
-    sigs = simhash_signatures(docs, text_col, out_col)
+def with_simhash(docs: DataFrame) -> DataFrame:
+    """Attach a ``simhash`` column to ``docs`` (join of
+    ``simhash_signatures``)."""
+    sigs = simhash_signatures(docs, "simhash")
     return docs.join(sigs, docs["doc_id"] == sigs["_id"], "left").drop("_id")
 
 
@@ -269,7 +253,7 @@ def simhash64(col: Column) -> Column:
     """Expression form of SimHash (small inputs / tests): convenient but
     re-evaluates the gram pipeline inside each bit expression — prefer
     ``with_simhash`` on DataFrames of any size."""
-    grams = N.char_ngram_set(N.desc_norm(col), SIMHASH_NGRAM)
+    grams = N.char_ngram_set(N.desc_norm(col))
     return simhash64_from_hashes(F.transform(grams, lambda g: F.xxhash64(g)))
 
 
@@ -319,9 +303,9 @@ def simhash_near_duplicates(
     # bare (id, sig) rows: joining the signatures back onto docs (the old
     # with_simhash call) paid a full extra shuffle join only to re-project
     # the two columns again
-    sig = simhash_signatures(ensure_min_parallelism(docs).select("doc_id", "text"), "text", "sig")
+    sig = simhash_signatures(ensure_min_parallelism(docs).select("doc_id", "text"), "sig")
     return (
-        bucket_pairs(sig, bit_bands(F.col("sig"), width, bands), "_id", ("sig",),
+        bucket_pairs(sig, bit_bands(F.col("sig"), width, bands), ("sig",),
                      max_bucket=max_bucket, op="simhash_near_duplicates")
         .dropDuplicates(["a_id", "b_id"])
         .withColumn("hamming", hamming64(F.col("a_sig"), F.col("b_sig")))

@@ -127,10 +127,8 @@ def benford_stats(profiles: DataFrame) -> DataFrame:
     return profiles.select(*cached_exprs(("benford.sel",), _benford_cols))
 
 
-def psi(
-    current: DataFrame, baseline_profiles: DataFrame, field: str = "total"
-) -> DataFrame:
-    """Population-stability index of ``field`` vs the baseline deciles.
+def psi(current: DataFrame, baseline_profiles: DataFrame) -> DataFrame:
+    """Population-stability index of ``total`` vs the baseline deciles.
 
     Baseline bins hold exactly 10% each (the profile's decile edges), so
     PSI = Σ (pᵢ − 0.1)·ln(pᵢ/0.1) over the current bin proportions.
@@ -143,17 +141,17 @@ def psi(
 
     Output: part, psi, psi_fail.
     """
-    cur_parts = current.where(F.col(field).isNotNull()).select("part").distinct()
+    cur_parts = current.where(F.col("total").isNotNull()).select("part").distinct()
     edges = baseline_profiles.select("part", F.col("deciles").alias("_edges"))
     binned = (
-        current.where(F.col(field).isNotNull())
+        current.where(F.col("total").isNotNull())
         .join(broadcast(edges), "part", "inner")
         .withColumn(
             "_bin",
             F.aggregate(
                 F.col("_edges"),
                 F.lit(0),
-                lambda acc, edge: acc + (F.col(field) > edge).cast("int"),
+                lambda acc, edge: acc + (F.col("total") > edge).cast("int"),
             ),
         )
     )
@@ -186,8 +184,9 @@ def psi(
 KS_SCHEMA = "part string, ks_stat double, n_current long, n_baseline long"
 
 
-def ks_2samp(current: DataFrame, baseline: DataFrame, field: str = "total") -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov statistic per partition.
+def ks_2samp(current: DataFrame, baseline: DataFrame) -> DataFrame:
+    """Exact two-sample Kolmogorov-Smirnov statistic of ``total`` per
+    partition.
 
     Scale-safe plan (round-3 VERDICT "What's wrong" item 2): tag source,
     cumulative counts over a RANGE window ordered by value (ties collapse
@@ -203,10 +202,10 @@ def ks_2samp(current: DataFrame, baseline: DataFrame, field: str = "total") -> D
     n_baseline.
     """
     cur = current.select(
-        "part", F.col(field).alias("_v"), F.lit(1).alias("_ic"), F.lit(0).alias("_ib")
+        "part", F.col("total").alias("_v"), F.lit(1).alias("_ic"), F.lit(0).alias("_ib")
     )
     base = baseline.select(
-        "part", F.col(field).alias("_v"), F.lit(0).alias("_ic"), F.lit(1).alias("_ib")
+        "part", F.col("total").alias("_v"), F.lit(0).alias("_ic"), F.lit(1).alias("_ib")
     )
     both = cur.unionByName(base).where(F.col("_v").isNotNull())
     w = (
@@ -251,16 +250,14 @@ def ks_2samp(current: DataFrame, baseline: DataFrame, field: str = "total") -> D
     )
 
 
-def ks_2samp_pandas(
-    current: DataFrame, baseline: DataFrame, field: str = "total"
-) -> DataFrame:
+def ks_2samp_pandas(current: DataFrame, baseline: DataFrame) -> DataFrame:
     """Small-data reference formulation of ``ks_2samp``: grouped-map
     (applyInPandas) over the union of both samples tagged by source.
     Materializes each partition's full sample in one worker — use the
     windowed ``ks_2samp`` anywhere a partition may not fit in a pandas
     frame; this one exists to parity-pin the windowed plan."""
-    cur = current.select("part", F.col(field).alias("_v")).withColumn("_src", F.lit("c"))
-    base = baseline.select("part", F.col(field).alias("_v")).withColumn("_src", F.lit("b"))
+    cur = current.select("part", F.col("total").alias("_v")).withColumn("_src", F.lit("c"))
+    base = baseline.select("part", F.col("total").alias("_v")).withColumn("_src", F.lit("b"))
     both = cur.unionByName(base).where(F.col("_v").isNotNull())
 
     def _ks(pdf: pd.DataFrame) -> pd.DataFrame:

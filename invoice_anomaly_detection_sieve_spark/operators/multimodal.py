@@ -37,6 +37,9 @@ IMAGE_FEATURES_SCHEMA = (
 
 FRAME_SAMPLE_SCHEMA = "media_key string, frame_idx int, frame_sha256 string"
 
+FEATURE_GRID = 8  # an image feature is the block means of an 8x8 grid
+FEATURE_DIM = FEATURE_GRID * FEATURE_GRID  # image and audio feature length
+
 
 def decode_bmp(payload: bytes) -> np.ndarray:
     """Pure-numpy decoder for uncompressed 24-bit BMP (BITMAPINFOHEADER).
@@ -176,12 +179,13 @@ def decode_y4m(payload: bytes) -> tuple[list[np.ndarray], float]:
     return frames, float(fps)
 
 
-def _decode_image(payload: bytes, dim: int = 64) -> np.ndarray:
-    """Real image path: BMP → grayscale → block-mean resize to a √dim
-    grid → [0, 1] floats. (PIL would slot in here for general formats.)"""
+def _decode_image(payload: bytes) -> np.ndarray:
+    """Real image path: BMP → grayscale → block-mean resize to the
+    ``FEATURE_GRID`` grid → [0, 1] floats. (PIL would slot in here for
+    general formats.)"""
     img = decode_bmp(payload)
     gray = img.astype(np.float64).mean(axis=2)
-    g = max(int(np.sqrt(dim)), 1)
+    g = FEATURE_GRID
     h, w = gray.shape
     ri = np.linspace(0, h, g + 1).astype(int)
     ci = np.linspace(0, w, g + 1).astype(int)
@@ -190,26 +194,23 @@ def _decode_image(payload: bytes, dim: int = 64) -> np.ndarray:
         for j in range(g):
             block = gray[ri[i] : max(ri[i + 1], ri[i] + 1), ci[j] : max(ci[j + 1], ci[j] + 1)]
             out[i, j] = block.mean()
-    vec = (out / 255.0).reshape(-1)
-    if len(vec) < dim:  # non-square dim: pad with the global mean
-        vec = np.concatenate([vec, np.full(dim - len(vec), vec.mean(), dtype=np.float32)])
-    return vec[:dim]
+    return (out / 255.0).reshape(-1)
 
 
-def _decode_audio(payload: bytes, dim: int = 64) -> np.ndarray:
-    """Real audio path: PCM-16 WAV → rFFT magnitude → ``dim`` band means
-    (log1p-compressed, peak-normalized)."""
+def _decode_audio(payload: bytes) -> np.ndarray:
+    """Real audio path: PCM-16 WAV → rFFT magnitude → ``FEATURE_DIM`` band
+    means (log1p-compressed, peak-normalized)."""
     x, _rate = decode_wav(payload)
     if len(x) == 0:
         raise ValueError("empty WAV data")
     mag = np.abs(np.fft.rfft(x))
-    bands = np.array_split(mag, dim)
+    bands = np.array_split(mag, FEATURE_DIM)
     vec = np.log1p(np.array([b.mean() if len(b) else 0.0 for b in bands], dtype=np.float32))
     peak = vec.max()
     return vec / peak if peak > 0 else vec
 
 
-def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Decode + featurize media rows via ``mapInPandas`` (Arrow batches).
 
     Partition-friendly: stateless per batch, no shuffle; heavy rows stay on
@@ -223,9 +224,9 @@ def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
             for payload, kind in zip(pdf["payload"], pdf["kind"]):
                 try:
                     if kind == "image":
-                        vec = _decode_image(payload, dim)
+                        vec = _decode_image(payload)
                     elif kind == "audio":
-                        vec = _decode_audio(payload, dim)
+                        vec = _decode_audio(payload)
                     else:
                         raise ValueError(f"no real decoder for kind={kind}")
                     feats.append([float(x) for x in vec])
@@ -238,7 +239,7 @@ def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
                     "media_key": pdf["media_key"],
                     "kind": pdf["kind"],
                     "feat": feats,
-                    "feat_dim": dim,
+                    "feat_dim": FEATURE_DIM,
                     "decode_ok": ok,
                 }
             )
@@ -246,14 +247,14 @@ def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
     return media.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video rows: emits (media_key, frame_idx,
     frame hash) per sampled frame — one output row per sampled frame, the
     fan-out governed by the video's own timing.
 
     The pure-numpy YUV4MPEG2 decoder (``decode_y4m``) decodes the
-    payload's frames to RGB; they are sampled at the stream's frame rate
-    every ``every_ms``, and each emitted hash is the sha256 of the sampled
+    payload's frames to RGB; one frame per second of the stream's own
+    frame rate is sampled, and each emitted hash is the sha256 of the sampled
     frame's pixel bytes (frame_idx = the source frame index). Undecodable
     payloads contribute no frames, never fail the job.
     """
@@ -266,7 +267,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                     frames, fps = decode_y4m(payload or b"")
                 except ValueError:
                     continue  # undecodable row: contributes no frames
-                step = max(1, int(round(fps * every_ms / 1000.0)))
+                step = max(1, round(fps))
                 for i in range(0, len(frames), step):
                     keys.append(key)
                     idxs.append(i)
@@ -317,11 +318,12 @@ def encode_wav_pcm16(samples_i16: np.ndarray, rate: int) -> bytes:
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 
 
-def encode_y4m(frames_yuv, fps=(25, 1)) -> bytes:
-    """Minimal C420 YUV4MPEG2 writer (inverse of ``decode_y4m``):
-    frames_yuv is a list of (Y, Cb, Cr) uint8 planes, Cb/Cr quarter-size."""
+def encode_y4m(frames_yuv, fps: int) -> bytes:
+    """Minimal C420 YUV4MPEG2 writer (inverse of ``decode_y4m``) at
+    ``fps`` frames per second: frames_yuv is a list of (Y, Cb, Cr) uint8
+    planes, Cb/Cr quarter-size."""
     h, w = frames_yuv[0][0].shape
-    out = bytearray(f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 C420\n".encode())
+    out = bytearray(f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 C420\n".encode())
     for y, cb, cr in frames_yuv:
         out += b"FRAME\n" + y.tobytes() + cb.tobytes() + cr.tobytes()
     return bytes(out)
@@ -391,8 +393,8 @@ def synth_verification_media(ids: DataFrame) -> DataFrame:
     - ``id % 3 == 1`` → audio: PCM-16 mono WAV with
       ``64 + id % 97`` samples at ``8000 + (id % 5) * 1000`` Hz.
     - ``id % 3 == 2`` → video: 4×4 C420 y4m, ``1 + id % 5`` frames at
-      ``(1 + id % 4):1`` fps — ``sample_frames(every_ms=1000)`` therefore
-      emits exactly the frame indices ``i % fps == 0, i < n_frames``.
+      ``(1 + id % 4):1`` fps — ``sample_frames`` (one frame per second)
+      therefore emits exactly the frame indices ``i % fps == 0, i < n_frames``.
 
     Arrow-batched ``mapInPandas`` over the id column; payload bytes are
     built worker-side so nothing but ids ever crosses the driver."""
@@ -426,7 +428,7 @@ def synth_verification_media(ids: DataFrame) -> DataFrame:
                          np.full((2, 2), 128, dtype=np.uint8))
                         for f in range(n_frames)
                     ]
-                    payloads.append(encode_y4m(frames, fps=(fps, 1)))
+                    payloads.append(encode_y4m(frames, fps))
                     metas.append({"width": 4, "height": 4, "sample_rate": None,
                                   "duration_ms": None, "mime": "video/x-y4m"})
             yield pd.DataFrame({"media_key": keys, "kind": kinds,

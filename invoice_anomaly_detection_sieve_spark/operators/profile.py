@@ -92,14 +92,14 @@ def profile(docs: DataFrame, field: str = "total") -> DataFrame:
     return agg.select(*cached_exprs(("profile.out", field), _out_cols))
 
 
-def digit_histogram(docs: DataFrame, field: str = "total") -> DataFrame:
-    """Leading-digit histogram alone (the Benford input) — one slim
+def digit_histogram(docs: DataFrame) -> DataFrame:
+    """Leading-digit histogram of ``total`` alone (the Benford input) — one slim
     groupBy for testing CURRENT data against the Benford expectation when
     a stored baseline supplies the rest of the profile (recomputing the
     full profile just for its digit_hist would waste the sketch work)."""
     # digit materialized as an attribute below the aggregate: 9 separate
     # sum aggregates referencing the regexp inline would each re-run it
-    staged = docs.select(F.col("part"), leading_digit(F.col(field)).alias("_d"))
+    staged = docs.select(F.col("part"), leading_digit(F.col("total")).alias("_d"))
     digit = F.col("_d")
     return staged.groupBy("part").agg(
         F.array(*[F.sum((digit == str(d)).cast("long")) for d in range(1, 10)]).alias("digit_hist")

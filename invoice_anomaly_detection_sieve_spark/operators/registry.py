@@ -31,8 +31,8 @@ def bank_change_flags(docs: DataFrame, media_registry: DataFrame) -> DataFrame:
     The fresh-key test is byte-faithful to app/anomaly.py:64,
     ``(last_seen - first_seen) <= timedelta(minutes=1)``: a key observed
     only once stays fresh until a later observation advances last_seen
-    (in the reference via its per-request upsert, here via
-    update_registry / the streaming sink). Intentional parity."""
+    (in the reference via its per-request upsert, here via the registry
+    stream's ``sink_registry``). Intentional parity."""
     reg = media_registry.select(
         F.col("media_key").alias("_reg_key"), "first_seen", "last_seen"
     )
@@ -67,27 +67,3 @@ def dangling_refs(docs: DataFrame, media_registry: DataFrame) -> DataFrame:
         broadcast(reg), refs["media_ref"] == reg["media_key"], "left_anti"
     )
 
-
-def update_registry(media_registry: DataFrame, docs: DataFrame) -> DataFrame:
-    """Registry maintenance (S7, app/main.py:169-185): observed keys merge
-    in with first_seen = min, last_seen = max of observation times.
-
-    Batch form of the reference's per-request upsert: pre-aggregate
-    observations per key (one shuffle on media_key), then full-outer merge
-    with the existing registry.
-    """
-    obs = (
-        docs.select(F.explode("media_refs").alias("media_key"), F.col("date"))
-        .where(F.col("media_key").isNotNull())
-        .groupBy("media_key")
-        .agg(
-            F.min(F.col("date").cast("timestamp")).alias("obs_first"),
-            F.max(F.col("date").cast("timestamp")).alias("obs_last"),
-        )
-    )
-    reg = media_registry.alias("r").join(obs.alias("o"), "media_key", "full_outer")
-    return reg.select(
-        "media_key",
-        F.least(F.col("r.first_seen"), F.col("o.obs_first")).alias("first_seen"),
-        F.greatest(F.col("r.last_seen"), F.col("o.obs_last")).alias("last_seen"),
-    )

@@ -23,8 +23,7 @@ def bad_currency(currency: Column) -> Column:
     return currency.isNotNull() & ~currency.isin(VALID_CURRENCIES)
 
 
-def future_date(date: Column, as_of: Column | None = None) -> Column:
-    as_of = as_of if as_of is not None else F.current_date()
+def future_date(date: Column, as_of: Column) -> Column:
     return date.isNotNull() & (F.datediff(date, as_of) > MAX_FUTURE_DAYS)
 
 

@@ -1,7 +1,7 @@
 """Deterministic sampling operators for training-data pipelines.
 
 A 100 TB corpus pipeline constantly needs *reproducible* samples: an eval
-slice per language, a labeling batch per vendor, a debug subset that is
+slice per language, a debug subset that is
 the same on every engine and every run. ``rand()`` breaks all of that
 (per-task seeds change with partitioning), so both operators here key off
 ``md5(doc_id)`` — a uniform, engine-reproducible order that DuckDB, Spark
@@ -19,10 +19,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def stratified_sample(df: DataFrame, group_col: str, k: int) -> DataFrame:
-    """Exactly ``min(k, group size)`` rows per group, chosen by md5 rank.
+def stratified_sample(df: DataFrame, k: int) -> DataFrame:
+    """Exactly ``min(k, group size)`` rows per ``lang``, chosen by md5 rank.
 
-    Plan: one shuffle on ``group_col``; the rank predicate is a
+    Plan: one shuffle on ``lang``; the rank predicate is a
     ``row_number() <= k`` filter, which Catalyst rewrites to
     WindowGroupLimit (Spark 3.5+) — each map task keeps only its local
     top-k before the exchange, so the shuffle carries O(groups * k) rows,
@@ -31,7 +31,7 @@ def stratified_sample(df: DataFrame, group_col: str, k: int) -> DataFrame:
     runs, and partitionings; ``doc_id`` breaks md5 ties so the output is
     total-ordered even under (astronomically unlikely) digest collisions.
     """
-    w = Window.partitionBy(group_col).orderBy(
+    w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (

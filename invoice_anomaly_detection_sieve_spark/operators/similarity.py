@@ -9,7 +9,7 @@ Two paths over ``embeddings(vec_id, embedding array<float>, label)``:
   Arrow-vectorized kernel (one ``V @ Wᵀ`` matmul per batch over a
   deterministic, worker-cached weight matrix), candidates share a
   signature bucket; exact cosine only inside buckets. Recall is tunable
-  by bands/bits.
+  by the number of bands.
 """
 
 from __future__ import annotations
@@ -42,6 +42,18 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best neighbors of each query: highest ``cos_sim`` first,
+    ties to the lower ``neighbor_id``. Output: query_id, neighbor_id,
+    rank, cos_sim."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -63,16 +75,11 @@ def brute_force_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _topk(scored, k)
 
 
 @lru_cache(maxsize=32)
-def hyperplane_weights(dim: int, bits: int = 16) -> np.ndarray:
+def hyperplane_weights(dim: int, bits: int) -> np.ndarray:
     """Deterministic pseudo-random hyperplane matrix (bits × dim).
 
     w(b, i) = (sha256("7:{b}:{i}")[:8] % 1001) − 500 — integer,
@@ -90,7 +97,7 @@ def hyperplane_weights(dim: int, bits: int = 16) -> np.ndarray:
     return w
 
 
-def hyperplane_signature(vec: Column, dim: int, bits: int = 16) -> Column:
+def hyperplane_signature(vec: Column, dim: int, bits: int) -> Column:
     """Random-hyperplane LSH signature as a ``bits``-bit integer.
 
     One Arrow-vectorized pass: each batch of vectors becomes a (batch ×
@@ -131,12 +138,11 @@ def lsh_topk(
     queries: DataFrame,
     k: int = 5,
     dim: int = 64,
-    bits: int = 12,
     bands: int = 3,
     max_bucket: int | None = 100_000,
 ) -> DataFrame:
     """Bucketed ANN: exact cosine only among candidates sharing any of
-    ``bands`` signature bands. At corpus scale this replaces the cross
+    ``bands`` bands of a 12-bit hyperplane signature. At corpus scale this replaces the cross
     join with a shuffle on (band, band_signature).
 
     Only IDS travel through the band explode and bucket join — carrying
@@ -146,6 +152,8 @@ def lsh_topk(
     degenerate candidate buckets (templated/near-zero embeddings collapsing
     to one band pattern), the same hot-key guard as every other pair
     generator here."""
+    bits = 12
+
     def with_bands(df, prefix):
         sig = hyperplane_signature(F.col("embedding"), dim, bits)
         out = df.select(F.col("vec_id").alias(f"{prefix}_id"), sig.alias("_sig"))
@@ -170,12 +178,7 @@ def lsh_topk(
         .join(c_vecs, "neighbor_id")
         .withColumn("cos_sim", cosine(F.col("query_vec"), F.col("neighbor_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _topk(cand, k)
 
 
 def ivf_centroids(
@@ -280,12 +283,7 @@ def ivf_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _topk(cand, k)
 
 
 def cosine_near_duplicates(
@@ -293,8 +291,6 @@ def cosine_near_duplicates(
     threshold: float = 0.9,
     method: str = "lsh",
     dim: int = 64,
-    bits: int = 16,
-    bands: int = 4,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a_id < b_id, cos_sim ≥
@@ -305,13 +301,12 @@ def cosine_near_duplicates(
     - ``method="exact"``: all-pairs baseline — every (a, b) scored with
       the JVM-side ``cosine``. O(n²) by definition; the correctness
       oracle, and the path an exact-recall comparison must use.
-    - ``method="lsh"`` (the 100 TB path): banded random-hyperplane
-      signatures → band buckets paired by ``balance.bucket_pairs``
-      (the hot-bucket guard ``max_bucket``, shared with
+    - ``method="lsh"`` (the 100 TB path): 16-bit random-hyperplane
+      signatures in 4 bands of 4 bits → band buckets paired by
+      ``balance.bucket_pairs`` (the hot-bucket guard ``max_bucket``, shared with
       ``minhash_lsh_pairs``; ``None`` disables it) → exact cosine only on
       bucket-mates. Recall is probabilistic (1-(1-p^r)^b with
-      p = 1 - θ/π), tunable by bits/bands; pinned by a planted-pair
-      recall test.
+      p = 1 - θ/π, r = 4, b = 4); pinned by a planted-pair recall test.
 
     Output: a_id, b_id, cos_sim.
     """
@@ -321,10 +316,10 @@ def cosine_near_duplicates(
     if method == "exact":
         cand = a_vecs.crossJoin(b_vecs).where(F.col("a_id") < F.col("b_id"))
     elif method == "lsh":
-        sig = hyperplane_signature(F.col("_vec"), dim, bits)
+        sig = hyperplane_signature(F.col("_vec"), dim, 16)
         rows = e.select("_id", sig.alias("_sig")).where(F.col("_sig").isNotNull())
         pair_ids = bucket_pairs(
-            rows, bit_bands(F.col("_sig"), bits // bands, bands), "_id",
+            rows, bit_bands(F.col("_sig"), 4, 4),
             max_bucket=max_bucket, op="cosine_near_duplicates",
         ).dropDuplicates(["a_id", "b_id"])
         # vectors re-enter via two key joins (NOT carried through the band

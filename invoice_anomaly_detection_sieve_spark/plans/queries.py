@@ -35,8 +35,9 @@ def _r(col, n=6):
     return F.round(col, n)
 
 
-def _moment_stats_cents(df, group_col: str, val_col: str):
-    """Per-group n/mean/std via *exact integer-cents* sufficient statistics.
+def _moment_stats_cents(orders):
+    """Per-customer n/mean/std of ``o_totalprice`` via *exact
+    integer-cents* sufficient statistics.
 
     Cross-engine determinism demands it: float partial sums differ with
     aggregation order, and DuckDB contracts ``a − b·c`` into an FMA, so any
@@ -44,10 +45,10 @@ def _moment_stats_cents(df, group_col: str, val_col: str):
     n, Σx, Σx² are exact decimals; the only float ops left are divisions
     and sqrt (both correctly rounded IEEE → bit-identical everywhere).
     """
-    cents = F.round(F.col(val_col) * 100).cast("decimal(18,0)")
-    g = df.groupBy(group_col).agg(
+    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(18,0)")
+    g = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.count(F.col(val_col)).alias("n"),
+        F.count(F.col("o_totalprice")).alias("n"),
         F.sum(cents).alias("s1"),
         F.sum(cents * cents).alias("s2"),
     )
@@ -61,11 +62,11 @@ def _moment_stats_cents(df, group_col: str, val_col: str):
 
 
 _SQL_MOMENTS_CENTS = """
-  SELECT {group_col}, count(*) AS cnt, count({val_col}) AS n,
-         sum(CAST(round({val_col} * 100) AS DECIMAL(18,0))) AS s1,
-         sum(CAST(round({val_col} * 100) AS DECIMAL(18,0))
-             * CAST(round({val_col} * 100) AS DECIMAL(18,0))) AS s2
-  FROM {table} GROUP BY 1
+  SELECT o_custkey, count(*) AS cnt, count(o_totalprice) AS n,
+         sum(CAST(round(o_totalprice * 100) AS DECIMAL(18,0))) AS s1,
+         sum(CAST(round(o_totalprice * 100) AS DECIMAL(18,0))
+             * CAST(round(o_totalprice * 100) AS DECIMAL(18,0))) AS s2
+  FROM orders GROUP BY 1
 """
 
 _SQL_MEAN = "CAST(s1 AS DOUBLE) / n / 100.0"
@@ -242,7 +243,7 @@ def q_zscore_outliers(spark, sf_dir):
     """J5+M5 (app/anomaly.py:72-86): broadcast baseline join + z-score with
     the degenerate-std fallback and the 2.5 outlier cut."""
     o = _t(spark, sf_dir, "orders")
-    g, mean, std = _moment_stats_cents(o, "o_custkey", "o_totalprice")
+    g, mean, std = _moment_stats_cents(o)
     baseline = g.select(
         "o_custkey",
         mean.alias("bl_mean"),
@@ -256,7 +257,7 @@ def q_zscore_outliers(spark, sf_dir):
 
 SQL_ZSCORE_OUTLIERS = f"""
 WITH g AS (
-{_SQL_MOMENTS_CENTS.format(group_col="o_custkey", val_col="o_totalprice", table="orders")}
+{_SQL_MOMENTS_CENTS}
 ), bl AS (
   SELECT o_custkey, n, {_SQL_MEAN} AS m, {_SQL_STD} AS s
   FROM g
@@ -286,7 +287,7 @@ def q_profile_baselines(spark, sf_dir):
     nondeterminism would otherwise flip rounded cents between runs.
     """
     o = _t(spark, sf_dir, "orders")
-    g, mean, std = _moment_stats_cents(o, "o_custkey", "o_totalprice")
+    g, mean, std = _moment_stats_cents(o)
     # exact decimal sums make the double-typed mean/std bit-identical across
     # engines; no rounding needed (rounding at a half-boundary is the one
     # thing the engines disagree on)
@@ -302,7 +303,7 @@ def q_profile_baselines(spark, sf_dir):
 
 SQL_PROFILE_BASELINES = f"""
 WITH g AS (
-{_SQL_MOMENTS_CENTS.format(group_col="o_custkey", val_col="o_totalprice", table="orders")}
+{_SQL_MOMENTS_CENTS}
 )
 SELECT o_custkey, cnt,
        (cnt - n) * 1.0 / cnt AS null_rate,
@@ -674,7 +675,7 @@ def q_dedup_exact(spark, sf_dir):
     from ..operators import dedup
 
     d = _t(spark, sf_dir, "documents")
-    return dedup.exact_duplicates(d, "text", "doc_id")
+    return dedup.exact_duplicates(d)
 
 
 SQL_DEDUP_EXACT = """
@@ -992,9 +993,7 @@ def q_near_dups_verified(spark, sf_dir):
     # max_bucket=None: the oracle computes EXACT recall, so the hot-bucket
     # guard must be off or dropped buckets make Spark a strict subset of
     # the oracle on duplicate-heavy corpora (round-3 ADVICE, medium).
-    out = dedup.near_duplicates(
-        d, threshold=0.7, num_hashes=16, bands=16, max_bucket=None
-    )
+    out = dedup.near_duplicates(d, threshold=0.7, bands=16, max_bucket=None)
     return out.select("a_id", "b_id", _r(F.col("jaccard"), 6).alias("jaccard_r"))
 
 
@@ -1056,7 +1055,7 @@ def q_simhash_verified(spark, sf_dir):
     cand = dedup.simhash_near_duplicates(corpus, max_hamming=3, max_bucket=None)
     grams = corpus.select(
         F.col("doc_id").alias("_gid"),
-        F.array_sort(N.char_ngram_set(N.desc_norm(F.col("text")), 3)).alias("_g"),
+        F.array_sort(N.char_ngram_set(N.desc_norm(F.col("text")))).alias("_g"),
     )
     a = grams.select(F.col("_gid").alias("a_id"), F.col("_g").alias("a_g"))
     b = grams.select(F.col("_gid").alias("b_id"), F.col("_g").alias("b_g"))
@@ -1091,7 +1090,7 @@ def q_minhash_lsh(spark, sf_dir):
     from ..operators import dedup
 
     d = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(d, "text", "doc_id")
+    return dedup.minhash_lsh_pairs(d)
 
 
 def q_simhash(spark, sf_dir):
@@ -1099,7 +1098,7 @@ def q_simhash(spark, sf_dir):
     from ..operators import dedup
 
     d = _t(spark, sf_dir, "documents")
-    return dedup.with_simhash(d, "text", "simhash").select("doc_id", "simhash")
+    return dedup.with_simhash(d).select("doc_id", "simhash")
 
 
 def q_psi_drift(spark, sf_dir):
@@ -1131,7 +1130,7 @@ def q_psi_drift(spark, sf_dir):
     )
     baseline = base.select("part", edges.alias("deciles"))
     current = e.where(F.col("doc_id") % 2 == 0)
-    out = drift.psi(current, baseline, "total")
+    out = drift.psi(current, baseline)
     return out.select("part", _r(F.col("psi"), 6).alias("psi_r"), "psi_fail")
 
 
@@ -1247,7 +1246,7 @@ def q_ks_drift(spark, sf_dir):
     )
     cur = e.where(F.col("event_id") % 2 == 0)
     base = e.where(F.col("event_id") % 2 == 1)
-    return drift.ks_2samp(cur, base, "total")
+    return drift.ks_2samp(cur, base)
 
 
 SQL_KS_DRIFT = """
@@ -1298,9 +1297,7 @@ def q_dedup_clusters(spark, sf_dir):
     from ..operators import dedup
 
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.near_duplicates(
-        d, threshold=0.7, num_hashes=16, bands=16, max_bucket=None
-    )
+    pairs = dedup.near_duplicates(d, threshold=0.7, bands=16, max_bucket=None)
     return dedup.duplicate_clusters(pairs)
 
 
@@ -1344,7 +1341,7 @@ def q_sample_stratified(spark, sf_dir):
     from ..operators import sampling
 
     d = _t(spark, sf_dir, "documents")
-    return sampling.stratified_sample(d, "lang", 20).select("doc_id", "lang")
+    return sampling.stratified_sample(d, 20).select("doc_id", "lang")
 
 
 SQL_SAMPLE_STRATIFIED = """
@@ -1527,7 +1524,7 @@ def q_mm_image_decode_verified(spark, sf_dir):
     ids = _t(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 3 == 0
     )
-    feats = M.extract_media_features(M.synth_verification_media(ids), dim=64)
+    feats = M.extract_media_features(M.synth_verification_media(ids))
     return feats.select(
         "media_key", F.posexplode("feat").alias("band", "v")
     ).select(
@@ -1559,7 +1556,7 @@ def q_mm_frame_sampling(spark, sf_dir):
     ids = _t(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 3 == 2
     )
-    frames = M.sample_frames(M.synth_verification_media(ids), every_ms=1000)
+    frames = M.sample_frames(M.synth_verification_media(ids))
     return frames.select("media_key", "frame_idx")
 
 

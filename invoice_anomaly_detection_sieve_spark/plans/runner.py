@@ -198,22 +198,17 @@ def run(
     run_id: str | None = None,
     config: V.ValidationConfig | None = None,
     baseline_profiles: DataFrame | None = None,
-    configs: DataFrame | None = None,
     run_ts: str | None = None,
     consumed_snapshot_id: int | None = None,
 ) -> dict:
     """Execute (or resume) a validation run; write all outputs through the
-    catalog. ``configs`` (S12) overrides decision thresholds from data;
-    HOLD/REVIEW verdicts open cases with an SLA (D4), stamped ``run_ts``
-    (``yyyy-MM-dd HH:mm:ss``, UTC; default: the run's start). Returns run
-    metrics."""
+    catalog. Thresholds read from a configs table (S12) arrive as
+    ``config=apply_config_table(cfg, configs)``. HOLD/REVIEW verdicts open
+    cases with an SLA (D4), stamped ``run_ts`` (``yyyy-MM-dd HH:mm:ss``,
+    UTC; default: the run's start). Returns run metrics."""
     run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
     run_ts = run_ts or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     cfg = config or V.ValidationConfig()
-    if configs is not None:
-        from ..sources.configs import apply_config_table
-
-        cfg = apply_config_table(cfg, configs)
 
     done = completed_parts(catalog, run_id)
     pending = documents

@@ -64,7 +64,7 @@ def heuristic_labels() -> F.Column:
     return F.coalesce(same_inv | same_pdf | near, F.lit(False)).cast("int")
 
 
-def training_matrix(docs: DataFrame, cap: int = 200) -> DataFrame:
+def training_matrix(docs: DataFrame) -> DataFrame:
     """Labeled feature rows for unordered within-partition pairs.
 
     Docs without line items are excluded up front — the reference's
@@ -73,7 +73,7 @@ def training_matrix(docs: DataFrame, cap: int = 200) -> DataFrame:
     pairing is equivalent and cheaper than filtering the pair set.
     """
     with_lines = docs.where(F.size("lines") > 0)
-    pair_ids = blocking.training_pairs(with_lines, cap=cap)
+    pair_ids = blocking.training_pairs(with_lines)
     scored = pairs.score_pairs(with_lines, pair_ids)
     return scored.select(
         "a_doc_id", "b_doc_id",
@@ -112,14 +112,14 @@ def fit_logistic(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
     return w_raw, b_raw
 
 
-def train_duplicate_model(docs: DataFrame, cap: int = 200) -> dict:
+def train_duplicate_model(docs: DataFrame) -> dict:
     """End-to-end M6: returns {'weights': {name: w}, 'bias': b, 'auc': x}.
 
     Feature generation is fully distributed; only the (bounded) labeled
     matrix, at most 200,000 pairs, is collected for the dense fit, like the
     reference's driver-side sklearn fit.
     """
-    mat = training_matrix(docs, cap=cap).limit(200_000)
+    mat = training_matrix(docs).limit(200_000)
     pdf = mat.select(*FEATURE_ORDER, "label").toPandas()
     if pdf["label"].nunique() < 2:
         raise ValueError("training data has a single class; widen the corpus")

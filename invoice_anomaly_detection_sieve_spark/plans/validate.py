@@ -16,6 +16,7 @@ and dedup per app/main.py:326-327).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,15 +25,18 @@ from ..documents import LINE_ARRAYS, extract_docs
 from ..functions import scoring as S
 from ..functions.exprcache import cached_exprs
 from ..operators import blocking, drift, pairs, profile, registry, rowchecks
+from .train import train_baselines
 
 
 @dataclass
 class ValidationConfig:
     hold_threshold: float = S.DEFAULT_HOLD_THRESHOLD  # T_hold, app/config.py:33
     review_threshold: float = S.DEFAULT_REVIEW_THRESHOLD  # T_review, app/config.py:34
-    candidate_cap: int = blocking.DEFAULT_CAP
-    top_k: int = 3
-    max_key_fanout: int | None = 2000
+    # the same in every run: class constants, read through the config by
+    # doc_verdicts_from_docs and perfbench/layers.py
+    candidate_cap: ClassVar[int] = blocking.DEFAULT_CAP
+    top_k: ClassVar[int] = 3
+    max_key_fanout: ClassVar[int] = 2000
     dq_as_of: str | None = None  # pin "today" for deterministic DQ date checks
     enable_dq: bool = True
     # trained duplicate model ({"weights": {...}, "bias": b}, the
@@ -42,7 +46,7 @@ class ValidationConfig:
     dup_model: dict | None = None
     # kept only because perfbench/layers.py passes it to score_pairs, which
     # accepts "per_pair" alone
-    pair_payload_mode: str = "per_pair"
+    pair_payload_mode: ClassVar[str] = "per_pair"
     # numeric fields to drift-check per partition. "total" is always
     # validated (it drives anom_prob / risk fusion, the reference's
     # semantics); EXTRA fields get per-field baseline z-scores against
@@ -113,10 +117,7 @@ def _extra_field_baselines(
                 f"{sorted(missing)}; run train_baselines(fields=...) including them"
             )
     else:
-        src = None
-        for f in extra_fields:
-            p = profile.profile(docs, f)
-            src = p if src is None else src.unionByName(p)
+        src = train_baselines(docs, extra_fields)
     slim = src.select("part", "field", "mean", "std", F.col("sample_count").alias("n"))
     wide = slim.groupBy("part").pivot("field", list(extra_fields)).agg(
         F.first("mean").alias("mean"),
@@ -401,7 +402,7 @@ def run_validation(
     ben_src = (
         profiles
         if baseline_profiles is None
-        else profile.digit_histogram(docs, "total")
+        else profile.digit_histogram(docs)
     )
     benford = drift.benford_stats(ben_src)
     return {

@@ -6,14 +6,14 @@ batch sieve's exact-dup sieve applied to an unbounded arrival stream):
 
 - ``streaming_exact_dedup``: first-seen filter keyed on content hash via
   ``applyInPandasWithState`` — the custom-stateful-operator surface.
-  State per key is one small struct (first_seen_ts, n_seen); scale is
-  governed by distinct-content cardinality, and the processing-time TTL
-  bounds it for unbounded streams (an expired key readmits its next
-  occurrence — the standard at-most-window dedup contract, identical to
-  ``dropDuplicatesWithinWatermark``'s but with an observable dup count).
-- ``windowed_event_rollup``: watermarked tumbling-window aggregation over
-  the events stream — the late-data-tolerant rollup (counts + value sum
-  per event_type per window) a monitoring pipeline sits on.
+  State per key is one small struct (n_seen) and never expires, so
+  scale is governed by distinct-content cardinality and a repeat is a
+  'dup' however late it arrives (unlike
+  ``dropDuplicatesWithinWatermark``, with an observable dup count).
+- ``windowed_event_rollup``: watermarked 10-minute tumbling-window
+  aggregation over the events stream — the late-data-tolerant rollup
+  (counts + value sum per event_type per window) a monitoring pipeline
+  sits on.
 
 Both are expressed on the streaming DataFrame API so Spark's incremental
 planner maintains state in the state store (RocksDB on a real cluster),
@@ -54,10 +54,6 @@ DEDUP_STATE = StructType([StructField("n_seen", LongType())])
 def _dedup_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # TTL expiry: drop the key's state; its next occurrence readmits
-        state.remove()
-        return
     (n_seen,) = state.get if state.exists else (0,)
     # one key's micro-batch rows can arrive as SEVERAL Arrow chunks in
     # arbitrary order (maxRecordsPerBatch); a per-chunk sort cannot order
@@ -85,7 +81,7 @@ def _dedup_fn(
     state.update((n_seen,))
 
 
-def streaming_exact_dedup(docs: DataFrame, ttl_ms: int | None = 24 * 3600 * 1000) -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """Annotate a streaming corpus (doc_id, text, ts) with first/dup per
     content hash of ``text``.
 
@@ -93,38 +89,21 @@ def streaming_exact_dedup(docs: DataFrame, ttl_ms: int | None = 24 * 3600 * 1000
     and the running occurrence count — filter ``is_first = 'first'`` for
     the dedup'd stream, or aggregate the 'dup' side for duplicate-rate
     monitoring. One shuffle on the content hash; state is one struct per
-    distinct hash, TTL-bounded.
+    distinct hash.
     """
     hashed = docs.select(F.sha2(F.col("text"), 256).alias("content_hash"), "doc_id", "ts")
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        yield from _dedup_fn(key, pdfs, state)
-        # set after the update: a removed (timed-out) state must not be
-        # re-armed, and the duration re-arms on every batch the key appears
-        if ttl_ms is not None and state.exists:
-            state.setTimeoutDuration(ttl_ms)
-
     return hashed.groupBy("content_hash").applyInPandasWithState(
-        fn, DEDUP_OUTPUT, DEDUP_STATE, "append", timeout
+        _dedup_fn, DEDUP_OUTPUT, DEDUP_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
 
-def windowed_event_rollup(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Late-tolerant per-type rollup: count + value sum per tumbling
-    window. Watermark closes windows ``watermark`` past max event time;
-    later-than-watermark events are dropped (the documented bound)."""
+def windowed_event_rollup(events: DataFrame) -> DataFrame:
+    """Late-tolerant per-type rollup: count + value sum per 10-minute
+    tumbling window. The watermark closes a window 5 minutes past the max
+    event time; later events are dropped (the documented bound)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        events.withWatermark("ts", "5 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("value_sum"),

@@ -60,21 +60,21 @@ def test_keep_canonical_drops_non_canonical_only(spark):
 def test_stratified_sample_exact_k_and_partitioning_invariance(spark):
     rows = [(i, ["en", "de", "fr"][i % 3]) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    s1 = sampling.stratified_sample(df, "lang", 7)
+    s1 = sampling.stratified_sample(df, 7)
     assert s1.groupBy("lang").count().rdd.map(lambda r: r["count"]).collect() == [7, 7, 7]
     # identical row set under a different physical layout
-    s2 = sampling.stratified_sample(df.repartition(13, "doc_id"), "lang", 7)
+    s2 = sampling.stratified_sample(df.repartition(13, "doc_id"), 7)
     assert sorted(r["doc_id"] for r in s1.collect()) == sorted(
         r["doc_id"] for r in s2.collect()
     )
     # k above group size returns the whole group
     tiny = spark.createDataFrame([(1, "en"), (2, "en")], "doc_id long, lang string")
-    assert sampling.stratified_sample(tiny, "lang", 10).count() == 2
+    assert sampling.stratified_sample(tiny, 10).count() == 2
 
 
 def test_stratified_sample_matches_python_md5_rank(spark):
     df = spark.createDataFrame([(i, "en") for i in range(50)], "doc_id long, lang string")
-    got = sorted(r["doc_id"] for r in sampling.stratified_sample(df, "lang", 5).collect())
+    got = sorted(r["doc_id"] for r in sampling.stratified_sample(df, 5).collect())
     want = sorted(
         sorted(range(50), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:5]
     )
@@ -167,7 +167,7 @@ def test_lsh_config_validation():
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="bands must divide num_hashes"):
-        dedup.minhash_lsh_pairs(None, num_hashes=16, bands=5)
+        dedup.minhash_lsh_pairs(None, bands=5)
     with _pytest.raises(ValueError, match="max_hamming <= 31"):
         dedup.simhash_near_duplicates(None, max_hamming=40)
 

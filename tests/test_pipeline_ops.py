@@ -114,7 +114,7 @@ def test_lsh_topk_recall(spark):
         "vec_id long, embedding array<float>",
     )
     queries = df.where(F.col("vec_id") == 0)
-    out = similarity.lsh_topk(df, queries, k=3, dim=16, bits=12, bands=4)
+    out = similarity.lsh_topk(df, queries, k=3, dim=16, bands=4)
     neigh = {r["neighbor_id"] for r in out.collect()}
     assert 1 in neigh and 2 in neigh  # planted near-identical vectors found
 
@@ -165,7 +165,7 @@ def test_cosine_near_duplicates_exact_and_lsh(spark):
     lsh = {
         (r["a_id"], r["b_id"])
         for r in similarity.cosine_near_duplicates(
-            df, threshold=0.9, method="lsh", dim=16, bits=16, bands=4
+            df, threshold=0.9, method="lsh", dim=16
         ).collect()
     }
     assert lsh == exact  # exact cosine filters any extra candidates
@@ -343,8 +343,8 @@ def test_decode_y4m_real_video_frames(spark):
         ("vid-bad", "video", bytearray(b"not a y4m"), None),
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    # every_ms=1000 at 2 fps -> every 2nd frame: indices 0 and 2
-    got = multimodal.sample_frames(media, every_ms=1000).collect()
+    # one frame per second at 2 fps -> every 2nd frame: indices 0 and 2
+    got = multimodal.sample_frames(media).collect()
     by = {(r["media_key"], r["frame_idx"]): r["frame_sha256"] for r in got}
     assert set(by) == {("vid-ok", 0), ("vid-ok", 2)}
     import hashlib as _hl
@@ -417,9 +417,7 @@ def test_image_decode_feature_pixels_exact(spark):
     block-mean feature recovers its source pixel exactly through the
     float32 path (equal channels ⇒ exact grayscale)."""
     ids = spark.createDataFrame([(i * 3,) for i in range(6)], "doc_id long")
-    feats = multimodal.extract_media_features(
-        multimodal.synth_verification_media(ids), dim=64
-    )
+    feats = multimodal.extract_media_features(multimodal.synth_verification_media(ids))
     for r in feats.collect():
         i = int(r["media_key"])
         assert r["decode_ok"]
@@ -432,9 +430,7 @@ def test_frame_sampling_matches_stream_timing(spark):
     i % fps == 0, i < n_frames — the stream's own header timing, which is
     what the mm_frame_sampling oracle recomputes."""
     ids = spark.createDataFrame([(i,) for i in range(2, 26, 3)], "doc_id long")
-    out = multimodal.sample_frames(
-        multimodal.synth_verification_media(ids), every_ms=1000
-    ).collect()
+    out = multimodal.sample_frames(multimodal.synth_verification_media(ids)).collect()
     got = sorted((r["media_key"], r["frame_idx"]) for r in out)
     expected = sorted(
         (str(i), k)

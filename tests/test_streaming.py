@@ -154,7 +154,7 @@ def test_streaming_exact_dedup_state_survives_restart(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
-            D.streaming_exact_dedup(stream, ttl_ms=None)
+            D.streaming_exact_dedup(stream)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -195,7 +195,7 @@ def test_windowed_event_rollup(spark, tmp_path):
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
     q = (
-        D.windowed_event_rollup(stream, window="10 minutes", watermark="5 minutes")
+        D.windowed_event_rollup(stream)
         .writeStream.format("memory")
         .queryName("rollup")
         .outputMode("update")
@@ -234,7 +234,7 @@ def test_streaming_dedup_first_spans_arrow_chunks(spark, tmp_path):
     try:
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
-            D.streaming_exact_dedup(stream, ttl_ms=None)
+            D.streaming_exact_dedup(stream)
             .writeStream.format("memory")
             .queryName("chunked_dedup")
             .outputMode("append")
@@ -283,7 +283,7 @@ def test_streaming_dedup_matches_duckdb_first_arrival(spark, tmp_path):
         rows = [e[:3] for e in events if e[3] == batch]
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
         q = (
-            D.streaming_exact_dedup(spark.readStream.schema(schema).parquet(src), ttl_ms=None)
+            D.streaming_exact_dedup(spark.readStream.schema(schema).parquet(src))
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -314,31 +314,3 @@ def test_streaming_dedup_matches_duckdb_first_arrival(spark, tmp_path):
     first_ts = {h: t for h, _, t, tag, _ in want if tag == "first"}
     assert any(t < first_ts[h] for h, _, t, tag, _ in want if tag == "dup")
 
-
-def test_batch_registry_update_merges_seen_times(spark):
-    """update_registry, the batch form of the registry upsert: observed keys
-    widen [first_seen, last_seen] to cover their observation dates, new
-    keys enter with both set to their first and last observation, keys not
-    observed and null refs change nothing."""
-    from invoice_anomaly_detection_sieve_spark.operators.registry import update_registry
-
-    t0 = dt.datetime(2024, 1, 10)
-    reg = spark.createDataFrame(
-        [("K1", t0, t0), ("K3", t0, t0 + dt.timedelta(days=1))],
-        "media_key string, first_seen timestamp, last_seen timestamp",
-    )
-    docs = spark.createDataFrame(
-        [
-            (["K1", "K2", None], dt.date(2024, 1, 5)),
-            (["K1"], dt.date(2024, 1, 20)),
-            (["K2"], dt.date(2024, 1, 7)),
-        ],
-        "media_refs array<string>, date date",
-    )
-    got = {r["media_key"]: (r["first_seen"], r["last_seen"])
-           for r in update_registry(reg, docs).collect()}
-    assert got == {
-        "K1": (dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 20)),
-        "K2": (dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 7)),
-        "K3": (t0, t0 + dt.timedelta(days=1)),
-    }

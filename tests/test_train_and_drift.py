@@ -32,7 +32,7 @@ def test_psi_detects_shift(spark, docs):
     shifted = docs.withColumn(
         "total", F.when(F.col("part") == "P1", F.col("total") * 3.0).otherwise(F.col("total"))
     )
-    out = {r["part"]: r.asDict() for r in drift.psi(shifted, baseline, "total").collect()}
+    out = {r["part"]: r.asDict() for r in drift.psi(shifted, baseline).collect()}
     assert out["P1"]["psi"] > drift.PSI_ALERT and out["P1"]["psi_fail"]
     # unshifted partition against its own deciles: tiny PSI
     assert out["P0"]["psi"] < 0.1
@@ -43,7 +43,7 @@ def test_ks_detects_shift(spark, docs):
     cur = docs.withColumn(
         "total", F.when(F.col("part") == "P2", F.col("total") + 500.0).otherwise(F.col("total"))
     )
-    out = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base, "total").collect()}
+    out = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base).collect()}
     assert out["P2"]["ks_stat"] > 0.9  # disjoint shifted distribution
     assert out["P0"]["ks_stat"] == 0.0  # identical samples
     assert out["P2"]["n_current"] == out["P2"]["n_baseline"]
@@ -71,8 +71,8 @@ def test_ks_windowed_matches_pandas_reference(spark):
         rows += [(part, float(v), "b") for v in base_v]
     df = spark.createDataFrame(rows, "part string, total double, src string")
     cur, base = df.where("src = 'c'"), df.where("src = 'b'")
-    got = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base, "total").collect()}
-    want = {r["part"]: r.asDict() for r in drift.ks_2samp_pandas(cur, base, "total").collect()}
+    got = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base).collect()}
+    want = {r["part"]: r.asDict() for r in drift.ks_2samp_pandas(cur, base).collect()}
     assert set(got) == set(want)
     for part in want:
         assert got[part]["n_current"] == want[part]["n_current"]
@@ -85,13 +85,13 @@ def test_ks_empty_side_is_nan(spark):
 
     cur = spark.createDataFrame([("P0", 1.0), ("P1", 2.0)], "part string, total double")
     base = spark.createDataFrame([("P0", 1.5)], "part string, total double")
-    out = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base, "total").collect()}
+    out = {r["part"]: r.asDict() for r in drift.ks_2samp(cur, base).collect()}
     assert _math.isnan(out["P1"]["ks_stat"]) and out["P1"]["n_baseline"] == 0
     assert out["P0"]["ks_stat"] == 1.0
 
 
 def test_train_duplicate_model(spark, docs):
-    model = train.train_duplicate_model(docs, cap=50)
+    model = train.train_duplicate_model(docs)
     assert model["n_pairs"] > 100
     assert 0 < model["n_pos"] < model["n_pairs"]
     # the heuristic labels are learnable: in-sample AUC far above chance
@@ -246,7 +246,7 @@ def test_stored_baseline_benford_tests_current_data(spark, docs):
     )
     # run_validation re-extracts from raw documents; here docs are already
     # extracted, so drive the same pieces run_validation wires together:
-    cur_hist = profile.digit_histogram(bad_now, "total")
+    cur_hist = profile.digit_histogram(bad_now)
     ben = {r["part"]: r["benford_fail"] for r in drift.benford_stats(cur_hist).collect()}
     assert ben["P1"] is True  # current data fails...
     base_ben = {r["part"]: r["benford_fail"]
@@ -285,7 +285,7 @@ def test_psi_flags_novel_partition(spark):
     current = base_docs.union(
         spark.createDataFrame([("NEW", 5.0), ("NEW", 7.0)], "part string, total double")
     )
-    out = {r["part"]: r.asDict() for r in drift.psi(current, baseline, "total").collect()}
+    out = {r["part"]: r.asDict() for r in drift.psi(current, baseline).collect()}
     assert set(out) == {"P0", "NEW"}
     assert out["NEW"]["psi"] is None and out["NEW"]["psi_fail"] is True
     assert out["P0"]["psi_fail"] is False
@@ -299,7 +299,7 @@ def test_trained_weights_reach_the_scoring_pipeline(spark, docs, tmp_path):
     from invoice_anomaly_detection_sieve_spark.operators import blocking, pairs
     from invoice_anomaly_detection_sieve_spark.plans import validate as V
 
-    model = train.train_duplicate_model(docs, cap=50)
+    model = train.train_duplicate_model(docs)
     path = str(tmp_path / "dup_model.json")
     train.save_duplicate_model(model, path)
     loaded = train.load_duplicate_model(path)
